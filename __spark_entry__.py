@@ -6,16 +6,19 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 value-hash -> CORRECTNESS_r{N}.json).
 
 All implementations live in ``economic_data_project_spark``; this module is
-a thin adapter over its query registry.
+a thin adapter over its query registry. The one policy it owns is the ROW
+ORDER of both dicts, a rotation over the driver's bounded prefix
+(:func:`_priority_order`).
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 import glob
 import json
+import math
 import os
-import re
 import subprocess
 import sys
 from collections.abc import Callable
@@ -28,265 +31,62 @@ sys.path.insert(0, _HERE)
 from economic_data_project_spark import registry  # noqa: E402
 from economic_data_project_spark.session import tune_session  # noqa: E402
 
-_PKG = "economic_data_project_spark"
+#: rows of ``queries()`` the driver re-verifies per round
+PREFIX_ROWS = 50
+#: max rounds a row's newest driver evidence may trail the newest record
+MAX_ROW_AGE_ROUNDS = 4
 
 
 def _git(*args: str) -> str:
     try:
-        res = subprocess.run(
-            ["git", *args],
-            cwd=_HERE,
-            capture_output=True,
-            text=True,
-            timeout=15,
-        )
+        res = subprocess.run(["git", *args], cwd=_HERE, capture_output=True,
+                             text=True, timeout=15)
         return res.stdout if res.returncode == 0 else ""
     except Exception:
         return ""
 
 
-def _module_files(mod_name: str) -> set[str]:
-    """Repo-relative file candidates for a dotted module name (plain
-    module or package __init__)."""
-    base = mod_name.replace(".", "/")
-    return {base + ".py", base + "/__init__.py"}
-
-
-def _deps_of(mod_name: str) -> set[str]:
-    """``mod_name`` plus every package module its SOURCE imports — a
-    static AST scan rather than runtime ``vars()`` introspection, so
-    plain-data imports (string constants like ``functions/vectors.py``'s
-    SQL fragments, lexicon dicts, …) register as dependencies too; those
-    have no ``__module__`` and are invisible to a runtime scan.
-
-    Direct imports only — callers needing the full reachable set go
-    through :func:`_transitive_deps` (a one-hop scan misses helpers
-    imported by helpers, e.g. a dialect function re-exported through a
-    package ``__init__``)."""
-    deps = {mod_name}
-    base = os.path.join(_HERE, mod_name.replace(".", "/"))
-    tree = None
-    is_pkg_init = False
-    for path, pkg in (
-        (base + ".py", False),
-        (os.path.join(base, "__init__.py"), True),
-    ):
+def _records() -> list[tuple[int, str, dict]]:
+    """(round, file name, {query: row}) of every parseable driver
+    record, ascending by round."""
+    out = []
+    for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
+        name = os.path.basename(path)
         try:
             with open(path) as fh:
-                tree = ast.parse(fh.read())
-            is_pkg_init = pkg
-            break
-        except (OSError, SyntaxError):
+                rows = json.load(fh)
+            out.append((int(name[len("CORRECTNESS_r"):-5]), name, rows))
+        except (OSError, ValueError):
             continue
-    if tree is None:
-        return deps
-    # relative-import anchor: a PACKAGE __init__ resolves level-1
-    # imports against the package ITSELF ('from .dialect import x' in
-    # functions/__init__.py -> ...functions.dialect), a plain module
-    # against its parent — stripping the last part unconditionally sent
-    # package re-exports one level too high, to nonexistent modules that
-    # never matched the staleness file set.
-    parts = mod_name.split(".")
-    pkg_parts = parts if is_pkg_init else parts[:-1]
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            for a in node.names:
-                if a.name.startswith(_PKG):
-                    deps.add(a.name)
-        elif isinstance(node, ast.ImportFrom):
-            if node.level:
-                base = pkg_parts[: len(pkg_parts) - (node.level - 1)]
-                mod = ".".join(
-                    base
-                    + (node.module.split(".") if node.module else [])
-                )
-            else:
-                mod = node.module or ""
-            if mod.startswith(_PKG):
-                deps.add(mod)
-                for a in node.names:
-                    # `from .functions import ta` imports a MODULE by
-                    # name; non-module names resolve to no file and
-                    # match nothing — harmless.
-                    deps.add(f"{mod}.{a.name}")
-    return deps
+    return sorted(out, key=lambda r: r[0])
 
 
-def _transitive_deps(mod_name: str, cache: dict[str, set[str]]) -> set[str]:
-    """Full reachable-module closure of :func:`_deps_of` (memoized BFS):
-    a change to a module reached indirectly must still flag the queries
-    whose modules import it one or more hops removed. Non-module names
-    that ``from x import y`` drags in resolve to no file and contribute
-    nothing, so the walk terminates on them.
-
-    ``registry`` is a traversal BARRIER: every query module imports it
-    for the ``@query`` decorator, but its own imports (``load_all()``)
-    point the OTHER way — at every operator module. Expanding through it
-    would make every module's closure the whole package and flag the
-    entire registry on any edit."""
-    barrier = f"{_PKG}.registry"
-    seen: set[str] = set()
-    stack = [mod_name]
-    while stack:
-        m = stack.pop()
-        if m in seen:
-            continue
-        seen.add(m)
-        if m == barrier or m.startswith(barrier + "."):
-            continue
-        direct = cache.get(m)
-        if direct is None:
-            direct = cache[m] = _deps_of(m)
-        stack.extend(direct - seen)
-    return seen
-
-
-def _record_rounds() -> list[tuple[int, str]]:
-    """(round, path) of every driver CORRECTNESS record, ascending."""
-    out: list[tuple[int, str]] = []
-    for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m:
-            out.append((int(m.group(1)), path))
-    return sorted(out)
-
-
-def _record_ref(rnd: int) -> str:
-    """Commit hash whose tree is closest to (at or before) the state the
-    driver verified in round ``rnd`` — the last commit touching that
-    round's CORRECTNESS file, falling back to the nearest OLDER tracked
-    record when the file is untracked (the driver writes each record
-    before the round's commit). An older fallback over-approximates the
-    diff, which only makes staleness detection more conservative."""
-    for rr, path in reversed(_record_rounds()):
-        if rr > rnd:
-            continue
-        ref = _git(
-            "log", "-n", "1", "--format=%H", "--", os.path.basename(path)
-        ).strip()
-        if ref:
-            return ref
-    return ""
-
-
-#: per-round changed-file memo — the staleness scan runs for BOTH tiers
-#: (transitive + direct) and for both queries() and oracle_sql(), and
-#: the git-diff + AST-parse pipeline is identical across those calls.
-#: Process-lifetime caching is safe: the driver loads this module fresh
-#: per run and the tree does not change mid-run.
-_ROUND_CHANGES: dict[int, set[str] | None] = {}
-
-
-def _changed_since_round(rnd: int) -> set[str] | None:
-    """Package files whose ABSTRACT SYNTAX changed since the commit
-    recording round ``rnd``; None = unknown tree (treat as all-stale).
-    Memoized (see _ROUND_CHANGES)."""
-    if rnd in _ROUND_CHANGES:
-        return _ROUND_CHANGES[rnd]
-    ref = _record_ref(rnd)
-    if not ref:
-        _ROUND_CHANGES[rnd] = None  # unknown tree -> treat as stale
-        return None
-    # only package modules can ever intersect a query's file set —
-    # pre-filtering spares a git-show + two AST parses per changed
-    # test/tool file.
-    pkg_py = lambda f: f.endswith(".py") and f.startswith(_PKG + "/")
-    diffed = {
-        f
-        for f in _git("diff", "--name-only", ref).splitlines()
-        if pkg_py(f)
-    }
-    # the record's own commit closes the same-round-edit hole: the
-    # driver verifies BEFORE the round's edits are committed, and
-    # record + edits land in ONE commit — so a package file that
-    # commit touched was NOT the verified code even though it no
-    # longer differs from the ref tree. Compare such files against
-    # the ref's PARENT (the newest tree that could have been
-    # verified); comment-only touch-ups still pass the AST check.
-    in_commit = {
-        f
-        for f in _git(
-            "show", "--name-only", "--format=", ref
-        ).splitlines()
-        if pkg_py(f)
-    }
-    changed = {
-        f
-        for f in diffed | in_commit
-        if _ast_changed(f, ref)
-        or (f in in_commit and _ast_changed(f, ref + "^"))
-    }
-    # registry.py is pure registration plumbing imported by every
-    # query module; counting it as a semantic dependency would flag
-    # the whole registry on any new-query addition and push
-    # genuinely-new queries out of the driver's bounded prefix.
-    changed.discard(f"{_PKG}/registry.py")
-    _ROUND_CHANGES[rnd] = changed
-    return changed
-
-
-def _stale_queries(checked=None, direct_only: bool = False) -> list[str]:
-    """Queries whose Spark code or oracle changed SINCE THEIR OWN last
-    green driver row — derived from ``git diff`` against the commit
-    recording that round, so the force-first list can never go stale (a
-    hand-edited list silently skipped re-verification of changed code).
-    A query counts as stale when its defining module, or any package
-    module reachable from that module's imports (e.g. ``functions/ta.py``
-    helpers shared by many oracles), differs from the tree at the commit
-    that recorded the query's newest green row. Diffing per last-green
-    round (not just against the newest record) catches code that changed
-    mid-round and was committed together with the record — the newest
-    record's commit already contains those edits, so a single-ref diff
-    would never flag them. "Green" here means driver-verified for
-    prioritization (:func:`_last_checked_round`): rows-only queries
-    count their recorded driver runs, so their code changes re-flag
-    them like everything else. ``checked``: optional pre-computed
-    :func:`_last_checked_round` map.
-
-    ``direct_only``: restrict the file set to the query's DEFINING
-    module (no transitive closure). This is the stronger staleness
-    tier: an edit to a hub module like caches.py flags the whole
-    registry transitively (zero discrimination — r10's edits left all
-    158 queries "stale"), while a defining-module edit is the precise
-    signal that THIS query's semantics may have moved. The priority
-    order ranks direct ahead of transitive within an age bucket so the
-    bounded driver prefix re-verifies the actually-edited builders
-    first (VERDICT r10 'Next round' #3)."""
-    last = _last_checked_round() if checked is None else checked
-    diffs = {rnd: _changed_since_round(rnd) for rnd in set(last.values())}
-    out: list[str] = []
-    direct_cache: dict[str, set[str]] = {}
-    files_cache: dict[str, set[str]] = {}
-    for name, fn in registry.all_queries().items():
-        if name not in last:
-            continue  # never green -> already in the fresh bucket
-        changed = diffs[last[name]]
-        mod = fn.__module__
-        key = (mod, direct_only)
-        if key not in files_cache:
-            if direct_only:
-                files_cache[key] = set(_module_files(mod))
-            else:
-                files: set[str] = set()
-                for d in _transitive_deps(mod, direct_cache):
-                    files |= _module_files(d)
-                files_cache[key] = files
-        if changed is None or files_cache[key] & changed:
-            out.append(name)
-    return out
+def _last_checked_round(records=None) -> dict[str, int]:
+    """Newest round in which the driver verified each query: a full
+    rows+schema+hash green or, for a query with no oracle in the CURRENT
+    registry, a rows-only run that returned a row count (so rows-only
+    queries age like the rest instead of staying never-verified)."""
+    no_oracle = set(registry.all_queries()) - set(registry.all_oracles())
+    last: dict[str, int] = {}
+    for rnd, _file, rows in _records() if records is None else records:
+        for name, row in rows.items():
+            if not isinstance(row, dict):
+                continue
+            green = (row.get("rows_match") and row.get("schema_match")
+                     and row.get("hash_match"))
+            rows_only = (name in no_oracle and row.get("err") == "no_oracle"
+                         and row.get("spark_rows") is not None)
+            if green or rows_only:
+                last[name] = max(last.get(name, 0), rnd)
+    return last
 
 
 def _ast_changed(path: str, ref: str) -> bool:
     """True when a file's ABSTRACT SYNTAX differs from the tree at
-    ``ref`` — comment/whitespace-only edits (which git diff flags) parse
-    to identical ASTs and re-verify nothing, so they must not consume
-    the driver's bounded prefix. One comment touch-up in a hub module
-    like catalog.py would otherwise flag all 130+ queries and push the
-    round's genuinely-changed queries out of the verified window.
-    Fail-stale on any read/parse trouble (deleted file, syntax error in
-    an old tree): over-verifying is safe, under-verifying is not."""
-    import ast
-
+    ``ref``: comment/whitespace-only edits re-verify nothing, so they
+    must not consume the driver's bounded prefix. Fail-stale on any
+    read/parse trouble (deleted file, syntax error in an old tree):
+    over-verifying is safe, under-verifying is not."""
     try:
         old = _git("show", f"{ref}:{path}")
         with open(os.path.join(_HERE, path)) as fh:
@@ -298,107 +98,77 @@ def _ast_changed(path: str, ref: str) -> bool:
         return True
 
 
-def _iter_records():
-    """Yield (round, {name: row}) for every parseable driver record."""
-    for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        yield rnd, rows
+def _pkg_files(git_out: str) -> set[str]:
+    return {f for f in git_out.splitlines()
+            if f.endswith(".py") and f.startswith(registry.__package__ + "/")}
 
 
-def _last_pass_round(records=None) -> dict[str, int]:
-    """Newest round number in which each query passed all three driver
-    checks (rows+schema+hash). ``records``: optional pre-materialized
-    ``_iter_records()`` output so one prioritization pass parses the
-    record files once instead of once per helper."""
-    last: dict[str, int] = {}
-    for rnd, rows in _iter_records() if records is None else records:
-        for name, row in rows.items():
-            if (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                last[name] = max(last.get(name, 0), rnd)
-    return last
+@functools.cache
+def _changed_since(rnd: int) -> set[str] | None:
+    """Package files whose abstract syntax changed since the tree the
+    driver verified in round ``rnd``; None = unknown tree (all stale).
+
+    The reference is the commit of the newest TRACKED record at or
+    before ``rnd`` (an older fallback widens the diff, never narrows
+    it). Record and edits of a round land in one commit, so the files
+    that commit touched are also compared against its parent."""
+    refs = (_git("log", "-n", "1", "--format=%H", "--", file).strip()
+            for rr, file, _rows in reversed(_records()) if rr <= rnd)
+    ref = next((r for r in refs if r), "")
+    if not ref:
+        return None
+    touched = _pkg_files(_git("show", "--name-only", "--format=", ref))
+    diffed = _pkg_files(_git("diff", "--name-only", ref))
+    return {f for f in diffed | touched
+            if _ast_changed(f, ref)
+            or (f in touched and _ast_changed(f, ref + "^"))}
 
 
-def _last_checked_round(records=None) -> dict[str, int]:
-    """Newest round whose record counts as driver-verified for
-    PRIORITIZATION: the full rows+schema+hash green for oracle-backed
-    queries, plus — for queries that have no oracle TODAY — any recorded
-    rows-only run (``err == "no_oracle"`` with a row count). A rows-only
-    query can never satisfy the three-way green, so without this it
-    sorts into the "fresh" bucket forever and consumes a prefix slot
-    every round (7 slots/round across r3-r5) while genuinely stale
-    queries wait for rotation. The no-oracle gate is evaluated against
-    the CURRENT registry so a query that since GAINED an oracle doesn't
-    coast on old rows-only records."""
-    records = list(_iter_records()) if records is None else records
-    last = _last_pass_round(records)
-    no_oracle = set(registry.all_queries()) - set(registry.all_oracles())
-    for rnd, rows in records:
-        for name, row in rows.items():
-            if (
-                name in no_oracle
-                and isinstance(row, dict)
-                and row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            ):
-                last[name] = max(last.get(name, 0), rnd)
-    return last
+def _direct_stale(last: dict[str, int]) -> set[str]:
+    """Verified queries whose DEFINING module changed since their own
+    newest driver round."""
+    out = set()
+    for name, fn in registry.all_queries().items():
+        if name in last:
+            changed = _changed_since(last[name])
+            base = fn.__module__.replace(".", "/")
+            files = {base + ".py", base + "/__init__.py"}
+            if changed is None or files & changed:
+                out.add(name)
+    return out
 
 
-def _priority_order(names: list[str]) -> list[str]:
-    """Never-driver-verified first, then every recorded query ordered by
-    green-row AGE (oldest last driver pass first), with stale (code
-    changed since the query's own last green row) ahead of unchanged
-    queries WITHIN the same round — so a driver that checks a bounded
-    prefix always spends its budget on queries with no green row yet,
-    then on the longest-unverified records. Age outranks staleness
-    across rounds on purpose: a round's own code edits re-flag
-    freshly-verified queries as stale, and letting those jump the queue
-    would starve a multi-round-old tail indefinitely (the r7 verdict's
-    top ask — 58 queries stuck on r03/r04 rows while each round's new
-    work consumed the 50-slot prefix). An unchanged query with an old
-    row still re-verifies — guarding against driver-environment drift —
-    but never before an equally-old changed one. Rows-only queries age
-    by their recorded driver runs (:func:`_last_checked_round`) — they
-    must not sit in the fresh bucket permanently.
+def _priority_order(names: list[str], last_round: dict[str, int],
+                    direct_stale: set[str], current_round: int) -> list[str]:
+    """Pure driver rotation over ``names``; registry order breaks ties.
 
-    Staleness is two-tier (VERDICT r10 #3): queries whose DEFINING
-    module changed since their row (direct) outrank queries flagged
-    only through the transitive import closure — a hub-module edit
-    (caches.py, catalog.py) marks the entire registry transitively
-    stale, which carries zero ranking information, while the round's
-    actually-edited builders are exactly the rows the judge needs
-    refreshed first.
+    1. rows that would exceed the age limit next round
+       (age >= ``MAX_ROW_AGE_ROUNDS``), oldest first;
+    2. never-verified rows;
+    3. direct-stale rows, oldest first, capped at a quota;
+    4. everything else, oldest first.
 
-    DIRECT staleness outranks age across rounds (VERDICT r11 #1): a
-    defining-module edit is a precise, bounded signal — the set only
-    contains builders someone actually changed, and it empties as
-    rows land — so taking it first cannot starve the tail the way
-    transitive flagging would (r10's hub edits marked 108/158 queries
-    transitively stale; its direct set was ~26). Without this, an
-    edited builder with a recent row (e.g. the r11-resized IVF, r10
-    row) waits behind every merely-older unchanged row and its edit
-    ships driver-unverified for multiple rounds. Transitive staleness
-    stays an in-bucket tiebreak only."""
-    last = _last_checked_round(list(_iter_records()))
-    force = set(_stale_queries(last))
-    direct = set(_stale_queries(last, True))
-    passed = set(last)
-    fresh = [n for n in names if n not in passed]
-    rest = [n for n in names if n in passed]
-    # stable sort: registry order breaks (tier, round) ties
-    rest.sort(key=lambda n: (n not in direct, last[n], n not in force))
-    return fresh + rest
+    Quota: oldest-first picks must cover the registry once every
+    ``MAX_ROW_AGE_ROUNDS + 1`` rounds, i.e. take ``ceil(len(names) /
+    (MAX_ROW_AGE_ROUNDS + 1))`` of the ``PREFIX_ROWS`` slots; edited
+    builders get the rest, so they can never starve the tail."""
+    cycle = math.ceil(len(names) / (MAX_ROW_AGE_ROUNDS + 1))
+    quota = max(0, PREFIX_ROWS - cycle)
+    checked = sorted((n for n in names if n in last_round), key=last_round.get)
+    due = [n for n in checked
+           if current_round - last_round[n] >= MAX_ROW_AGE_ROUNDS]
+    fresh = [n for n in names if n not in last_round]
+    stale = [n for n in checked if n in direct_stale and n not in due][:quota]
+    taken = set(due) | set(stale)
+    return due + fresh + stale + [n for n in checked if n not in taken]
+
+
+def _driver_order() -> list[str]:
+    records = _records()
+    last = _last_checked_round(records)
+    current = records[-1][0] if records else 0
+    stale = _direct_stale(last)
+    return _priority_order(list(registry.all_queries()), last, stale, current)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -419,12 +189,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return run
 
-    order = _priority_order(list(base))
-    return {name: _wrap(base[name]) for name in order}
+    return {name: _wrap(base[name]) for name in _driver_order()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL oracle per query (omitted = rows-only)."""
     oracles = registry.all_oracles()
-    order = _priority_order(list(registry.all_queries()))
-    return {name: oracles[name] for name in order if name in oracles}
+    return {name: oracles[name] for name in _driver_order() if name in oracles}

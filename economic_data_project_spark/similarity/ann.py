@@ -611,10 +611,11 @@ ORDER BY query_id, rank
 """
 
 
-# cosine of a corpus row against a Lloyd centroid row (bound columns:
-# embedding/vnorm from the corpus, centroid/cnorm from kmeans_once).
+# cosine of a corpus row against a Lloyd centroid row, as a template
+# over the centroid columns (embedding/vnorm from the corpus,
+# {centroid}/{cnorm} from kmeans_once) — see _scored_cents_expr.
 _COS_CENTROID = (
-    DOT_SPARK.format(a="embedding", b="centroid") + " / (vnorm * cnorm)"
+    DOT_SPARK.format(a="embedding", b="{centroid}") + " / (vnorm * {cnorm})"
 )
 
 
@@ -642,20 +643,15 @@ def ivf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _scored_cents_expr(
-    cent_cols: list, cos_expr: str, cluster_col: str
+    cent_cols: list, cos_tmpl: str, cluster_col: str
 ) -> str:
     """SQL for the per-vector (cosine, cluster) candidate array over a
-    packed ``__cents`` array-of-structs column: centroid column
-    references inside ``cos_expr`` are qualified to the lambda struct
-    (token replace on the known centroid column names — none of the
-    current cosine expressions shares a token with a corpus column)."""
-    import re
-
-    qualified = cos_expr
-    for c in cent_cols:
-        qualified = re.sub(rf"\b{re.escape(c)}\b", f"__s.{c}", qualified)
+    packed ``__cents`` array-of-structs column. ``cos_tmpl`` is a
+    DOT_SPARK-style template whose ``{<centroid column>}`` placeholders
+    are filled with the lambda struct's fields ``__s.<column>``."""
+    cos = cos_tmpl.format(**{c: f"__s.{c}" for c in cent_cols})
     return (
-        f"transform(__cents, __s -> struct(({qualified}) AS c,"
+        f"transform(__cents, __s -> struct(({cos}) AS c,"
         f" CAST(__s.{cluster_col} AS BIGINT) AS cluster))"
     )
 
@@ -669,19 +665,23 @@ def _pack_cents(cents: DataFrame) -> DataFrame:
     )
 
 
-# ordering used by every assignment surface: cosine DESC, cluster ASC.
-# Spark's binary comparisons on doubles are nan-safe (NaN compares
-# largest, NaN = NaN), matching the window orderBy semantics the fold
-# replaced.
+# the one ordering of every assignment surface, as a comparator over two
+# candidate structs {l} and {r} (-1 = {l} first): cosine DESC NULLS
+# LAST, then the smaller cluster — the order of the window the fold and
+# the probe sort replaced. Spark's double comparisons are NaN-safe (NaN
+# compares largest, NaN = NaN); NULL cosines (NULL or ragged embedding)
+# tie each other and fall to the cluster tie-break.
 _CENT_CMP = (
-    "(l, r) -> CASE WHEN l.c > r.c THEN -1 WHEN r.c > l.c THEN 1"
-    " WHEN l.cluster < r.cluster THEN -1"
-    " WHEN r.cluster < l.cluster THEN 1 ELSE 0 END"
+    "CASE WHEN {l}.c IS NULL AND {r}.c IS NOT NULL THEN 1"
+    " WHEN {r}.c IS NULL AND {l}.c IS NOT NULL THEN -1"
+    " WHEN {l}.c > {r}.c THEN -1 WHEN {r}.c > {l}.c THEN 1"
+    " WHEN {l}.cluster < {r}.cluster THEN -1"
+    " WHEN {r}.cluster < {l}.cluster THEN 1 ELSE 0 END"
 )
 
 
 def argmin_assign(
-    vectors: DataFrame, cents: DataFrame, cos_expr: str, cluster_col: str
+    vectors: DataFrame, cents: DataFrame, cos_tmpl: str, cluster_col: str
 ) -> DataFrame:
     """Nearest-centroid assignment: broadcast the (K-bounded) centroid
     set packed as ONE array row, fold per vector to the argmax cosine
@@ -692,10 +692,13 @@ def argmin_assign(
     hashpartitioning(vec_id) exchange plus sort PER assignment pass —
     so "map-side at scale" was only half true. The aggregate fold
     keeps assignment genuinely map-side: zero exchange, zero sort, the
-    corpus never moves. Tie-break and NaN ordering are identical to
-    the window (argmax c, then min cluster); collect_list's packing
-    order cannot change the result because the fold's preference is a
-    strict total order over (c, cluster).
+    corpus never moves. The fold keeps the first candidate under
+    ``_CENT_CMP`` — the window's order: cosine DESC NULLS LAST, then
+    the smaller cluster, so a vector whose every cosine is NULL takes
+    the smallest cluster id with a NULL ``c``. That comparator is a
+    total order, and a strict one on the candidates because cluster
+    ids are unique per centroid set, so collect_list's packing order
+    (which depends on partitioning) cannot change the result.
 
     Returns (vec_id, cluster, c) — ``c`` is the winning cosine, which
     the fold computes anyway; SemDeDup's member frame reads it as the
@@ -704,14 +707,13 @@ def argmin_assign(
     the whole Lloyd pipeline executed twice until it was dropped,
     measured 4.1s -> below on dedup_semantic_semdedup). Callers that
     only need the label prune the column for free."""
-    arr = _scored_cents_expr(cents.columns, cos_expr, cluster_col)
+    arr = _scored_cents_expr(cents.columns, cos_tmpl, cluster_col)
+    first = _CENT_CMP.format(l="__p", r="__a")
     best = (
         f"aggregate({arr}, CAST(NULL AS STRUCT<c: DOUBLE,"
         " cluster: BIGINT>),"
-        " (__a, __p) -> CASE WHEN __a IS NULL THEN __p"
-        " WHEN __p.c > __a.c OR (__p.c = __a.c"
-        " AND __p.cluster < __a.cluster) THEN __p"
-        " ELSE __a END)"
+        f" (__a, __p) -> CASE WHEN __a IS NULL OR ({first}) < 0"
+        " THEN __p ELSE __a END)"
     )
     # two-step select: the fold lands in ONE projected struct and the
     # fields are split in a second projection — CollapseProject keeps
@@ -731,17 +733,19 @@ def argmin_assign(
 def topn_probes(
     queries: DataFrame,
     cents: DataFrame,
-    cos_expr: str,
+    cos_tmpl: str,
     cluster_col: str,
     n: int,
 ) -> DataFrame:
     """Top-n nearest centroids per query vector (probe lists), as
     (query_id, cluster) — same map-side pack/sort/slice shape as
     :func:`argmin_assign` (r16), replacing the crossJoin + window
-    probe_rank filter and its exchange+sort. Order: cosine DESC then
-    cluster ASC, exactly the window's; slice tolerates n > K."""
-    arr = _scored_cents_expr(cents.columns, cos_expr, cluster_col)
-    sliced = f"slice(array_sort({arr}, {_CENT_CMP}), 1, {int(n)})"
+    probe_rank filter and its exchange+sort. Order: ``_CENT_CMP``
+    (cosine DESC NULLS LAST, then cluster ASC), exactly the window's;
+    slice tolerates n > K."""
+    arr = _scored_cents_expr(cents.columns, cos_tmpl, cluster_col)
+    cmp = _CENT_CMP.format(l="l", r="r")
+    sliced = f"slice(array_sort({arr}, (l, r) -> {cmp}), 1, {int(n)})"
     return (
         queries.crossJoin(F.broadcast(_pack_cents(cents)))
         .select(
@@ -779,8 +783,8 @@ def kmeans_once(
         )
     )
     cos0 = (
-        DOT_SPARK.format(a="embedding", b="cent0")
-        + " / (vnorm * norm0)"
+        DOT_SPARK.format(a="embedding", b="{cent0}")
+        + " / (vnorm * {norm0})"
     )
     assign0 = argmin_assign(corpus, init, cos0, "cluster0")
 

@@ -488,6 +488,14 @@ ORDER BY split, shard, pos_in_shard
 def corpus_training_manifest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    """Training manifest of the kept documents: (doc_id, split, shard,
+    n_tokens, pos_in_shard, start_offset, bin_id).
+
+    Output order: (split, shard, shuffle_key, doc_id) — equivalently
+    (split, shard, pos_in_shard), since pos_in_shard is the rank under
+    those keys. The plan produces it as one local sort over
+    RangePartitioning(split, shard), with no global sort
+    (plan-gated in tests/test_plans.py)."""
     from .screening import bin_id_expr, keep_list_frame
 
     # The keep decision is CACHED (narrow: doc_id + flags) before the

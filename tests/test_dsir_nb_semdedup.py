@@ -309,7 +309,9 @@ def _write_vecs(tmp_path, vecs):
     pd.DataFrame(
         {
             "vec_id": range(len(vecs)),
-            "embedding": [list(map(float, v)) for v in vecs],
+            "embedding": [
+                None if v is None else list(map(float, v)) for v in vecs
+            ],
             "label": [i % 3 for i in range(len(vecs))],
         }
     ).to_parquet(str(tmp_path / "embeddings.parquet"), index=False)
@@ -517,12 +519,15 @@ def test_semdedup_two_level_tier_behavior(spark, tmp_path, monkeypatch):
 
 def test_semdedup_cross_engine_on_planted_fixture(spark, tmp_path):
     """Full driver-style compare on the planted-duplicate corpus —
-    the sf0.01 oracle run never sees a true near-dup pair, this does."""
+    the sf0.01 oracle run never sees a true near-dup pair, this does.
+    A NULL and a wrong-length embedding ride along: NULL cosine to every
+    centroid, so both engines put them in the smallest cluster."""
     from tests.conftest import compare_with_oracle, duckdb_connect
 
     rng = np.random.RandomState(13)
     base = rng.normal(size=(30, 16))
     vecs = list(base) + [base[4].copy(), base[17].copy()]
+    vecs += [None, base[9][:11].copy()]
     sf = _write_vecs(tmp_path, vecs)
     con = duckdb_connect(sf)
     try:

@@ -850,36 +850,71 @@ def test_ivf_int8_oracle_parity_with_zero_vector_in_seed_range(
     seeds the K smallest SURVIVING ids while the oracle's old
     `vec_id < K` init seeded fewer than K centroids. Pinned by running
     the full driver-style compare on a corpus with a zero vector
-    planted inside the seed range."""
+    planted inside the seed range. The corpus also carries a NULL and a
+    wrong-length embedding, and the float IVF runs on it too: their cosine to every centroid is NULL, so the
+    assignment order (cosine DESC NULLS LAST, then the smaller cluster)
+    must hand them the smallest cluster id under any partitioning."""
     import pandas as pd
 
     from economic_data_project_spark.registry import all_oracles
+    from economic_data_project_spark.similarity import ann
     from tests.conftest import compare_with_oracle, duckdb_connect
 
     rng = np.random.RandomState(31)
     n, dim = 60, 8
-    vecs = [rng.normal(size=dim) for _ in range(n)]
-    vecs[3] = np.zeros(dim)  # inside the K=16 seed range
-    pd.DataFrame(
-        {
-            "vec_id": range(n),
-            "embedding": [list(map(float, v)) for v in vecs],
-            "label": [i % 3 for i in range(n)],
-        }
-    ).to_parquet(str(tmp_path / "embeddings.parquet"), index=False)
+    vecs = [list(map(float, rng.normal(size=dim))) for _ in range(n)]
+    null_id, ragged_id = n, n + 1
+    vecs += [None, vecs[7][:5]]
+    zero = list(vecs)
+    zero[3] = [0.0] * dim  # inside the K=16 seed range
+    # the float IVF divides by the seed's norm, so a zero vector there is
+    # an ANSI division error in Spark (NULL in DuckDB); it runs on the
+    # same corpus without the zero vector
+    fixtures = {"ann_ivf_topk_int8": zero, "ann_ivf_topk": vecs}
+    for name, rows in fixtures.items():
+        sf = tmp_path / name
+        sf.mkdir()
+        pd.DataFrame(
+            {
+                "vec_id": range(len(rows)),
+                "embedding": rows,
+                "label": [i % 3 for i in range(len(rows))],
+            }
+        ).to_parquet(str(sf / "embeddings.parquet"), index=False)
+        con = duckdb_connect(str(sf))
+        try:
+            ok, msg = compare_with_oracle(
+                spark,
+                all_queries()[name],
+                all_oracles()[name],
+                str(sf),
+                con=con,
+            )
+        finally:
+            con.close()
+        assert ok, f"{name}: {msg}"
 
-    con = duckdb_connect(str(tmp_path))
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
     try:
-        ok, msg = compare_with_oracle(
-            spark,
-            all_queries()["ann_ivf_topk_int8"],
-            all_oracles()["ann_ivf_topk_int8"],
-            str(tmp_path),
-            con=con,
-        )
+        for parts in ("1", "7"):
+            spark.conf.set(key, parts)
+            cents, assign = ann.kmeans_once(
+                ann.ivf_corpus(spark, str(tmp_path / "ann_ivf_topk")),
+                ann._IVF_K,
+            )
+            smallest = cents.agg({"cluster": "min"}).first()[0]
+            got = {
+                r.vec_id: r
+                for r in assign.where(
+                    assign.vec_id.isin(null_id, ragged_id)
+                ).collect()
+            }
+            for vid in (null_id, ragged_id):
+                assert got[vid].c is None, (parts, vid)
+                assert got[vid].cluster == smallest, (parts, vid)
     finally:
-        con.close()
-    assert ok, msg
+        spark.conf.set(key, before)
 
 
 def test_ivf_sparse_id_space_builds_full_index(

@@ -696,6 +696,28 @@ def test_training_manifest_composition_shape(spark):
             continue
         assert "regexp_extract_all" not in line, line.strip()[:160]
         assert "transform(sequence" not in line, line.strip()[:160]
+    # output order (the query's docstring): below the final projections
+    # and the pack window, the plan ends in ONE local sort by (split,
+    # shard, shuffle_key, doc_id) over RangePartitioning(split, shard) —
+    # the sorted range partitions, in partition order, ARE the output
+    # order, so no exchange or sort may follow them
+    import re
+
+    ops = [re.sub(r"^[\s+\-:|]*", "", ln) for ln in phys.splitlines()]
+    above = ("AdaptiveSparkPlan", "Project", "Window")
+    sort, exchange = [
+        op for op in ops if op and not op.startswith(above)
+    ][:2]
+    col = r"{}#\d+L? ASC NULLS FIRST"
+    keys = ", ".join(
+        col.format(c) for c in ("split", "shard", "shuffle_key", "doc_id")
+    )
+    assert re.match(rf"Sort \[{keys}\], false", sort), sort[:200]
+    assert re.match(
+        rf"Exchange rangepartitioning\({col.format('split')},"
+        rf" {col.format('shard')}, \d+\)",
+        exchange,
+    ), exchange[:200]
 
 
 def test_char_trigram_cache_feeds_model_and_scoring(spark):

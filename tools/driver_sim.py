@@ -16,6 +16,7 @@ queries matched, so noise and failure can never be confused in a saved
 log."""
 
 import importlib.util
+import os
 import re
 import sys
 import threading
@@ -238,20 +239,30 @@ def _outer() -> int:
     return rc
 
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+sys.path.insert(0, os.path.join(_REPO, "tests"))
 
 SF = "/root/testdata/sf0.01"
 
-# Rotation-health invariant (VERDICT r13 #5): the scheduler keeps every
-# registry row's newest driver evidence within this many rounds by
-# construction (never-verified first, then oldest-green-row first, 50
-# slots/round). Make that a CHECKED invariant so an r8-style tail can't
-# silently re-accumulate: the sim fails when any recorded row's newest
-# driver round is more than MAX_ROW_AGE_ROUNDS behind the newest record
-# on disk. Fresh (never-recorded) queries are exempt — they sort ahead
-# of every recorded row in the next driver prefix by construction.
-MAX_ROW_AGE_ROUNDS = 4
+# Rotation policy, owned by __spark_entry__ (imported so the sim and the
+# adapter cannot disagree). The driver re-verifies the first PREFIX_ROWS
+# rows of queries() per round, ordered in four buckets:
+#   1. rows at or over MAX_ROW_AGE_ROUNDS (they would exceed the limit
+#      next round), oldest first;
+#   2. never-verified rows;
+#   3. rows whose defining module changed since their newest driver
+#      round, oldest first, capped at a quota;
+#   4. everything else, oldest first.
+# Quota rule: oldest-first picks must cover the registry once every
+# MAX_ROW_AGE_ROUNDS + 1 rounds, which takes
+# ceil(registry size / (MAX_ROW_AGE_ROUNDS + 1)) slots per round; the
+# quota is the rest of the prefix. The sim fails on what the repo
+# controls: a recorded row at or over the limit outside the prefix
+# (prefix_violations). Rows already past the limit (rotation_health)
+# are reported; the next driver round clears them because they lead
+# the prefix.
+from __spark_entry__ import MAX_ROW_AGE_ROUNDS, PREFIX_ROWS  # noqa: E402
 
 
 def rotation_health(last_by_query, current_round, max_age=MAX_ROW_AGE_ROUNDS):
@@ -264,17 +275,29 @@ def rotation_health(last_by_query, current_round, max_age=MAX_ROW_AGE_ROUNDS):
     )
 
 
+def prefix_violations(order, last_by_query, current_round):
+    """(query, age) of every recorded row at or over the age limit that
+    sits outside the first PREFIX_ROWS of ``order`` — a row the next
+    driver round would leave over the limit."""
+    return [
+        (name, current_round - last_by_query[name])
+        for name in order[PREFIX_ROWS:]
+        if name in last_by_query
+        and current_round - last_by_query[name] >= MAX_ROW_AGE_ROUNDS
+    ]
+
+
 def _inner() -> int:
 
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", os.path.join(_REPO, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
-    records = list(mod._iter_records())
+    records = mod._records()
     if records:
-        current_round = max(rnd for rnd, _rows in records)
+        current_round = records[-1][0]
         last = mod._last_checked_round(records)
         ages = sorted({current_round - r for r in last.values()})
         hist = {
@@ -283,10 +306,16 @@ def _inner() -> int:
         }
         print(f"rotation: newest record r{current_round}, age histogram"
               f" {hist}", flush=True)
-        violations = rotation_health(last, current_round)
+        over = rotation_health(last, current_round)
+        if over:
+            print(f"rotation: {len(over)} row(s) past the limit:"
+                  f" {over[:20]}", flush=True)
+        violations = prefix_violations(list(mod.queries()), last,
+                                       current_round)
         if violations:
-            print("FAIL: rotation-health violations (row age >"
-                  f" {MAX_ROW_AGE_ROUNDS} rounds): {violations[:20]}",
+            print("FAIL: rows at or over the age limit"
+                  f" ({MAX_ROW_AGE_ROUNDS} rounds) outside the first"
+                  f" {PREFIX_ROWS} of queries(): {violations[:20]}",
                   flush=True)
             return 1
 

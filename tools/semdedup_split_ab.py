@@ -36,6 +36,7 @@ def main() -> None:
     from economic_data_project_spark.session import get_spark
     from economic_data_project_spark.similarity import semdedup as sd
     from economic_data_project_spark.similarity.ann import (
+        _COS_CENTROID,
         ivf_corpus,
         kmeans_once,
     )
@@ -78,7 +79,9 @@ def main() -> None:
             "cluster",
             "embedding",
             "vnorm",
-            F.expr(sd._COS_CENTROID).alias("cc"),
+            F.expr(
+                _COS_CENTROID.format(centroid="centroid", cnorm="cnorm")
+            ).alias("cc"),
         )
     ).cache()
     print("member rows:", member.count(), flush=True)  # fill the cache
