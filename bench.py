@@ -12,6 +12,13 @@ Since r14 every per-query value is the MEDIAN over $SPARK_GRAFT_BENCH_RUNS
 stamps `n_runs` + per-rep `run_totals` so a single-run artifact
 self-identifies as low-confidence and tools/bench_compare.py can refuse
 to adjudicate from it (VERDICT r13: 1.4x same-gate host variance).
+
+"Cache-cold" means the engine's data caches (session caches and the SQL
+cache), not the JVM's generated-code cache. ``get_spark`` sizes that
+cache to the whole registry (session.CODEGEN_CACHE_ENTRIES), so
+repetitions 2 and later reuse the classes repetition 1 compiled. Since
+that change, headline medians are lower for a reason unrelated to any
+query: do not compare BENCH artifacts across it as a query speedup.
 """
 
 from __future__ import annotations

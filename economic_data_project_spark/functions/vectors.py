@@ -30,6 +30,12 @@ NORM_SPARK = (
     " cast(0 as double), (acc, v) -> acc + v))"
 )
 
+# Cosine over precomputed norms (compute each norm once per vector).
+# Zero-norm contract, shared by both engines: a zero norm gives a NULL
+# cosine (NULLIF turns Spark's ANSI DIVIDE_BY_ZERO into NULL; DuckDB
+# already returns NULL), ranked last by DESC orderings in both engines.
+COS_SPARK = "(" + DOT_SPARK + " / NULLIF({na} * {nb}, 0))"
+
 # ------------------------------------------------------ DuckDB oracle side
 
 DOT_DUCK = (
@@ -43,12 +49,4 @@ NORM_DUCK = (
     " list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),"
     " (acc, x) -> acc + x))"
 )
-
-
-def cosine_spark(a: str, b: str, norm_a: str, norm_b: str) -> str:
-    """Cosine given precomputed norms (compute norms once per vector)."""
-    return f"({DOT_SPARK.format(a=a, b=b)} / ({norm_a} * {norm_b}))"
-
-
-def cosine_duck(a: str, b: str, norm_a: str, norm_b: str) -> str:
-    return f"({DOT_DUCK.format(a=a, b=b)} / ({norm_a} * {norm_b}))"
+COS_DUCK = "(" + DOT_DUCK + " / NULLIF({na} * {nb}, 0))"

@@ -29,7 +29,7 @@ from pyspark.sql.window import Window
 
 from ..caches import register_session_cache
 from ..catalog import load_table
-from ..functions.vectors import DOT_DUCK, DOT_SPARK, NORM_DUCK, NORM_SPARK
+from ..functions.vectors import COS_DUCK, COS_SPARK, NORM_DUCK, NORM_SPARK
 from ..registry import query
 
 _N_QUERIES = 10  # probe set: vec_id < 10 — a DRIVER-CORPUS convention
@@ -90,8 +90,8 @@ WITH n AS (
 ),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.label AS label,
-         {DOT_DUCK.format(a="q.embedding", b="c.embedding")}
-           / (q.norm * c.norm) AS cosine
+         {COS_DUCK.format(a="q.embedding", b="c.embedding", na="q.norm", nb="c.norm")}
+           AS cosine
   FROM n q
   JOIN (SELECT n.*, e.label FROM n JOIN embeddings e USING (vec_id)) c
     ON q.vec_id <> c.vec_id
@@ -132,8 +132,9 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "cosine",
-            F.expr(DOT_SPARK.format(a="q_emb", b="c_emb"))
-            / (F.col("q_norm") * F.col("c_norm")),
+            F.expr(
+                COS_SPARK.format(a="q_emb", b="c_emb", na="q_norm", nb="c_norm")
+            ),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -182,8 +183,8 @@ WITH n AS (
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          q.bucket AS bucket,
-         {DOT_DUCK.format(a="q.embedding", b="c.embedding")}
-           / (q.norm * c.norm) AS cosine
+         {COS_DUCK.format(a="q.embedding", b="c.embedding", na="q.norm", nb="c.norm")}
+           AS cosine
   FROM n q JOIN n c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
   WHERE q.vec_id < {_N_QUERIES}
 )
@@ -227,8 +228,9 @@ def ann_signlsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "cosine",
-            F.expr(DOT_SPARK.format(a="q_emb", b="c_emb"))
-            / (F.col("q_norm") * F.col("c_norm")),
+            F.expr(
+                COS_SPARK.format(a="q_emb", b="c_emb", na="q_norm", nb="c_norm")
+            ),
         )
     )
     key = (
@@ -317,8 +319,8 @@ WITH n AS (
 vec_ranked AS (
   SELECT c.vec_id AS id,
          ROW_NUMBER() OVER (ORDER BY
-           {DOT_DUCK.format(a="q.embedding", b="c.embedding")}
-             / (q.norm * c.norm) DESC, c.vec_id) AS v_rank
+           {COS_DUCK.format(a="q.embedding", b="c.embedding", na="q.norm", nb="c.norm")}
+             DESC, c.vec_id) AS v_rank
   FROM n q JOIN n c ON c.vec_id <> 0
   WHERE q.vec_id = 0
   ORDER BY v_rank LIMIT 50
@@ -353,8 +355,9 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(probe))
         .withColumn(
             "cosine",
-            F.expr(DOT_SPARK.format(a="q_emb", b="embedding"))
-            / (F.col("q_norm") * F.col("norm")),
+            F.expr(
+                COS_SPARK.format(a="q_emb", b="embedding", na="q_norm", nb="norm")
+            ),
         )
     )
     vec_ranked = _ranked_topk(
@@ -409,8 +412,8 @@ WITH n AS (
 ),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.label AS label,
-         {DOT_DUCK.format(a="q.embedding", b="c.embedding")}
-           / (q.norm * c.norm) AS cosine
+         {COS_DUCK.format(a="q.embedding", b="c.embedding", na="q.norm", nb="c.norm")}
+           AS cosine
   FROM n q JOIN n c
     ON q.vec_id <> c.vec_id AND c.label IN (0, 1, 2)
   WHERE q.vec_id < {_N_QUERIES}
@@ -451,8 +454,9 @@ def ann_cosine_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "cosine",
-            F.expr(DOT_SPARK.format(a="q_emb", b="c_emb"))
-            / (F.col("q_norm") * F.col("c_norm")),
+            F.expr(
+                COS_SPARK.format(a="q_emb", b="c_emb", na="q_norm", nb="c_norm")
+            ),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -519,8 +523,15 @@ def kmeans_cte_duck(k: int = _IVF_K) -> str:
     (vec_id, cluster). Shared by the IVF oracle and the SemDeDup oracle
     (similarity/semdedup.py) so both contracts rebuild bit-identical
     clusters."""
-    dot_vc = DOT_DUCK.format(a="v.embedding", b="c.centroid")
-    norm_c = NORM_DUCK.format(v="c.centroid")
+    cos_vc = COS_DUCK.format(
+        a="v.embedding",
+        b="c.centroid",
+        na="v.vnorm",
+        nb=NORM_DUCK.format(v="c.centroid"),
+    )
+    cos_v0 = COS_DUCK.format(
+        a="v.embedding", b="i.cent0", na="v.vnorm", nb="i.norm0"
+    )
     return f"""init AS (
   -- K smallest ids, mirroring the engine's orderBy/limit seeding
   -- exactly (a `vec_id < K` filter agrees only for dense-from-0 ids
@@ -538,8 +549,7 @@ assign0 AS (
   SELECT vec_id, cluster0 AS cluster FROM (
     SELECT v.vec_id, i.cluster0,
       ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-        ({DOT_DUCK.format(a="v.embedding", b="i.cent0")}
-         / (v.vnorm * i.norm0)) DESC, i.cluster0) AS rn
+        {cos_v0} DESC, i.cluster0) AS rn
     FROM corpus v CROSS JOIN init i
   ) WHERE rn = 1
 ),
@@ -569,23 +579,29 @@ final_assign AS (
   SELECT vec_id, cluster FROM (
     SELECT v.vec_id, c.cluster,
       ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-        ({dot_vc} / (v.vnorm * {norm_c})) DESC, c.cluster) AS rn
+        {cos_vc} DESC, c.cluster) AS rn
     FROM corpus v CROSS JOIN centroids c
   ) WHERE rn = 1
 )"""
 
 
 def _ivf_oracle() -> str:
-    dot_qc = DOT_DUCK.format(a="q.embedding", b="c.centroid")
-    norm_c = NORM_DUCK.format(v="c.centroid")
-    dot_qx = DOT_DUCK.format(a="q.embedding", b="x.embedding")
+    cos_qc = COS_DUCK.format(
+        a="q.embedding",
+        b="c.centroid",
+        na="q.vnorm",
+        nb=NORM_DUCK.format(v="c.centroid"),
+    )
+    cos_qx = COS_DUCK.format(
+        a="q.embedding", b="x.embedding", na="q.vnorm", nb="x.vnorm"
+    )
     return f"""
 WITH {kmeans_cte_duck()},
 probes AS (
   SELECT query_id, cluster, probe_rank FROM (
     SELECT q.vec_id AS query_id, c.cluster,
       ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-        ({dot_qc} / (q.vnorm * {norm_c})) DESC, c.cluster)
+        {cos_qc} DESC, c.cluster)
         AS probe_rank
     FROM corpus q CROSS JOIN centroids c
     WHERE q.vec_id < {_N_QUERIES}
@@ -593,7 +609,7 @@ probes AS (
 ),
 scored AS (
   SELECT p.query_id, x.vec_id AS neighbor_id, x.label,
-    ({dot_qx} / (q.vnorm * x.vnorm)) AS cosine
+    {cos_qx} AS cosine
   FROM probes p
   JOIN final_assign fa ON p.cluster = fa.cluster
   JOIN corpus x ON fa.vec_id = x.vec_id
@@ -614,8 +630,8 @@ ORDER BY query_id, rank
 # cosine of a corpus row against a Lloyd centroid row, as a template
 # over the centroid columns (embedding/vnorm from the corpus,
 # {centroid}/{cnorm} from kmeans_once) — see _scored_cents_expr.
-_COS_CENTROID = (
-    DOT_SPARK.format(a="embedding", b="{centroid}") + " / (vnorm * {cnorm})"
+_COS_CENTROID = COS_SPARK.format(
+    a="embedding", b="{centroid}", na="vnorm", nb="{cnorm}"
 )
 
 
@@ -647,7 +663,7 @@ def _scored_cents_expr(
 ) -> str:
     """SQL for the per-vector (cosine, cluster) candidate array over a
     packed ``__cents`` array-of-structs column. ``cos_tmpl`` is a
-    DOT_SPARK-style template whose ``{<centroid column>}`` placeholders
+    COS_SPARK-style template whose ``{<centroid column>}`` placeholders
     are filled with the lambda struct's fields ``__s.<column>``."""
     cos = cos_tmpl.format(**{c: f"__s.{c}" for c in cent_cols})
     return (
@@ -782,9 +798,8 @@ def kmeans_once(
             F.col("vnorm").alias("norm0"),
         )
     )
-    cos0 = (
-        DOT_SPARK.format(a="embedding", b="{cent0}")
-        + " / (vnorm * {norm0})"
+    cos0 = COS_SPARK.format(
+        a="embedding", b="{cent0}", na="vnorm", nb="{norm0}"
     )
     assign0 = argmin_assign(corpus, init, cos0, "cluster0")
 
@@ -863,9 +878,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vnorm").alias("x_norm"),
         "label",
     )
-    cos_qx = (
-        DOT_SPARK.format(a="q_emb", b="x_emb") + " / (q_norm * x_norm)"
-    )
+    cos_qx = COS_SPARK.format(a="q_emb", b="x_emb", na="q_norm", nb="x_norm")
     scored = (
         cand.join(F.broadcast(q), on="query_id")
         .join(x, on="vec_id")

@@ -111,7 +111,7 @@ from pyspark.sql import functions as F
 
 from ..caches import register_session_cache
 from ..functions.ta import emit, series_window, sql_emit
-from ..functions.vectors import DOT_DUCK, DOT_SPARK
+from ..functions.vectors import COS_DUCK, COS_SPARK, DOT_DUCK
 from ..registry import query
 from .ann import (
     _IVF_K_CAP,
@@ -147,8 +147,12 @@ _TWO_LEVEL_MIN = 512 * _TARGET_CLUSTER  # 524288
 
 
 def _semdedup_oracle() -> str:
-    dot_ab = DOT_DUCK.format(a="a.embedding", b="b.embedding")
-    dot_mc = DOT_DUCK.format(a="v.embedding", b="c.centroid")
+    cos_ab = COS_DUCK.format(
+        a="a.embedding", b="b.embedding", na="a.vnorm", nb="b.vnorm"
+    )
+    cos_mc = COS_DUCK.format(
+        a="v.embedding", b="c.centroid", na="v.vnorm", nb="c.cnorm"
+    )
     return f"""
 WITH {kmeans_cte_duck(_K)},
 cents AS (
@@ -158,7 +162,7 @@ cents AS (
 ),
 member AS (
   SELECT v.vec_id, fa.cluster, v.embedding, v.vnorm,
-         ({dot_mc} / (v.vnorm * c.cnorm)) AS cc
+         {cos_mc} AS cc
   FROM final_assign fa
   JOIN corpus v USING (vec_id)
   JOIN cents c ON fa.cluster = c.cluster
@@ -168,7 +172,7 @@ dups AS (
   FROM member a JOIN member b
     ON a.cluster = b.cluster
    AND a.vec_id <> b.vec_id
-   AND ({dot_ab} / (a.vnorm * b.vnorm)) >= {_EPS}
+   AND {cos_ab} >= {_EPS}
    AND (a.cc > b.cc OR (a.cc = b.cc AND a.vec_id < b.vec_id))
 )
 SELECT m.vec_id, m.cluster,
@@ -196,9 +200,8 @@ def _dups_hof(member: DataFrame) -> DataFrame:
         F.col("vnorm").alias("norm_b"),
         F.col("cc").alias("cc_b"),
     )
-    cos_ab = (
-        F.expr(DOT_SPARK.format(a="emb_a", b="emb_b"))
-        / (F.col("norm_a") * F.col("norm_b"))
+    cos_ab = F.expr(
+        COS_SPARK.format(a="emb_a", b="emb_b", na="norm_a", nb="norm_b")
     )
     return (
         a.join(b, F.col("cluster_a") == F.col("cluster_b"))

@@ -851,7 +851,9 @@ def test_ivf_int8_oracle_parity_with_zero_vector_in_seed_range(
     `vec_id < K` init seeded fewer than K centroids. Pinned by running
     the full driver-style compare on a corpus with a zero vector
     planted inside the seed range. The corpus also carries a NULL and a
-    wrong-length embedding, and the float IVF runs on it too: their cosine to every centroid is NULL, so the
+    wrong-length embedding, and the float IVF runs on it too: a zero
+    norm gives a NULL cosine in both engines (functions/vectors.py
+    COS_SPARK/COS_DUCK), as does a NULL or ragged embedding, so the
     assignment order (cosine DESC NULLS LAST, then the smaller cluster)
     must hand them the smallest cluster id under any partitioning."""
     import pandas as pd
@@ -865,20 +867,16 @@ def test_ivf_int8_oracle_parity_with_zero_vector_in_seed_range(
     vecs = [list(map(float, rng.normal(size=dim))) for _ in range(n)]
     null_id, ragged_id = n, n + 1
     vecs += [None, vecs[7][:5]]
-    zero = list(vecs)
-    zero[3] = [0.0] * dim  # inside the K=16 seed range
-    # the float IVF divides by the seed's norm, so a zero vector there is
-    # an ANSI division error in Spark (NULL in DuckDB); it runs on the
-    # same corpus without the zero vector
-    fixtures = {"ann_ivf_topk_int8": zero, "ann_ivf_topk": vecs}
-    for name, rows in fixtures.items():
+    zero_id = 3
+    vecs[zero_id] = [0.0] * dim  # inside the K=16 seed range
+    for name in ("ann_ivf_topk_int8", "ann_ivf_topk"):
         sf = tmp_path / name
         sf.mkdir()
         pd.DataFrame(
             {
-                "vec_id": range(len(rows)),
-                "embedding": rows,
-                "label": [i % 3 for i in range(len(rows))],
+                "vec_id": range(len(vecs)),
+                "embedding": vecs,
+                "label": [i % 3 for i in range(len(vecs))],
             }
         ).to_parquet(str(sf / "embeddings.parquet"), index=False)
         con = duckdb_connect(str(sf))
@@ -907,10 +905,10 @@ def test_ivf_int8_oracle_parity_with_zero_vector_in_seed_range(
             got = {
                 r.vec_id: r
                 for r in assign.where(
-                    assign.vec_id.isin(null_id, ragged_id)
+                    assign.vec_id.isin(null_id, ragged_id, zero_id)
                 ).collect()
             }
-            for vid in (null_id, ragged_id):
+            for vid in (null_id, ragged_id, zero_id):
                 assert got[vid].c is None, (parts, vid)
                 assert got[vid].cluster == smallest, (parts, vid)
     finally:

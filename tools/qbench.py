@@ -7,8 +7,9 @@ Usage:
   python tools/qbench.py --all            # every HEADLINE query
   python tools/qbench.py --longdoc name   # time against the longdoc corpus
 
-Prints one line per query per rep plus a median summary. This is a
-measurement tool only — the driver contract lives in bench.py.
+Prints one line per query per rep (seconds and generated-code compiles)
+plus a median summary. This is a measurement tool only — the driver
+contract lives in bench.py.
 """
 
 from __future__ import annotations
@@ -27,7 +28,33 @@ from economic_data_project_spark.caches import (  # noqa: E402
     free_session_caches,
     lazy_builds,
 )
-from economic_data_project_spark.session import get_spark  # noqa: E402
+from economic_data_project_spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+)
+
+
+def _timed_rep(spark, build, label: str, sink=None) -> float:
+    """One cache-cold rep: free the data caches, build and sink through
+    the noop writer (or ``sink``), and print the rep's seconds beside
+    its generated-code compiles — an A/B whose arms differ only in
+    compile reuse shows it here. Returns the seconds."""
+    free_session_caches()
+    spark.catalog.clearCache()
+    spark.sparkContext.setJobDescription(label)
+    c0 = codegen_compiles(spark)
+    t0 = time.perf_counter()
+    df = build()
+    if sink is None:
+        df.write.format("noop").mode("overwrite").save()
+    else:
+        sink(df)
+    secs = round(time.perf_counter() - t0, 3)
+    print(
+        f"{label}: {secs:.3f}s compiles={codegen_compiles(spark) - c0}",
+        flush=True,
+    )
+    return secs
 
 
 def alternating_ab(spark, arms, n: int = 9, sink=None):
@@ -41,8 +68,9 @@ def alternating_ab(spark, arms, n: int = 9, sink=None):
     hits both arms symmetrically; every timing starts cache-cold
     (session caches + SQL cache freed) and executes through the noop
     sink. The BUILD is inside the timed region, exactly like bench.py
-    (construction-reduction changes must show up here too). Returns
-    {arm: [seconds...]} and prints medians.
+    (construction-reduction changes must show up here too). Prints
+    every rep's seconds and compiles, returns {arm: [seconds...]} and
+    prints medians.
 
     This box fabricates 1.5-2.5x swings on identical code between
     COLD runs (BENCH r13-r15 run_totals) — never adjudicate a code
@@ -53,16 +81,9 @@ def alternating_ab(spark, arms, n: int = 9, sink=None):
     for rep in range(n):
         order = names if rep % 2 == 0 else list(reversed(names))
         for arm in order:
-            free_session_caches()
-            spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"ab:{arm}#{rep}")
-            t0 = time.perf_counter()
-            df = arms[arm]()
-            if sink is None:
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                sink(df)
-            res[arm].append(round(time.perf_counter() - t0, 3))
+            res[arm].append(
+                _timed_rep(spark, arms[arm], f"ab:{arm}#{rep}", sink)
+            )
     for a in names:
         print(
             f"{a}: median={statistics.median(res[a]):.3f} runs={res[a]}",
@@ -116,15 +137,12 @@ def main() -> None:
                 fh.write(plan)
         if args.n <= 0:  # plans-only mode
             continue
-        ts = []
-        for _ in range(args.n):
-            free_session_caches()
-            spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"qbench:{name}")
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            ts.append(round(time.perf_counter() - t0, 3))
+        ts = [
+            _timed_rep(
+                spark, lambda: qs[name](spark, sf_dir), f"qbench:{name}#{rep}"
+            )
+            for rep in range(args.n)
+        ]
         print(f"{name}: median={statistics.median(ts):.3f} runs={ts}", flush=True)
     spark.stop()
 
