@@ -35,24 +35,22 @@ At 100 TB none of the corpus-proportional frames would be executor
 caches at all — each is a materialized signature/scoring TABLE written
 once with explicit retention; the registry is the single-JVM analogue.
 
-Eager-fill contract (``warm``). Builders whose cache feeds many
-concurrent subtrees of ONE downstream job fill the cache eagerly at
-build time via ``warm(df)`` (a tiny count()): concurrent readers of an
-UNFILLED cache entry each recompute it, because cache population is
-per-partition and uncoordinated across simultaneously-running stages.
-The deliberate consequence is that calling such a query BUILDER runs
-Spark jobs before any action on the returned frame (and surfaces data
-errors at build time). Plan-only consumers — EXPLAIN tooling, plan
-gates, scan audits — suppress every fill with the ``lazy_builds()``
-context manager and get lazy construction back. (The iterative
-builders — pointer-doubling hierarchy, connected components — still
-execute at build under ``lazy_builds()``: their localCheckpoint
-truncation is load-bearing, not a warm-up.)
+Fill-once contract. A builder returns a lazy plan: a registered cache
+fills during the first action that reads it, and no builder runs a job
+to pre-fill one. That first action may read the unfilled entry from
+many concurrent subtrees (a 10-branch fan-out union, a self-join);
+Spark computes each cached partition once under the block manager's
+write lock and every other reader waits for it, so the entry is still
+computed exactly once (pinned by tests/test_caches.py::
+test_unfilled_cache_fills_once_under_concurrent_readers). Only the
+iterative builders (pointer-doubling hierarchy, connected components),
+the bounded routing/sizing probes and the ML fits run jobs at build
+(tests/test_plans.py::_BUILD_JOB_EXEMPT).
 
 Thread-safety: the registry is lock-guarded and handles are deduped by
 ``DataFrame.semanticHash()`` (+ schema string, ADVICE r10), so the
 thread-parallel oracle sweep can register/free concurrently without
-growing the list. A ``free`` racing another thread's in-flight ``warm``
+growing the list. A ``free`` racing another thread's in-flight cache
 fill simply leaves that consumer to recompute lazily — correct, just
 cold (tests/test_caches.py exercises free-mid-sweep). That safety
 holds for CACHE entries only: checkpoint entries release destructively
@@ -74,7 +72,6 @@ _SESSION_CACHES: dict[object, DataFrame] = {}
 # connected-components final generations): DataFrame.unpersist cannot
 # free LogicalRDD storage, so these are freed via free_local_checkpoint.
 _SESSION_CHECKPOINTS: list[DataFrame] = []
-_EAGER_FILL = True
 
 
 def _plan_key(df: DataFrame) -> object:
@@ -111,33 +108,6 @@ def register_session_checkpoint(df: DataFrame) -> DataFrame:
     with _LOCK:
         _SESSION_CHECKPOINTS.append(df)
     return df
-
-
-def warm(df: DataFrame) -> DataFrame:
-    """Eagerly fill a just-registered cache (see the eager-fill
-    contract in the module docstring). No-op under ``lazy_builds()``."""
-    if _EAGER_FILL:
-        df.count()
-    return df
-
-
-class lazy_builds:
-    """Context manager: suppress every ``warm()`` fill so query
-    builders construct plans without running jobs (EXPLAIN tooling,
-    plan gates, scan audits). Caches still register; they fill lazily
-    on first action instead. Not scoped per-thread: flipping it while
-    another thread builds warms/lazies that build too — use at tooling
-    entry points, not mid-sweep."""
-
-    def __enter__(self) -> "lazy_builds":
-        global _EAGER_FILL
-        self._prev = _EAGER_FILL
-        _EAGER_FILL = False
-        return self
-
-    def __exit__(self, *exc: object) -> None:
-        global _EAGER_FILL
-        _EAGER_FILL = self._prev
 
 
 def free_session_caches(

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions.parity import davg, dsum, sql_davg, sql_dsum
 from ..functions import ta
@@ -438,13 +438,12 @@ def sector_dispersion_leaders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rev")
         )
         # cached (r9): (nation x month) sized, consumed by the means
-        # agg and the ranked join (4 fact scans cold). repartition(1)
-        # + eager fill: see data_points.py.
+        # agg and the ranked join (4 fact scans cold). repartition(1):
+        # see data_points.py.
         .repartition(1)
         .cache()
     )
     monthly = register_session_cache(monthly)
-    warm(monthly)
     means = monthly.groupBy("month").agg(
         davg("rev").alias("mean_rev"), F.count("*").alias("n_nations")
     )

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions import ta
 from ..functions.parity import (
@@ -367,12 +367,11 @@ def correlation_analysis_enhanced(
     # by the overall corr, the per-regime corr, the rolling-window corr
     # and the stability screen (each corr helper reads it twice more
     # for its means join); uncached the cold plan re-ran the fact
-    # aggregates 7+5 times (plan-gated). repartition(1) + eager fill:
-    # see data_points.py for the reduce-stage and fill-race rationale.
+    # aggregates 7+5 times (plan-gated). repartition(1): see
+    # data_points.py for the reduce-stage rationale.
     panel = register_session_cache(
         _panel(spark, sf_dir).repartition(1).cache()
     )
-    warm(panel)
     pair = ["symbol", "series_code"]
 
     overall = _group_corr(panel, pair).where(

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions import ta
 from ..functions.parity import (
@@ -234,13 +234,6 @@ def interesting_data_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(1)
         .cache()
     )
-    # eager fill: ~10 union branches read this cache concurrently in
-    # one job, and concurrent readers of an UNFILLED cache entry each
-    # recompute it (cache population is per-partition, uncoordinated
-    # across simultaneously-running stages) — warm() fills it once so
-    # every branch reads warm. Plan-only consumers suppress the fill
-    # with caches.lazy_builds() (the builder contract lives there).
-    warm(panel)
     w = Window.partitionBy("series").orderBy("month")
 
     def pct(m: int):
@@ -356,7 +349,6 @@ def interesting_data_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(1)
         .cache()
     )
-    warm(market)  # eager fill, same rationale as the panel
     market = (
         market
         .select(

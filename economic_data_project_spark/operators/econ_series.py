@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table
 from ..registry import query
 
@@ -236,8 +236,6 @@ def series_latest_aggregates(
     store = register_session_cache(
         series_store(spark, sf_dir).repartition(1).cache()
     )
-    warm(store)  # eager fill: see data_points.py — concurrent
-    # unfilled-cache readers each recompute the entry
 
     bounds = store.agg(
         F.max("date").alias("end_date"),
@@ -451,9 +449,8 @@ def series_monthly_interpolation(
     )
     # cached (r9): (series x month) sized, read by the per-series date
     # bounds AND the spine gap join — 3 fact scans cold otherwise.
-    # repartition(1) + eager fill: see data_points.py.
+    # repartition(1): see data_points.py.
     monthly = register_session_cache(monthly.repartition(1).cache())
-    warm(monthly)
     db = monthly.groupBy("series_code", "series_name").agg(
         F.min("month_date").alias("min_date"),
         F.max("month_date").alias("max_date"),

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table, spread_scan
 from ..functions.parity import (
     centered_corr,
@@ -354,7 +354,7 @@ def pairwise_priority_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     # cached (r9): (priority x date) sized, read by both sides of the
     # pair self-join and again by the means/corr passes — 4 fact scans
-    # cold. repartition(1) + eager fill: see data_points.py.
+    # cold. repartition(1): see data_points.py.
     daily = register_session_cache(
         o.groupBy(
             F.col("o_orderpriority").alias("pr"),
@@ -364,7 +364,6 @@ def pairwise_priority_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(1)
         .cache()
     )
-    warm(daily)
     a = daily.alias("a")
     b = daily.alias("b")
     pairs = a.join(

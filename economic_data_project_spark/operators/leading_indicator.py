@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions.parity import (
     centered_corr,
@@ -228,7 +228,7 @@ def leading_econ_return_indicator(
     # dimension-sized) feeds THREE consumers — the group means, the
     # corr table, and the quintile pass — and uncached each re-ran the
     # full lineitem join-agg AND the orders indicator agg (3 scans of
-    # each fact cold). repartition(1) + eager fill: see data_points.py.
+    # each fact cold). repartition(1): see data_points.py.
     panel = register_session_cache(
         sector_returns.join(F.broadcast(ind), on="month")
         .where(F.col("econ").isNotNull())
@@ -236,7 +236,6 @@ def leading_econ_return_indicator(
         .repartition(1)
         .cache()
     )
-    warm(panel)
     pair = ["symbol", "series_name"]
     mean_aggs = []
     for h in HORIZONS:

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions import ta
 from ..registry import query
@@ -146,7 +146,7 @@ def market_analysis_return(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached (r9): the (flag x date) daily frame is referenced once
     # per calendar-offset horizon by the battery's self-joins —
     # uncached each reference re-ran the lineitem aggregate (6 fact
-    # scans cold). repartition(1) + eager fill: see data_points.py.
+    # scans cold). repartition(1): see data_points.py.
     daily = register_session_cache(
         li.groupBy(
             F.col("l_returnflag").alias("flag"),
@@ -160,7 +160,6 @@ def market_analysis_return(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(1)
         .cache()
     )
-    warm(daily)
     return analysis_return_battery(daily, ["flag"]).orderBy(
         "flag", "date"
     )

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions.parity import sql_davg, sql_dsum
 from ..registry import query
@@ -210,8 +210,8 @@ def sector_regime_performance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached (r9): the panel (region x month rows) feeds THREE
     # aggregate consumers (per-regime stats, overall stats, regime
     # averages) — uncached each re-ran the lineitem join+agg and the
-    # regime pivot (6 fact scans cold). repartition(1) + eager fill:
-    # see data_points.py for the rationale.
+    # regime pivot (6 fact scans cold). repartition(1): see
+    # data_points.py for the rationale.
     panel = register_session_cache(
         sector_returns.join(F.broadcast(regimes), on="month")
         .join(F.broadcast(seed), on="symbol", how="left")
@@ -219,7 +219,6 @@ def sector_regime_performance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(1)
         .cache()
     )
-    warm(panel)
     ret_dec = F.col("monthly_return").cast("decimal(28,6)")
     n = F.count("*")
     s = F.sum(ret_dec).cast("double")

@@ -11,10 +11,10 @@ executed-AQE cached children print ``== Final Plan ==`` sections that
 reset indentation, which breaks any line/indent-based IMR scoping.
 
 ``registry_audit`` is the ONE registry-wide sweep (VERDICT r10 #4):
-it builds every registered query's plan exactly once (cold, under
-``lazy_builds``) and emits all three plan-budget metrics per query —
-outside-cache fact scans, wide-column scan nodes, and the number of
-Spark jobs the BUILDER ran at construction. The three gates in
+it builds every registered query's plan exactly once (cold, by the
+same builder call production makes) and emits all three plan-budget
+metrics per query — outside-cache fact scans, wide-column scan nodes,
+and the number of Spark jobs the BUILDER ran at construction. The three gates in
 tests/test_plans.py and tools/scan_audit.py all consume it; before it,
 each rebuilt all 158 plans separately (a large share of the suite's
 wall time).
@@ -120,7 +120,7 @@ def registry_audit(
     """Build every registered query's COLD plan once and measure all
     plan-budget metrics in one pass. Per query: session caches freed
     (so no query rides another's registered cache), builder invoked
-    under ``lazy_builds`` inside a dedicated job group, then
+    exactly as production calls it, inside a dedicated job group, then
 
     - ``build_jobs``: Spark jobs the builder ran at CONSTRUCTION
       (counted via the job group). Zero for almost every builder —
@@ -133,7 +133,7 @@ def registry_audit(
       table, cache fills included.
     - ``error``: builder exception string, metrics absent.
     """
-    from ..caches import free_session_caches, lazy_builds
+    from ..caches import free_session_caches
     from ..catalog import load_tables
     from ..registry import all_queries
 
@@ -151,28 +151,27 @@ def registry_audit(
     # warm-up).
     load_tables(spark, sf_dir)
     out: dict[str, dict] = {}
-    with lazy_builds():
-        for name in sorted(qs):
-            free_session_caches()
-            gid = f"plan-audit-{salt}-{name}"
-            sc.setJobGroup(gid, f"plan-audit build: {name}")
-            try:
-                df = qs[name](spark, sf_dir)
-            except Exception as e:  # noqa: BLE001 — audit must sweep on
-                out[name] = {
-                    "error": f"{type(e).__name__}: {e}",
-                    "build_jobs": len(tracker.getJobIdsForGroup(gid)),
-                }
-                continue
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
+    for name in sorted(qs):
+        free_session_caches()
+        gid = f"plan-audit-{salt}-{name}"
+        sc.setJobGroup(gid, f"plan-audit build: {name}")
+        try:
+            df = qs[name](spark, sf_dir)
+        except Exception as e:  # noqa: BLE001 — audit must sweep on
             out[name] = {
-                "error": None,
+                "error": f"{type(e).__name__}: {e}",
                 "build_jobs": len(tracker.getJobIdsForGroup(gid)),
-                "fact_scans": {
-                    f: len(fact_scans_outside_imr(df, f)) for f in FACTS
-                },
-                "wide_scans": wide_scan_nodes(df),
             }
+            continue
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        out[name] = {
+            "error": None,
+            "build_jobs": len(tracker.getJobIdsForGroup(gid)),
+            "fact_scans": {
+                f: len(fact_scans_outside_imr(df, f)) for f in FACTS
+            },
+            "wide_scans": wide_scan_nodes(df),
+        }
     free_session_caches()
     return out

@@ -42,7 +42,7 @@ class Model:
     name: str
     build: Callable[[SparkSession], DataFrame]
     deps: tuple[str, ...] = ()
-    materialization: str = "view"  # view | table | incremental
+    materialization: str = "view"  # view | cached_view | table | incremental
     key_columns: tuple[str, ...] = ()
     watermark_column: str | None = None
 

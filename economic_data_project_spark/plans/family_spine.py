@@ -34,7 +34,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table, spread_scan
 from ..functions.parity import dsum, sql_dsum
 from ..registry import query
@@ -137,12 +137,10 @@ def families_spine(spark: SparkSession) -> DataFrame:
     # projection — and uncached both consumers re-run all six family
     # aggregates (every fact table scanned twice; plan-gated in
     # tests/test_plans.py). repartition(1) keeps the family agg
-    # reduces parallel and moves only monthly rows; the eager count
-    # fills the entry once before the two consumers race for it.
+    # reduces parallel and moves only monthly rows.
     spine = register_session_cache(
         reduce(outer, frames).repartition(1).cache()
     )
-    warm(spine)
     bounds = spine.agg(
         *[F.min(f).alias(f"min_{f}") for f in _FAMS],
         *[F.max(f).alias(f"max_{f}") for f in _FAMS],

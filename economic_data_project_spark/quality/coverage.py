@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table
 from ..registry import query
 
@@ -129,10 +129,9 @@ def series_grain_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached (r9): the distinct (series, date) store is tiny (a few
     # series x their observation dates) but is consumed by both the
     # bounds scalar and the trailing-window count — uncached each
-    # re-ran all four fact-table branches. repartition(1) + eager
-    # fill: see data_points.py for the rationale.
+    # re-ran all four fact-table branches. repartition(1): see
+    # data_points.py for the rationale.
     store = register_session_cache(store.repartition(1).cache())
-    warm(store)
     bounds = store.agg(
         F.max("date").alias("end_date"),
         F.add_months(F.max("date"), -12).alias("start_date"),
@@ -326,7 +325,6 @@ def current_data_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(1)
         .cache()
     )
-    warm(stats)  # eager fill (one row per source)
     today = stats.agg(F.max("coverage_date").alias("today"))
     expected = stats.select("source_name", "expected_entity_count")
     latest = stats.select("source_name", "coverage_date")

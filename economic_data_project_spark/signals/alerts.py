@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions import ta
 from ..registry import query
@@ -178,8 +178,6 @@ def _inputs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("fedfunds_level"),
     )
     mo = register_session_cache(mo.repartition(1).cache())
-    warm(mo)  # eager fill: concurrent unfilled-cache readers each
-    # recompute the entry; one coordinated fill beats five racing ones
 
     def _davg_flag(flag: str):
         return F.sum(
@@ -202,7 +200,6 @@ def _inputs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("hy_oas_raw"),
     )
     ml = register_session_cache(ml.repartition(1).cache())
-    warm(ml)  # eager fill, same rationale as mo
 
     wd = ta.series_window("date")
     cpi = (

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions import ta
 from ..registry import query
@@ -158,8 +158,8 @@ def momentum_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # cached (r9): the two daily base aggregates below are re-derived
     # by every downstream signal layer that references them — 5 fact
-    # scans cold. Both are (entity x date) sized. repartition(1) +
-    # eager fill: see data_points.py for the rationale.
+    # scans cold. Both are (entity x date) sized. repartition(1): see
+    # data_points.py for the rationale.
     daily = register_session_cache(
         li.groupBy(
             F.col("l_returnflag").alias("symbol"),
@@ -169,7 +169,6 @@ def momentum_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(1)
         .cache()
     )
-    warm(daily)
     ws = Window.partitionBy("symbol").orderBy("date")
 
     def pct(n: int):
@@ -207,7 +206,6 @@ def momentum_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(1)
         .cache()
     )
-    warm(sector_daily)
     wsec = Window.partitionBy("sector").orderBy("date")
 
     def spct(n: int):

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table
 from ..registry import query
 from .ann import argmin_assign, topn_probes
@@ -264,13 +264,13 @@ def ann_cosine_topk_int8(
     from pyspark.sql.window import Window
 
     # the int8 code store is consumed by BOTH join sides (broadcast
-    # probe set + full corpus side); cached + eagerly filled, the
-    # quantization pipeline runs once per sf_dir instead of re-scanning
-    # and re-quantizing the float embeddings per side (2x wide IO at
-    # 100 TB, where the int8 store is a materialized table the float
-    # corpus was compressed INTO — queries should never touch floats)
-    codes = warm(
-        register_session_cache(_quantized_codes(spark, sf_dir).cache())
+    # probe set + full corpus side); cached, the quantization pipeline
+    # runs once per sf_dir instead of re-scanning and re-quantizing
+    # the float embeddings per side (2x wide IO at 100 TB, where the
+    # int8 store is a materialized table the float corpus was
+    # compressed INTO — queries should never touch floats)
+    codes = register_session_cache(
+        _quantized_codes(spark, sf_dir).cache()
     )
     q = codes.where(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -409,10 +409,10 @@ ORDER BY query_id, rank
 def ann_ivf_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    # the sizing count IS the cache fill (no warm(): a warm() count
-    # followed by a probe aggregate would scan the quantization
-    # pipeline twice per cold build — review finding r12; same
-    # one-action discipline as ann_ivf_topk's probe)
+    # the sizing count IS the cache fill (a separate fill followed by
+    # a probe aggregate would scan the quantization pipeline twice per
+    # cold build — review finding r12; same one-action discipline as
+    # ann_ivf_topk's probe)
     codes = register_session_cache(
         _quantized_codes(spark, sf_dir).cache()
     )

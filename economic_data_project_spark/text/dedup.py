@@ -52,7 +52,6 @@ from ..caches import (
     free_local_checkpoint,
     register_session_cache,
     register_session_checkpoint,
-    warm,
 )
 from ..catalog import load_table, spread_scan
 from ..functions.ta import emit, sql_emit
@@ -289,17 +288,6 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of once per consumer subtree. Size is the near-dup pair count
     # (dup-rate-bounded, tiny next to the corpus); same documented
     # lifetime discipline as the shingle/band caches above.
-    #
-    # Deliberately NOT warm()ed — and neither are the shingle/band
-    # caches above. Measured r11 (tools/ab_warm_dedup.py, quiet box,
-    # both orderings): eagerly filling all three at build made every
-    # consumer SLOWER (dedup_minhash_lsh cold 1.5s vs 1.1-1.3s,
-    # corpus_keep_list 3.5s vs 1.9s, manifest 5-6s vs 3.9s at sf0.1) —
-    # serialized fill jobs lose more to lost stage overlap than
-    # concurrent first-action fills lose to duplicate computes here.
-    # The eager-fill contract (caches.py) stays reserved for caches
-    # whose duplicate fill is provably the dominant cost (the
-    # incremental split-bound case, the sign-LSH normed store).
     return register_session_cache(
         verified.select("doc_a", "doc_b", "jaccard").cache()
     )
@@ -792,8 +780,8 @@ def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 from ..functions.vectors import (  # noqa: E402  (shared determinism notes)
-    DOT_DUCK as _DOT_DUCK,
-    DOT_SPARK as _DOT_SPARK,
+    COS_DUCK as _COS_DUCK,
+    COS_SPARK as _COS_SPARK,
     NORM_DUCK as _NORM_DUCK,
     NORM_SPARK as _NORM_SPARK,
 )
@@ -806,8 +794,9 @@ WITH n AS (
 )
 SELECT vec_a, vec_b, cosine FROM (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         ROUND({_DOT_DUCK.format(a="a.embedding", b="b.embedding")}
-               / (a.norm * b.norm), 9) AS cosine
+         ROUND({_COS_DUCK.format(
+             a="a.embedding", b="b.embedding", na="a.norm", nb="b.norm"
+         )}, 9) AS cosine
   FROM n a JOIN n b ON a.vec_id < b.vec_id
 )
 WHERE cosine >= {_COSINE_THRESHOLD}
@@ -994,21 +983,16 @@ def _emb_lsh_pairs(
     # normed-vector store, computed ONCE and cached: the signature
     # explode (self-joined = 2 subtrees) and both verification sides
     # read it, so the cold plan makes one pass over `embeddings`
-    # instead of four. warm() per the module eager-fill contract
-    # (ADVICE r10): four concurrent readers of an UNFILLED entry each
-    # recompute it, so without the fill the one-pass claim only holds
-    # from the second action on. The 100 TB shape: norms+vectors are a
+    # instead of four. The 100 TB shape: norms+vectors are a
     # materialized table written once next to the corpus; the cache is
     # its single-JVM analogue (same registry discipline as the minhash
     # shingle frame, caches.py).
-    n = warm(
-        register_session_cache(
-            e.select(
-                "vec_id",
-                "embedding",
-                F.expr(_NORM_SPARK.format(v="embedding")).alias("norm"),
-            ).cache()
-        )
+    n = register_session_cache(
+        e.select(
+            "vec_id",
+            "embedding",
+            F.expr(_NORM_SPARK.format(v="embedding")).alias("norm"),
+        ).cache()
     )
     if scheme == "planes":
         # SIZE-GATED cache (r16, VERDICT r15 #1): the band self-join
@@ -1017,20 +1001,18 @@ def _emb_lsh_pairs(
         # per side. Above the LSH cutover (the only place the auto
         # route runs this scheme) the frame — (vec_id, band, band_val),
         # n*bands narrow rows, the materialized signature table a
-        # 100 TB deployment would write anyway — is cached + eager-
-        # filled so the GEMM runs ONCE (warm() because two concurrent
-        # readers of an unfilled entry would each run the fill; the
-        # `n` cache precedent above). BELOW the cutover (every driver/
-        # bench scale, ~2000 vectors) the r15 unconditional cache+warm
-        # was the round's one driver-measured regression (2.79s ->
-        # 5.22s): the count job + cache materialization + extra stage
-        # boundary cost ~2.4s to save a microsecond-scale duplicated
-        # GEMM. asNondeterministic() (in _emb_plane_signatures) already
-        # kills the 4x optimizer duplication for free, so small corpora
-        # just evaluate the kernel once per join side.
+        # 100 TB deployment would write anyway — is cached so the GEMM
+        # runs ONCE. BELOW the cutover (every driver/bench scale, ~2000
+        # vectors) the r15 unconditional cache + eager count was the
+        # round's one driver-measured regression (2.79s -> 5.22s): the
+        # count job + cache materialization + extra stage boundary
+        # cost ~2.4s to save a microsecond-scale duplicated GEMM.
+        # asNondeterministic() (in _emb_plane_signatures) already kills
+        # the 4x optimizer duplication for free, so small corpora just
+        # evaluate the kernel once per join side.
         sig = _emb_plane_signatures(n, n_bands, r, dim)
         if n_vectors is not None and n_vectors > _EMB_LSH_MIN:
-            sig = warm(register_session_cache(sig.cache()))
+            sig = register_session_cache(sig.cache())
     else:
         sig = n.select(
             "vec_id",
@@ -1078,8 +1060,11 @@ def _emb_lsh_pairs(
         .withColumn(
             "cosine",
             F.round(
-                F.expr(_DOT_SPARK.format(a="emb_a", b="emb_b"))
-                / (F.col("norm_a") * F.col("norm_b")),
+                F.expr(
+                    _COS_SPARK.format(
+                        a="emb_a", b="emb_b", na="norm_a", nb="norm_b"
+                    )
+                ),
                 9,
             ),
         )
@@ -1087,6 +1072,15 @@ def _emb_lsh_pairs(
         .select("vec_a", "vec_b", "cosine")
         .orderBy("vec_a", "vec_b")
     )
+
+
+def _unit_rows(m: np.ndarray) -> np.ndarray:
+    """Row-normalize ``m``. Zero-norm guard: a zero row stays all-zero
+    (no divide-by-zero warning), so its cosine with anything is 0 and
+    it joins no pair — the kernel's side of the NULL-cosine contract
+    the SQL paths keep through ``COS_SPARK``/``COS_DUCK``."""
+    nrm = np.linalg.norm(m, axis=1, keepdims=True)
+    return np.divide(m, nrm, out=np.zeros_like(m), where=nrm > 0)
 
 
 @query("dedup_embedding_cosine", oracle=_EMB_NEAR_ORACLE)
@@ -1140,10 +1134,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket list is dimension-sized).
     dense_cap = 4 * (int(probe["n"]) // _BLOCK + 1)
     if n_buckets > dense_cap:
-        buckets = warm(
-            register_session_cache(
-                e.select("bucket").distinct().cache()
-            )
+        buckets = register_session_cache(
+            e.select("bucket").distinct().cache()
         )
     else:
         buckets = spark.range(n_buckets).select(
@@ -1176,8 +1168,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         B = np.stack(b_rows["embedding"].to_numpy()).astype(np.float64)
         a_ids = a_rows["vec_id"].to_numpy()
         b_ids = b_rows["vec_id"].to_numpy()
-        An = A / np.linalg.norm(A, axis=1, keepdims=True)
-        Bn = B / np.linalg.norm(B, axis=1, keepdims=True)
+        An, Bn = _unit_rows(A), _unit_rows(B)
         out_a, out_b, out_c = [], [], []
         for i in range(An.shape[0]):  # GEMV per row keeps memory flat
             cos = np.round(Bn @ An[i], 9)
@@ -1739,10 +1730,8 @@ def dedup_incremental_minhash(
     # 3 reps/lane) measured THIS shape cold 4.5s / warm 3.1-3.7s vs the
     # r9 narrow-doc-scan shape cold 7.3-8.4s / warm 5.3-7.1s at sf0.1.
     # The cached-agg broadcast is not just scan-count-correct, it is
-    # faster: the broadcast stage runs before the band stages and FILLS
-    # the shingle cache (an implicit warm()), where the r9 shape's
-    # first band job hit the unfilled entry from several concurrent
-    # subtrees, each recomputing the shingle transform. The recorded
+    # faster: the broadcast stage runs before the band stages and
+    # fills the shingle cache they then read. The recorded
     # r10 5.13s bench row was box contention (load_start 1.13).
     split = F.broadcast(
         sh.agg(

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table
 from ..registry import query
 
@@ -162,8 +162,7 @@ def doc_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct doc-term pair), same acknowledged posture as the
     # char-trigram cache (text/lm_quality.py): at 100 TB this is the
     # materialized term-frequency TABLE every TF-IDF system writes
-    # once and joins twice, not an executor cache. Eager count — the
-    # two consumers materialize concurrently in the scored join's job.
+    # once and joins twice, not an executor cache.
     tok = register_session_cache(
         docs.select(
             "doc_id", F.explode(F.expr(_TOKENS)).alias("term")
@@ -172,7 +171,6 @@ def doc_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("tf"))
         .cache()
     )
-    warm(tok)
     # corpus size rides along as a 1-row broadcast aggregate folded
     # into the same job (not an eager docs.count() action): the
     # term-stats frame carries n_docs to every scored row.

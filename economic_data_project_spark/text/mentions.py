@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table
 from ..registry import query
 
@@ -157,20 +157,18 @@ def term_co_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # the deduped mention set is TINY (<= |watchlist| terms per doc)
     # but deriving it means a full regexp pass over the text column —
-    # cached + eagerly filled so the self-join's two subtrees share ONE
-    # corpus scan instead of re-extracting per side (2x wide IO at
-    # 100 TB; there the mention set is a materialized extraction table)
-    exploded = warm(
-        register_session_cache(
-            docs.select(
-                "doc_id",
-                F.explode(
-                    F.regexp_extract_all("text", F.lit(_PATTERN), 1)
-                ).alias("term"),
-            )
-            .distinct()
-            .cache()
+    # cached so the self-join's two subtrees share ONE corpus scan
+    # instead of re-extracting per side (2x wide IO at 100 TB; there
+    # the mention set is a materialized extraction table)
+    exploded = register_session_cache(
+        docs.select(
+            "doc_id",
+            F.explode(
+                F.regexp_extract_all("text", F.lit(_PATTERN), 1)
+            ).alias("term"),
         )
+        .distinct()
+        .cache()
     )
     a = exploded.select(
         F.col("doc_id"), F.col("term").alias("term_a")

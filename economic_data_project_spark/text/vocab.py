@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache, warm
+from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions.ta import emit, sql_emit
 from ..registry import query
@@ -174,15 +174,12 @@ def bigram_pmi_collocations(
     # bounded (Heaps-sublinear in corpus size), not corpus-bounded, but
     # still potentially large — so NO repartition(1); at 100 TB this is
     # the materialized census table a phrase-detection pass writes once
-    # and reads four times. Eager count: the marginal joins materialize
-    # concurrently in one job (see data_points.py on unfilled-cache
-    # races).
+    # and reads four times.
     bigrams = register_session_cache(
         pairs.groupBy("w1", "w2")
         .agg(F.count("*").cast("long").alias("c_xy"))
         .cache()
     )
-    warm(bigrams)
     left_m = bigrams.groupBy("w1").agg(F.sum("c_xy").alias("c_x"))
     right_m = bigrams.groupBy("w2").agg(F.sum("c_xy").alias("c_y"))
     tot = F.broadcast(bigrams.agg(F.sum("c_xy").alias("n")))

@@ -58,32 +58,54 @@ def test_repeat_builder_calls_do_not_grow_registry(spark):
     assert len(caches._SESSION_CACHES) == n_once
 
 
-def test_lazy_builds_suppresses_warm_fill(spark):
-    """Under lazy_builds() a builder constructs its plan without
-    running jobs: warm() is a no-op, the cache registers but stays
-    unfilled, and a later action fills it lazily with correct data."""
-    caches.free_session_caches()
-    sc = spark.sparkContext._jsc.sc()
-    base = {info.id() for info in sc.getRDDStorageInfo()}
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") * 2).alias("v")
-    )
-    with caches.lazy_builds():
-        handle = caches.warm(
-            caches.register_session_cache(df.cache())
+def test_unfilled_cache_fills_once_under_concurrent_readers(spark):
+    """Builders return lazy plans whose registered caches fill during
+    the first action that reads them, so that first action may read
+    one UNFILLED entry from many subtrees at once (a fan-out union, a
+    self-join). Spark must compute the entry once, not once per
+    reader: a UDF counting its evaluations in an accumulator runs
+    exactly once per row in each action. If a Spark upgrade makes
+    concurrent readers refill the cache, this test names the cause."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    n_rows = 400
+    for shape in ("union", "self_join"):
+        caches.free_session_caches()
+        evals = spark.sparkContext.accumulator(0)
+
+        @F.udf("long")
+        def counted(x):
+            evals.add(1)
+            return x * 2
+
+        base = caches.register_session_cache(
+            spark.range(0, n_rows, 1, 8)
+            .select("id", counted("id").alias("v"))
+            .cache()
         )
-        # registered but NOT filled: no job ran
-        assert caches._SESSION_CACHES
-        level = handle.storageLevel
-        assert level.useMemory or level.useDisk  # marked for caching
-        new = [
-            info
-            for info in sc.getRDDStorageInfo()
-            if info.id() not in base
-        ]
-        assert not new, "lazy_builds must not run fill jobs"
-    # outside the context the fill happens on first action
-    assert handle.count() == 100
+        if shape == "union":
+            out = reduce(
+                DataFrame.unionByName,
+                [
+                    base.where(F.col("id") % 4 == k).select(
+                        F.lit(k).alias("branch"), "id", "v"
+                    )
+                    for k in range(4)
+                ]
+                + [base.select(F.lit(4).alias("branch"), "id", "v")],
+            )
+            # every row once per branch k plus once in the full branch
+            expected = 2 * sum(2 * i for i in range(n_rows))
+        else:
+            out = base.alias("a").join(
+                base.alias("b"), F.col("a.id") == F.col("b.v")
+            ).select(F.col("b.v"))
+            expected = sum(2 * i for i in range(n_rows // 2))
+        # the action reads `v`, so no reader can prune the UDF away
+        assert out.agg(F.sum("v")).head()[0] == expected
+        assert evals.value == n_rows, (shape, evals.value)
     caches.free_session_caches()
 
 

@@ -842,6 +842,98 @@ def test_planes_registered_surface_equals_brute_on_driver_corpus(spark):
     assert got == expected
 
 
+def _zero_vector_corpus(path) -> tuple[int, list]:
+    """A small embeddings corpus with planted near-dup pairs plus one
+    zero vector and a partner it shares a band with under BOTH sign-LSH
+    schemes. Every sign bit of a zero vector is 1 (0 >= 0), so an
+    all-positive partner matches every coordinate window, and the
+    partner is drawn until one hyperplane band of the policy the
+    planes surface applies at this n is all-ones too. Returns the zero
+    vector's id and the vectors."""
+    from economic_data_project_spark.text.dedup import (
+        _emb_hyperplanes,
+        _plane_policy,
+    )
+
+    rng = np.random.RandomState(5)
+    dim = 8
+    base = rng.normal(size=(10, dim))
+    vecs = [v for b in base for v in (b, b + 0.05 * rng.normal(size=dim))]
+    _, bands, bits = _plane_policy(len(vecs) + 2)
+    H = _emb_hyperplanes(bands, bits, dim).T
+    while True:
+        partner = np.abs(rng.normal(size=dim))
+        if ((partner @ H) >= 0).reshape(bands, bits).all(axis=1).any():
+            break
+    zero_id = len(vecs)
+    vecs += [np.zeros(dim), partner]
+    pd.DataFrame(
+        {
+            "vec_id": range(len(vecs)),
+            "embedding": [list(map(float, v)) for v in vecs],
+        }
+    ).to_parquet(str(path / "embeddings.parquet"), index=False)
+    return zero_id, vecs
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_embedding_cosine",
+        "dedup_embedding_cosine_lsh",
+        "dedup_embedding_cosine_lsh_planes",
+    ],
+)
+def test_emb_cosine_zero_vector_joins_no_pair(spark, tmp_path, name):
+    """Zero-norm contract (functions/vectors.py COS_SPARK/COS_DUCK) on
+    the float near-dup surfaces: a zero embedding has a NULL cosine,
+    so it is in no output pair, and sharing an LSH band with another
+    vector must not raise ANSI DIVIDE_BY_ZERO in the verify step. The
+    brute path's NumPy kernel must not divide by its zero norm either
+    (no warning), and it still MATCHes the DuckDB oracle."""
+    from economic_data_project_spark.registry import all_oracles
+    from economic_data_project_spark.text.dedup import _COSINE_THRESHOLD
+    from tests.conftest import compare_with_oracle
+
+    zero_id, vecs = _zero_vector_corpus(tmp_path)
+    got = sorted(
+        (r.vec_a, r.vec_b, r.cosine)
+        for r in all_queries()[name](spark, str(tmp_path)).collect()
+    )
+    assert got
+    assert all(zero_id not in (a, b) for a, b, _ in got), got
+
+    ids = [i for i in range(len(vecs)) if i != zero_id]
+    V = np.stack([vecs[i] for i in ids])
+    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
+    cos = np.round(Vn @ Vn.T, 9)
+    brute = {
+        (ids[i], ids[j], float(cos[i, j]))
+        for i in range(len(ids))
+        for j in range(i + 1, len(ids))
+        if cos[i, j] >= _COSINE_THRESHOLD
+    }
+    if name == "dedup_embedding_cosine":
+        from economic_data_project_spark.text.dedup import _unit_rows
+
+        assert set(got) == brute
+        with np.errstate(all="raise"):
+            unit = _unit_rows(np.stack(vecs))
+        assert not unit[zero_id].any()
+        con = duckdb_connect(str(tmp_path))
+        try:
+            ok, msg = compare_with_oracle(
+                spark, all_queries()[name], all_oracles()[name],
+                str(tmp_path), con=con,
+            )
+        finally:
+            con.close()
+        assert ok, msg
+    else:
+        # LSH recall is candidates-limited: every pair found is exact
+        assert set(got) <= brute
+
+
 def test_ivf_int8_oracle_parity_with_zero_vector_in_seed_range(
     spark, tmp_path
 ):

@@ -903,7 +903,7 @@ def registry_plan_audit(spark):
     (VERDICT r10 #4: the fact-scan and wide-column gates each rebuilt
     all 158 plans with per-query cache frees — a large share of the
     suite's wall time). plans.audit.registry_audit builds each query's
-    cold plan once under lazy_builds and emits every metric."""
+    cold plan once, as production builds it, and emits every metric."""
     from economic_data_project_spark.plans.audit import registry_audit
 
     return registry_audit(spark, SF_DIR)
@@ -969,7 +969,7 @@ def test_registry_wide_column_rescans(registry_plan_audit):
 
 # Builders that legitimately run Spark jobs at CONSTRUCTION, each with
 # the reason the job is load-bearing rather than an eager-probe leak.
-# Everything else must build with ZERO jobs under lazy_builds — the gate
+# Everything else must build with ZERO jobs — the gate
 # exists to catch the next `.count()`/`.head()` probe sneaking into a
 # builder (VERDICT r10 #6), which at 100 TB is an unbudgeted full pass.
 _BUILD_JOB_EXEMPT = {
@@ -1022,12 +1022,13 @@ _BUILD_JOB_EXEMPT = {
 def test_registry_builders_run_no_jobs_at_construction(
     registry_plan_audit,
 ):
-    """Under lazy_builds(), constructing a registered query must run
-    ZERO Spark jobs unless the builder is in the documented exempt set
-    above — warm() fills are suppressed, catalog schema inference is
-    cached (catalog._SCHEMA_CACHE) and primed by the sweep, so any job
-    left is an eager probe (`.count()`, `.head()`, an un-suppressed
-    fill) hiding in a builder. Membership, not counts: iteration and
+    """Constructing a registered query, exactly as production does,
+    must run ZERO Spark jobs unless the builder is in the documented
+    exempt set above — builders return lazy plans whose caches fill on
+    first action, catalog schema inference is cached
+    (catalog._SCHEMA_CACHE) and primed by the sweep, so any job left
+    is an eager probe (`.count()`, `.head()`, an eager cache fill)
+    hiding in a builder. Membership, not counts: iteration and
     fit job counts vary with data scale."""
     offenders = {
         name: a["build_jobs"]

@@ -24,10 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench as bench_mod  # noqa: E402
 from economic_data_project_spark import registry  # noqa: E402
-from economic_data_project_spark.caches import (  # noqa: E402
-    free_session_caches,
-    lazy_builds,
-)
+from economic_data_project_spark.caches import free_session_caches  # noqa: E402
 from economic_data_project_spark.session import (  # noqa: E402
     codegen_compiles,
     get_spark,
@@ -125,11 +122,7 @@ def main() -> None:
             os.makedirs(args.plans, exist_ok=True)
             free_session_caches()
             spark.catalog.clearCache()
-            # ADVICE r15: suppress builders' warm() fills during plan
-            # capture so the dumped plan is the cold shape being
-            # compared, not a cache-warm InMemoryTableScan variant.
-            with lazy_builds():
-                df = qs[name](spark, sf_dir)
+            df = qs[name](spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )

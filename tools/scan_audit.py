@@ -15,10 +15,10 @@ string: it duplicates shared DAG nodes — one shingle subtree
 re-rendered 24x in the manifest plan — and executed-AQE cached children
 reset indentation, breaking line-based IMR scoping), formatted-explain
 node ids for the wide-column count, and a per-builder job group for
-construction jobs. Runs under caches.lazy_builds() so builders
-construct plans without paying eager cache fills (the iterative
-builders — hierarchy, connected components — still execute; their
-localCheckpoint truncation is load-bearing).
+construction jobs. Builders run exactly as in production: they return
+lazy plans, so only the documented probes, fits and iterative builders
+(hierarchy, connected components — their localCheckpoint truncation is
+load-bearing) run jobs at construction.
 """
 
 from __future__ import annotations
