@@ -13,8 +13,9 @@ stamps `n_runs` + per-rep `run_totals` so a single-run artifact
 self-identifies as low-confidence and tools/bench_compare.py can refuse
 to adjudicate from it (VERDICT r13: 1.4x same-gate host variance).
 
-"Cache-cold" means the engine's data caches (session caches and the SQL
-cache), not the JVM's generated-code cache. ``get_spark`` sizes that
+"Cache-cold" means the engine's data caches (every cached frame and
+session checkpoint, dropped by caches.free_session_caches), not the
+JVM's generated-code cache. ``get_spark`` sizes that
 cache to the whole registry (session.CODEGEN_CACHE_ENTRIES), so
 repetitions 2 and later reuse the classes repetition 1 compiled. Since
 that change, headline medians are lower for a reason unrelated to any
@@ -35,16 +36,16 @@ from economic_data_project_spark.caches import free_session_caches
 from economic_data_project_spark.session import get_spark
 
 
-def _isolate_lane(spark) -> None:
-    """Lane boundary: drop every session-lifetime cache (registry +
-    whole SQL cache) so the next lane starts cold. Without this the
+def _isolate_lane() -> None:
+    """Lane boundary: free_session_caches() drops every cached frame and
+    session checkpoint so the next lane starts cold. Without this the
     longdoc lane's timings ride on however much sf0.1 cache residency
     the headline lane left in the 8 GiB driver — which grows every
     round as more builders cache, and which made the longdoc rows
     drift monotonically r7->r9 (VERDICT r9 'What's wrong' #1). The
     lane's job is to measure the operator, not the residue."""
     free_session_caches()
-    spark.catalog.clearCache()
+
 
 # Headline set: one per operator family; kept stable across rounds so
 # BENCH_r{N}.json is comparable round-over-round (only ever append).
@@ -499,7 +500,7 @@ def main() -> None:
                 )
                 break
             timings: dict[str, float] = {}
-            _isolate_lane(spark)  # every rep starts cache-cold
+            _isolate_lane()  # every rep starts cache-cold
             for name in names:
                 t0 = time.perf_counter()
                 df = qs[name](spark, sf_dir)
@@ -509,7 +510,7 @@ def main() -> None:
             # Skew-stress pair (broadcast disabled so the shuffle join
             # is real; not part of the headline total — these measure a
             # technique, not an operator).
-            _isolate_lane(spark)
+            _isolate_lane()
             old_thresh = spark.conf.get(
                 "spark.sql.autoBroadcastJoinThreshold"
             )
@@ -536,7 +537,7 @@ def main() -> None:
             # headline total). Starts cold: the lane is the quadratic-
             # regression tripwire, and its per-token costs must not
             # depend on headline-lane cache residency.
-            _isolate_lane(spark)
+            _isolate_lane()
             for name in LONGDOC:
                 if name not in qs:
                     continue

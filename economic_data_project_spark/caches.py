@@ -1,20 +1,15 @@
-"""Session-lifetime cache registry (ADVICE r7-r9 unpersist discipline).
+"""Session-lifetime caches and how a session owner frees them.
 
 Several builders cache frames that MUST outlive the builder call — the
 returned DataFrames read them lazily, so the builder cannot unpersist
 them itself (dedup shingle/band/verified-pair caches, the trigram
-instance frame, the dimension-sized fan-out aggregates). Every such
-cache registers here, and a session owner (a driver between scale
-factors, the oracle sweep after a corpus, a bench lane boundary, a
-notebook user) frees them all with one call:
+instance frame, the dimension-sized fan-out aggregates). Builders call
+``.cache()`` directly: Spark's CacheManager already tracks every entry
+and dedups by analyzed plan, so a repeat build on the same sf_dir
+reuses its entry instead of adding one.
 
-    from economic_data_project_spark.caches import free_session_caches
-    free_session_caches()
-
-The next query on any sf_dir simply rebuilds its caches.
-
-Memory budget (what lives here, and how big). Registered frames fall
-into two classes:
+Memory budget (what lives here, and how big). Cached frames fall into
+two classes:
 
 * **Dimension-sized aggregates** — the fan-out panels (series x month,
   source x term, sector x day): bounded by the dimension product, KBs
@@ -28,76 +23,52 @@ into two classes:
 DataFrame caches store compressed columnar batches at MEMORY_AND_DISK:
 under pressure in this single-JVM engine (8 GiB driver, session.py)
 partitions spill to local disk and LRU-evict, so an oversized entry
-degrades to recompute, never to OOM-by-cache. CacheManager dedups by
-analyzed plan, so entries are bounded at one per (builder, sf_dir). The
-*lifetime* policy is this registry: free between corpora / bench lanes.
-At 100 TB none of the corpus-proportional frames would be executor
-caches at all — each is a materialized signature/scoring TABLE written
-once with explicit retention; the registry is the single-JVM analogue.
+degrades to recompute, never to OOM-by-cache. Entries are bounded at one
+per (builder, sf_dir). At 100 TB none of the corpus-proportional frames
+would be executor caches at all — each is a materialized
+signature/scoring TABLE written once with explicit retention.
 
-Fill-once contract. A builder returns a lazy plan: a registered cache
-fills during the first action that reads it, and no builder runs a job
-to pre-fill one. That first action may read the unfilled entry from
-many concurrent subtrees (a 10-branch fan-out union, a self-join);
-Spark computes each cached partition once under the block manager's
-write lock and every other reader waits for it, so the entry is still
-computed exactly once (pinned by tests/test_caches.py::
+Fill-once contract. A builder returns a lazy plan: a cache fills during
+the first action that reads it, and no builder runs a job to pre-fill
+one. That first action may read the unfilled entry from many concurrent
+subtrees (a 10-branch fan-out union, a self-join); Spark computes each
+cached partition once under the block manager's write lock and every
+other reader waits for it, so the entry is still computed exactly once
+(pinned by tests/test_caches.py::
 test_unfilled_cache_fills_once_under_concurrent_readers). Only the
 iterative builders (pointer-doubling hierarchy, connected components),
 the bounded routing/sizing probes and the ML fits run jobs at build
 (tests/test_plans.py::_BUILD_JOB_EXEMPT).
 
-Thread-safety: the registry is lock-guarded and handles are deduped by
-``DataFrame.semanticHash()`` (+ schema string, ADVICE r10), so the
-thread-parallel oracle sweep can register/free concurrently without
-growing the list. A ``free`` racing another thread's in-flight cache
-fill simply leaves that consumer to recompute lazily — correct, just
-cold (tests/test_caches.py exercises free-mid-sweep). That safety
-holds for CACHE entries only: checkpoint entries release destructively
-(see free_session_caches), so mid-sweep frees that may race a live
-checkpoint consumer must pass ``checkpoints=False``.
+Free contract. ``free_session_caches()`` drops EVERY cached frame in the
+session, not only the builders' — so call it only at a session-owner
+boundary (a driver between scale factors, the oracle sweep after a
+corpus, a bench lane boundary, a notebook user):
+
+    from economic_data_project_spark.caches import free_session_caches
+    free_session_caches()
+
+The next query on any sf_dir simply rebuilds its caches. A consumer
+still holding a frame from before the free recomputes it lazily, with
+one exception that makes the boundary rule load-bearing:
+sources/files.py caches the parsed frame its corrupt-record split reads
+twice, and that cache is needed for CORRECTNESS (an uncached quarantine
+side parses fewer columns and disagrees with the clean side about
+partially corrupt rows). A free between building such a split and
+reading both halves breaks the split.
 """
 
 from __future__ import annotations
 
 import threading
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-_LOCK = threading.RLock()
-# plan-key -> handle; dedup keeps repeat builder calls (same sf_dir ->
-# same analyzed plan -> same key) from accumulating duplicate handles.
-_SESSION_CACHES: dict[object, DataFrame] = {}
+_LOCK = threading.Lock()
 # localCheckpoint frames that escape into returned plans (hierarchy /
-# connected-components final generations): DataFrame.unpersist cannot
-# free LogicalRDD storage, so these are freed via free_local_checkpoint.
+# connected-components final generations): CacheManager cannot see
+# LogicalRDD storage, so these are freed via free_local_checkpoint.
 _SESSION_CHECKPOINTS: list[DataFrame] = []
-
-
-def _plan_key(df: DataFrame) -> object:
-    """Dedup key for a registered handle. semanticHash is stable across
-    re-built identical plans (the repeat-builder case) but only 32 bits
-    — a collision between two DISTINCT live plans would silently replace
-    one handle, leaving its frame cached but unreachable by
-    free_session_caches until session end (ADVICE r10). The schema
-    string rides along as a cheap collision-resistant component; a
-    same-schema collision remains possible but now needs both a 1-in-4B
-    hash collision AND an identical schema. A hash failure falls back to
-    object identity (no dedup, still correct)."""
-    try:
-        return ("sh", df.semanticHash(), str(df.schema))
-    except Exception:
-        return ("id", id(df))
-
-
-def register_session_cache(df: DataFrame) -> DataFrame:
-    """Track a cached frame whose lifetime exceeds its builder; returns
-    the frame so call sites stay one expression (`register_session_cache(
-    x.cache())`). Repeat invocations on the same sf_dir resolve to the
-    same plan key and replace the prior handle in place."""
-    with _LOCK:
-        _SESSION_CACHES[_plan_key(df)] = df
-    return df
 
 
 def register_session_checkpoint(df: DataFrame) -> DataFrame:
@@ -110,49 +81,31 @@ def register_session_checkpoint(df: DataFrame) -> DataFrame:
     return df
 
 
-def free_session_caches(
-    blocking: bool = False, checkpoints: bool = True
-) -> int:
-    """Unpersist every registered session-lifetime cache and (by
-    default) release every registered escaped localCheckpoint; clears
-    the registry and returns the number actually freed.
+def free_session_caches() -> int:
+    """Clear the active session's CacheManager, then release every
+    registered escaped localCheckpoint; returns the number of
+    checkpoints released.
 
-    Lifetime contract (ADVICE r10): the two classes differ in what a
-    free COSTS a live consumer. *Cache* entries are recomputable —
-    unpersisting under a consumer merely makes its next action cold, so
-    cache frees are safe at any time. *Checkpoint* entries are released
-    DESTRUCTIVELY: a localCheckpoint truncates lineage, so its
-    persisted RDD is the frame's only copy, and a free racing a live
-    consumer of a checkpoint-backed result (thread_structure /
-    dedup-components output held across the sweep) fails that consumer
-    with checkpoint-block-not-found instead of recomputing. Therefore
-    release checkpoints only at session-owner boundaries (between scale
-    factors / corpora / bench lanes, after all in-flight consumers are
-    done); a mid-sweep caller that cannot guarantee that passes
-    ``checkpoints=False`` to free the recomputable caches only."""
+    ``SparkSession.active()`` (not ``getActiveSession()``) so a free
+    from a thread that never touched the session still finds it.
+    Checkpoint releases are DESTRUCTIVE: a localCheckpoint truncates
+    lineage, so its persisted RDD is the frame's only copy, and a free
+    racing a live consumer of a checkpoint-backed result
+    (thread_structure / dedup-components output) fails that consumer
+    with checkpoint-block-not-found instead of recomputing — one more
+    reason to free only at a session-owner boundary."""
+    try:
+        SparkSession.active().catalog.clearCache()
+    except Exception:
+        # a stopped or never-started session must not break the
+        # sweep — freeing is an optimization
+        pass
     with _LOCK:
-        handles = list(_SESSION_CACHES.values())
-        _SESSION_CACHES.clear()
-        if checkpoints:
-            ckpts = list(_SESSION_CHECKPOINTS)
-            _SESSION_CHECKPOINTS.clear()
-        else:
-            ckpts = []
-    freed = 0
-    for df in handles:
-        try:
-            df.unpersist(blocking)
-            freed += 1
-        except Exception:
-            # a stopped session or an already-dropped plan must not
-            # break the sweep — freeing is an optimization
-            pass
-    for df in ckpts:
-        # count only successful releases, mirroring the cache branch —
-        # a swallowed py4j failure must not overstate what was freed
-        if free_local_checkpoint(df):
-            freed += 1
-    return freed
+        ckpts = list(_SESSION_CHECKPOINTS)
+        _SESSION_CHECKPOINTS.clear()
+    # count only successful releases — a swallowed py4j failure must
+    # not overstate what was freed
+    return sum(free_local_checkpoint(df) for df in ckpts)
 
 
 def free_local_checkpoint(df: DataFrame) -> bool:

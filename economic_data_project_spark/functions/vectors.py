@@ -17,6 +17,8 @@ pair space never materializes.
 
 from __future__ import annotations
 
+import numpy as np
+
 # -------------------------------------------------- Spark SQL expressions
 
 DOT_SPARK = (
@@ -35,6 +37,16 @@ NORM_SPARK = (
 # cosine (NULLIF turns Spark's ANSI DIVIDE_BY_ZERO into NULL; DuckDB
 # already returns NULL), ranked last by DESC orderings in both engines.
 COS_SPARK = "(" + DOT_SPARK + " / NULLIF({na} * {nb}, 0))"
+
+
+def unit_rows(m: np.ndarray) -> np.ndarray:
+    """Row-normalize ``m`` — the NumPy kernels' side of the zero-norm
+    contract. A zero row stays all-zero (no divide-by-zero warning), so
+    its cosine with anything is 0 and it passes no positive threshold;
+    a kernel that RANKS cosines must still place it below every real
+    cosine, as COS_SPARK's NULL is ranked."""
+    nrm = np.linalg.norm(m, axis=1, keepdims=True)
+    return np.divide(m, nrm, out=np.zeros_like(m), where=nrm > 0)
 
 # ------------------------------------------------------ DuckDB oracle side
 

@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions.parity import davg, dsum, sql_davg, sql_dsum
 from ..functions import ta
@@ -443,7 +442,6 @@ def sector_dispersion_leaders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(1)
         .cache()
     )
-    monthly = register_session_cache(monthly)
     means = monthly.groupBy("month").agg(
         davg("rev").alias("mean_rev"), F.count("*").alias("n_nations")
     )

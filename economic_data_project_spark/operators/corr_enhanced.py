@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions import ta
 from ..functions.parity import (
@@ -369,9 +368,7 @@ def correlation_analysis_enhanced(
     # for its means join); uncached the cold plan re-ran the fact
     # aggregates 7+5 times (plan-gated). repartition(1): see
     # data_points.py for the reduce-stage rationale.
-    panel = register_session_cache(
-        _panel(spark, sf_dir).repartition(1).cache()
-    )
+    panel = _panel(spark, sf_dir).repartition(1).cache()
     pair = ["symbol", "series_code"]
 
     overall = _group_corr(panel, pair).where(

@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions import ta
 from ..functions.parity import (
@@ -223,7 +222,7 @@ def interesting_data_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final merge over every map task's partials through one task at
     # scale; repartition adds a separate exchange that moves only the
     # ~2k aggregated rows, keeping the reduce 32-way.
-    panel = register_session_cache(
+    panel = (
         li.join(F.broadcast(su), li.l_suppkey == su.s_suppkey)
         .join(F.broadcast(na), su.s_nationkey == na.n_nationkey)
         .groupBy(
@@ -341,7 +340,7 @@ def interesting_data_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 3. forward-return correlation screen.
     # month-dimension-sized, same caching rationale as the panel
-    market = register_session_cache(
+    market = (
         li.groupBy(
             F.trunc(F.to_date("l_shipdate"), "month").alias("month")
         )

@@ -49,7 +49,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..registry import query
 
@@ -233,9 +232,7 @@ def series_latest_aggregates(
     # aggregates (12 lineitem + 12 orders scans cold; plan-gated).
     # repartition(1), not coalesce(1): keep the agg reduces parallel
     # and move only the aggregated rows.
-    store = register_session_cache(
-        series_store(spark, sf_dir).repartition(1).cache()
-    )
+    store = series_store(spark, sf_dir).repartition(1).cache()
 
     bounds = store.agg(
         F.max("date").alias("end_date"),
@@ -450,7 +447,7 @@ def series_monthly_interpolation(
     # cached (r9): (series x month) sized, read by the per-series date
     # bounds AND the spine gap join — 3 fact scans cold otherwise.
     # repartition(1): see data_points.py.
-    monthly = register_session_cache(monthly.repartition(1).cache())
+    monthly = monthly.repartition(1).cache()
     db = monthly.groupBy("series_code", "series_name").agg(
         F.min("month_date").alias("min_date"),
         F.max("month_date").alias("max_date"),

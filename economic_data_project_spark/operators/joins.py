@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache
 from ..catalog import load_table, spread_scan
 from ..functions.parity import (
     centered_corr,
@@ -355,7 +354,7 @@ def pairwise_priority_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached (r9): (priority x date) sized, read by both sides of the
     # pair self-join and again by the means/corr passes — 4 fact scans
     # cold. repartition(1): see data_points.py.
-    daily = register_session_cache(
+    daily = (
         o.groupBy(
             F.col("o_orderpriority").alias("pr"),
             F.to_date("o_orderdate").alias("d"),

@@ -29,7 +29,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions.parity import (
     centered_corr,
@@ -229,7 +228,7 @@ def leading_econ_return_indicator(
     # corr table, and the quintile pass — and uncached each re-ran the
     # full lineitem join-agg AND the orders indicator agg (3 scans of
     # each fact cold). repartition(1): see data_points.py.
-    panel = register_session_cache(
+    panel = (
         sector_returns.join(F.broadcast(ind), on="month")
         .where(F.col("econ").isNotNull())
         .withColumn("quarterly_return_pct", F.col("q1"))

@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions import ta
 from ..registry import query
@@ -147,7 +146,7 @@ def market_analysis_return(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per calendar-offset horizon by the battery's self-joins —
     # uncached each reference re-ran the lineitem aggregate (6 fact
     # scans cold). repartition(1): see data_points.py.
-    daily = register_session_cache(
+    daily = (
         li.groupBy(
             F.col("l_returnflag").alias("flag"),
             F.to_date("l_shipdate").alias("date"),

@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions.parity import sql_davg, sql_dsum
 from ..registry import query
@@ -212,7 +211,7 @@ def sector_regime_performance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # averages) — uncached each re-ran the lineitem join+agg and the
     # regime pivot (6 fact scans cold). repartition(1): see
     # data_points.py for the rationale.
-    panel = register_session_cache(
+    panel = (
         sector_returns.join(F.broadcast(regimes), on="month")
         .join(F.broadcast(seed), on="symbol", how="left")
         .where(F.col("monthly_return").isNotNull())

@@ -119,7 +119,7 @@ def registry_audit(
 ) -> dict[str, dict]:
     """Build every registered query's COLD plan once and measure all
     plan-budget metrics in one pass. Per query: session caches freed
-    (so no query rides another's registered cache), builder invoked
+    (so no query rides another's cache), builder invoked
     exactly as production calls it, inside a dedicated job group, then
 
     - ``build_jobs``: Spark jobs the builder ran at CONSTRUCTION

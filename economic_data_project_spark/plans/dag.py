@@ -104,20 +104,16 @@ class ModelGraph:
         warehouse=None,
     ) -> dict[str, DataFrame]:
         """Materialize models in dependency order; returns name -> frame."""
-        from ..caches import register_session_cache
-
         out: dict[str, DataFrame] = {}
         for name in self.topo_order(targets):
             m = self.models[name]
             df = m.build(spark)
             if m.materialization == "cached_view":
-                # registered (r11): cached_view entries outlive run() —
-                # downstream views read them lazily — and a NEW sf_dir
-                # rebuilds a different plan under the same view name, so
-                # unregistered entries would accumulate one generation
-                # per corpus until session end. CacheManager still
-                # dedups repeat runs on the same sf_dir.
-                register_session_cache(df.cache())
+                # cached_view entries outlive run() — downstream views
+                # read them lazily. CacheManager dedups repeat runs on
+                # the same sf_dir; each NEW sf_dir adds one generation
+                # until a session owner calls caches.free_session_caches.
+                df.cache()
                 df.createOrReplaceTempView(name)
             elif m.materialization == "view" or warehouse is None:
                 df.createOrReplaceTempView(name)

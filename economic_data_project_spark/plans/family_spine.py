@@ -34,7 +34,6 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache
 from ..catalog import load_table, spread_scan
 from ..functions.parity import dsum, sql_dsum
 from ..registry import query
@@ -138,9 +137,7 @@ def families_spine(spark: SparkSession) -> DataFrame:
     # aggregates (every fact table scanned twice; plan-gated in
     # tests/test_plans.py). repartition(1) keeps the family agg
     # reduces parallel and moves only monthly rows.
-    spine = register_session_cache(
-        reduce(outer, frames).repartition(1).cache()
-    )
+    spine = reduce(outer, frames).repartition(1).cache()
     bounds = spine.agg(
         *[F.min(f).alias(f"min_{f}") for f in _FAMS],
         *[F.max(f).alias(f"max_{f}") for f in _FAMS],

@@ -25,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..registry import query
 
@@ -131,7 +130,7 @@ def series_grain_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounds scalar and the trailing-window count — uncached each
     # re-ran all four fact-table branches. repartition(1): see
     # data_points.py for the rationale.
-    store = register_session_cache(store.repartition(1).cache())
+    store = store.repartition(1).cache()
     bounds = store.agg(
         F.max("date").alias("end_date"),
         F.add_months(F.max("date"), -12).alias("start_date"),
@@ -314,7 +313,7 @@ def current_data_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (this one + the lookback-windowed counts, which need `latest`
     # first and are inherently a second pass). `obs` is corpus-sized,
     # so restructuring beats caching here.
-    stats = register_session_cache(
+    stats = (
         obs.groupBy("source_name")
         .agg(
             F.countDistinct("entity_id").cast("long").alias(

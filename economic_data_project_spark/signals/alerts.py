@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions import ta
 from ..registry import query
@@ -177,7 +176,7 @@ def _inputs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.count("*")
         ).alias("fedfunds_level"),
     )
-    mo = register_session_cache(mo.repartition(1).cache())
+    mo = mo.repartition(1).cache()
 
     def _davg_flag(flag: str):
         return F.sum(
@@ -199,7 +198,7 @@ def _inputs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             * 100
         ).alias("hy_oas_raw"),
     )
-    ml = register_session_cache(ml.repartition(1).cache())
+    ml = ml.repartition(1).cache()
 
     wd = ta.series_window("date")
     cpi = (

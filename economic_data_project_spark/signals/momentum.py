@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions import ta
 from ..registry import query
@@ -160,7 +159,7 @@ def momentum_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by every downstream signal layer that references them — 5 fact
     # scans cold. Both are (entity x date) sized. repartition(1): see
     # data_points.py for the rationale.
-    daily = register_session_cache(
+    daily = (
         li.groupBy(
             F.col("l_returnflag").alias("symbol"),
             F.to_date("l_shipdate").alias("date"),
@@ -194,7 +193,7 @@ def momentum_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("above_sma"),
     )
 
-    sector_daily = register_session_cache(
+    sector_daily = (
         li.join(F.broadcast(su), li.l_suppkey == su.s_suppkey)
         .join(F.broadcast(na), su.s_nationkey == na.n_nationkey)
         .join(F.broadcast(re), na.n_regionkey == re.r_regionkey)

@@ -51,7 +51,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions import ta
 from ..registry import query
@@ -188,12 +187,12 @@ def market_volatility_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # date-keyed hash agg computes all of them; cold, this query ran
     # THREE lineitem scans (bars rendered twice via the spy/qqq sides
     # + the vix scan). The fused frame is date-grain (dimension-sized)
-    # so it caches via the registry; repartition(1): see
+    # so it is cached; repartition(1): see
     # data_points.py.
     def flagged(sym: str, col: Column):
         return F.when(F.col("l_returnflag") == sym, col)
 
-    daily = register_session_cache(
+    daily = (
         li.groupBy(F.to_date("l_shipdate").alias("date"))
         .agg(
             *[

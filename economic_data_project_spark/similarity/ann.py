@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions.vectors import COS_DUCK, COS_SPARK, NORM_DUCK, NORM_SPARK
 from ..registry import query
@@ -68,7 +67,7 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     too). Corpus-sized, same precedent as the dedup shingle table: at
     scale this is the materialized vector+norm table an index build
     writes once."""
-    return register_session_cache(
+    return (
         load_table(spark, sf_dir, "embeddings")
         .select(
             "vec_id",
@@ -646,7 +645,7 @@ def ivf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     an IVF index build writes once. Shared by ann_ivf_topk and the
     SemDeDup query (similarity/semdedup.py) — the identical analyzed
     plan means CacheManager serves both from one entry."""
-    return register_session_cache(
+    return (
         load_table(spark, sf_dir, "embeddings")
         .select(
             "vec_id",

@@ -33,7 +33,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..registry import query
 from .ann import argmin_assign, topn_probes
@@ -269,9 +268,7 @@ def ann_cosine_topk_int8(
     # the float embeddings per side (2x wide IO at 100 TB, where the
     # int8 store is a materialized table the float corpus was
     # compressed INTO — queries should never touch floats)
-    codes = register_session_cache(
-        _quantized_codes(spark, sf_dir).cache()
-    )
+    codes = _quantized_codes(spark, sf_dir).cache()
     q = codes.where(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("qv").alias("q_qv"),
@@ -413,9 +410,7 @@ def ann_ivf_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a probe aggregate would scan the quantization pipeline twice per
     # cold build — review finding r12; same one-action discipline as
     # ann_ivf_topk's probe)
-    codes = register_session_cache(
-        _quantized_codes(spark, sf_dir).cache()
-    )
+    codes = _quantized_codes(spark, sf_dir).cache()
     n_corpus = int(codes.count())
     if n_corpus <= _IVF8_SCALE_MIN:
         ivf_k, ivf_nprobe = _IVF8_K, _IVF8_NPROBE

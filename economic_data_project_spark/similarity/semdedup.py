@@ -109,9 +109,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache
 from ..functions.ta import emit, series_window, sql_emit
-from ..functions.vectors import COS_DUCK, COS_SPARK, DOT_DUCK
+from ..functions.vectors import COS_DUCK, COS_SPARK, DOT_DUCK, unit_rows
 from ..registry import query
 from .ann import (
     _IVF_K_CAP,
@@ -240,7 +239,12 @@ def _subcluster_kernel(pdf):
     centroid and the cluster-id tie-break hands it the smallest id —
     with NULL (None, not NaN) centroid-cosine, matching the one-level
     path's NULL; they are never compared, never dropped (uniform-dim
-    contract, and the GEMM kernel excludes them the same way)."""
+    contract, and the GEMM kernel excludes them the same way).
+
+    Zero-norm vectors follow ``_CENT_CMP`` (similarity/ann.py): a
+    cosine with a zero-norm side ranks below every real cosine, so a
+    zero seed or centroid attracts no row, and a zero row ties every
+    centroid and takes the smallest with a NULL centroid-cosine."""
     import numpy as np
     import pandas as pd
 
@@ -258,28 +262,39 @@ def _subcluster_kernel(pdf):
         X = np.stack(pdf.embedding.iloc[vidx].to_numpy()).astype(
             np.float64
         )
-        norms = pdf.vnorm.iloc[vidx].to_numpy().astype(np.float64)
+        # identical vectors must score identically (an exact copy ties
+        # its original and loses on vec_id), which BLAS does not
+        # promise across rows of one GEMM: score the distinct rows
+        U, inv = np.unique(unit_rows(X), axis=0, return_inverse=True)
+        zero = ~U.any(axis=1)
+
+        def ranked_cos(C):
+            # a zero-norm side scores -inf; argmax's first index is the
+            # smaller cluster on ties
+            Cu = unit_rows(C)
+            S = U @ Cu.T
+            S[zero] = -np.inf
+            S[:, ~Cu.any(axis=1)] = -np.inf
+            return S[inv.reshape(-1)]
+
         k2 = max(1, len(vidx) // _TARGET_CLUSTER)
-        seeds, snorms = X[:k2], norms[:k2]
-        a0 = (
-            (X @ seeds.T) / np.outer(norms, snorms)
-        ).argmax(axis=1)
+        seeds = X[:k2]
+        a0 = ranked_cos(seeds).argmax(axis=1)
         cents = np.stack(
             [
                 X[a0 == c].mean(axis=0) if (a0 == c).any() else seeds[c]
                 for c in range(k2)
             ]
         )
-        cnorms = np.linalg.norm(cents, axis=1)
-        cos1 = (X @ cents.T) / np.outer(norms, cnorms)
+        cos1 = ranked_cos(cents)
         a1 = cos1.argmax(axis=1)
         out_cluster[vidx] = base + a1
         out_cc[vidx] = cos1[np.arange(len(vidx)), a1]
-    # nullable Float64: invalid rows must arrive in Spark as NULL, not
-    # NaN — plain float64 NaN survives Arrow as NaN and diverges from
-    # the one-level path.
+    # nullable Float64: invalid (NaN) and zero-norm (-inf) rows must
+    # arrive in Spark as NULL — plain float64 NaN survives Arrow as NaN
+    # and diverges from the one-level path.
     cc_out = pd.array(out_cc, dtype="Float64")
-    cc_out[~valid.to_numpy()] = pd.NA
+    cc_out[~np.isfinite(out_cc)] = pd.NA
     return pd.DataFrame(
         {
             "vec_id": pdf.vec_id.astype("int64"),
@@ -319,7 +334,7 @@ def _member_two_level(corpus: DataFrame, k: int) -> DataFrame:
     cells = (
         coarse.join(F.broadcast(dense), "cluster")
         .drop("cluster")
-        .join(corpus.select("vec_id", "embedding", "vnorm"), "vec_id")
+        .join(corpus.select("vec_id", "embedding"), "vec_id")
     )
     assigned = cells.groupBy("coarse").applyInPandas(
         _subcluster_kernel, schema="vec_id long, cluster long, cc double"
@@ -380,13 +395,13 @@ def _dominated_ids(good_q, good_c):
     memory); self-pairs masked by vec_id equality — identical to a
     diagonal zeroing since ids are unique. Candidate j is dropped iff
     ANY query row i dominates it; OR-accumulate over query tiles —
-    identical to the one-shot (near & better).any(axis=0)."""
+    identical to the one-shot (near & better).any(axis=0). A zero-norm
+    row's cosine is 0 < eps (unit_rows), so it is never near — the
+    relational path's NULL cosine."""
     import numpy as np
 
-    Xq = np.stack(good_q.embedding.to_numpy()).astype(np.float64)
-    Xc = np.stack(good_c.embedding.to_numpy()).astype(np.float64)
-    nq = good_q.vnorm.to_numpy().astype(np.float64)
-    nc = good_c.vnorm.to_numpy().astype(np.float64)
+    Uq = unit_rows(np.stack(good_q.embedding.to_numpy()).astype(np.float64))
+    Uc = unit_rows(np.stack(good_c.embedding.to_numpy()).astype(np.float64))
     ccq = good_q.cc.to_numpy().astype(np.float64)
     ccc = good_c.cc.to_numpy().astype(np.float64)
     idq = good_q.vec_id.to_numpy()
@@ -396,7 +411,7 @@ def _dominated_ids(good_q, good_c):
     dropped = np.zeros(c, dtype=bool)
     for lo in range(0, len(idq), tile):
         hi = min(lo + tile, len(idq))
-        S = (Xq[lo:hi] @ Xc.T) / np.outer(nq[lo:hi], nc)
+        S = Uq[lo:hi] @ Uc.T
         near = S >= _EPS
         near[idq[lo:hi, None] == idc[None, :]] = False
         better = (ccq[lo:hi, None] > ccc[None, :]) | (
@@ -562,11 +577,9 @@ def dedup_semantic_semdedup(
     # sides read the cache pre-partitioned and the join plans with NO
     # exchange (guide §2.4). defaultParallelism like spread_scan —
     # scale-parameterised, not a local constant.
-    member = register_session_cache(
-        member.repartition(
-            spark.sparkContext.defaultParallelism, "cluster"
-        ).cache()
-    )
+    member = member.repartition(
+        spark.sparkContext.defaultParallelism, "cluster"
+    ).cache()
     dups = (
         _dups_hof(member)
         if n_corpus <= _SCALE_MIN

@@ -124,9 +124,11 @@ def split_quarantine(
     rows (e.g. one ill-typed field) — Spark refuses such queries
     outright since 2.3 and documents exactly this cache as the
     supported pattern. The cache holds only until both halves are
-    consumed; a 100 TB ingest would instead run the split as ONE pass
-    writing two sinks (foreachBatch / partitioned write) over the
-    cached batch of each shard group."""
+    consumed — caches.free_session_caches() clears it with every other
+    cached frame, so no session owner may free between this split and
+    the reads of both halves. A 100 TB ingest would instead run the
+    split as ONE pass writing two sinks (foreachBatch / partitioned
+    write) over the cached batch of each shard group."""
     if id_col not in df.columns:
         raise ValueError(
             f"id column {id_col!r} not in frame columns {df.columns}"

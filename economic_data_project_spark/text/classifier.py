@@ -56,7 +56,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache
 from ..catalog import load_table, spread_scan
 from ..functions.parity import DEC
 from ..functions.ta import emit, sql_emit
@@ -157,7 +156,6 @@ def nb_quality_classifier(
         # cached: the only corpus text scan; feeds the model build AND
         # the scoring join (char_trigram_quality precedent).
         .cache()
-        .transform(register_session_cache)
     )
     # r16 (the r9 fan-out-cache precedent): the model feeds BOTH the
     # vocabulary-total stats aggregate and the scoring join — uncached,
@@ -168,7 +166,7 @@ def nb_quality_classifier(
     # the second pass is a full read of the gram-instance table. Kept on
     # its natural shuffle partitioning (NOT repartition(1)): the model
     # is vocabulary-sized by construction, not dimension-sized.
-    model = register_session_cache(
+    model = (
         inst.groupBy("g")
         .agg(
             F.sum(

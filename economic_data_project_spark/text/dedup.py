@@ -48,13 +48,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import (
-    free_local_checkpoint,
-    register_session_cache,
-    register_session_checkpoint,
-)
+from ..caches import free_local_checkpoint, register_session_checkpoint
 from ..catalog import load_table, spread_scan
 from ..functions.ta import emit, sql_emit
+from ..functions.vectors import unit_rows
 from ..registry import query
 
 _TOKENS = "regexp_extract_all(lower(text), '[a-z]+', 0)"
@@ -166,9 +163,8 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded, not a leak: Spark's CacheManager dedups by analyzed
     plan, so repeated invocations on the same sf_dir reuse one entry
     (one per distinct sf_dir total), and entries are MEMORY_AND_DISK
-    with LRU eviction under pressure. Every such frame also registers
-    with caches.register_session_cache, so a session owner frees them
-    all deterministically via caches.free_session_caches() between
+    with LRU eviction under pressure. A session owner frees them with
+    every other cached frame via caches.free_session_caches() between
     corpora (ADVICE r7/r8)."""
     d = load_table(spark, sf_dir, "documents")
     n = max(spark.sparkContext.defaultParallelism, 8)
@@ -177,7 +173,6 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.expr(_TOKENS).alias("toks"))
         .select("doc_id", F.expr(_SHINGLES_FROM_TOKS).alias("shingles"))
         .cache()
-        .transform(register_session_cache)
     )
 
 
@@ -246,9 +241,8 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNSORTED — the reusable building block (`corpus_keep_list` consumes
     it mid-plan, where the display sort would be a wasted exchange)."""
     sh = _shingled(spark, sf_dir)
-    bands = register_session_cache(
-        _bands_of(sh).cache()
-    )  # tiny (8 rows/doc); self-joined below — hash once
+    # tiny (8 rows/doc); self-joined below — hash once
+    bands = _bands_of(sh).cache()
     cand = (
         bands.alias("a")
         .join(
@@ -288,9 +282,7 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of once per consumer subtree. Size is the near-dup pair count
     # (dup-rate-bounded, tiny next to the corpus); same documented
     # lifetime discipline as the shingle/band caches above.
-    return register_session_cache(
-        verified.select("doc_a", "doc_b", "jaccard").cache()
-    )
+    return verified.select("doc_a", "doc_b", "jaccard").cache()
 
 
 @query("dedup_minhash_lsh", oracle=_MINHASH_ORACLE)
@@ -553,9 +545,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("band"),
     ).select(
         "doc_id", "simhash", "band.band_id", "band.band_val"
-    ).cache().transform(
-        register_session_cache
-    )  # tiny (4 rows/doc); self-joined below — fold hashes once
+    ).cache()  # tiny (4 rows/doc); self-joined below — fold hashes once
     cand = (
         banded.alias("a")
         .join(
@@ -730,9 +720,7 @@ def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.expr(SIMHASH64_BANDS)).alias("band"),
     ).select(
         "doc_id", "simhash", "band.band_id", "band.band_val"
-    ).cache().transform(
-        register_session_cache
-    )  # tiny (4 rows/doc); self-joined below — fold hashes once
+    ).cache()  # tiny (4 rows/doc); self-joined below — fold hashes once
     cand = (
         banded.alias("a")
         .join(
@@ -985,9 +973,9 @@ def _emb_lsh_pairs(
     # read it, so the cold plan makes one pass over `embeddings`
     # instead of four. The 100 TB shape: norms+vectors are a
     # materialized table written once next to the corpus; the cache is
-    # its single-JVM analogue (same registry discipline as the minhash
-    # shingle frame, caches.py).
-    n = register_session_cache(
+    # its single-JVM analogue (same lifetime as the minhash shingle
+    # frame, caches.py).
+    n = (
         e.select(
             "vec_id",
             "embedding",
@@ -1012,7 +1000,7 @@ def _emb_lsh_pairs(
         # evaluate the kernel once per join side.
         sig = _emb_plane_signatures(n, n_bands, r, dim)
         if n_vectors is not None and n_vectors > _EMB_LSH_MIN:
-            sig = register_session_cache(sig.cache())
+            sig = sig.cache()
     else:
         sig = n.select(
             "vec_id",
@@ -1074,15 +1062,6 @@ def _emb_lsh_pairs(
     )
 
 
-def _unit_rows(m: np.ndarray) -> np.ndarray:
-    """Row-normalize ``m``. Zero-norm guard: a zero row stays all-zero
-    (no divide-by-zero warning), so its cosine with anything is 0 and
-    it joins no pair — the kernel's side of the NULL-cosine contract
-    the SQL paths keep through ``COS_SPARK``/``COS_DUCK``."""
-    nrm = np.linalg.norm(m, axis=1, keepdims=True)
-    return np.divide(m, nrm, out=np.zeros_like(m), where=nrm > 0)
-
-
 @query("dedup_embedding_cosine", oracle=_EMB_NEAR_ORACLE)
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs cosine near-dup below ``_EMB_LSH_MIN`` vectors
@@ -1134,9 +1113,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket list is dimension-sized).
     dense_cap = 4 * (int(probe["n"]) // _BLOCK + 1)
     if n_buckets > dense_cap:
-        buckets = register_session_cache(
-            e.select("bucket").distinct().cache()
-        )
+        buckets = e.select("bucket").distinct().cache()
     else:
         buckets = spark.range(n_buckets).select(
             F.col("id").cast("int").alias("bucket")
@@ -1168,7 +1145,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         B = np.stack(b_rows["embedding"].to_numpy()).astype(np.float64)
         a_ids = a_rows["vec_id"].to_numpy()
         b_ids = b_rows["vec_id"].to_numpy()
-        An, Bn = _unit_rows(A), _unit_rows(B)
+        An, Bn = unit_rows(A), unit_rows(B)
         out_a, out_b, out_c = [], [], []
         for i in range(An.shape[0]):  # GEMV per row keeps memory flat
             cos = np.round(Bn @ An[i], 9)

@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..registry import query
 
@@ -163,7 +162,7 @@ def doc_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # char-trigram cache (text/lm_quality.py): at 100 TB this is the
     # materialized term-frequency TABLE every TF-IDF system writes
     # once and joins twice, not an executor cache.
-    tok = register_session_cache(
+    tok = (
         docs.select(
             "doc_id", F.explode(F.expr(_TOKENS)).alias("term")
         )

@@ -53,7 +53,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache
 from ..catalog import load_table, spread_scan
 from ..functions.parity import DEC
 from ..functions.ta import emit, sql_emit
@@ -173,7 +172,6 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         # char_trigram_quality cache precedent; corpus-sized — at
         # 100 TB a materialized intermediate table written once).
         .cache()
-        .transform(register_session_cache)
     )
     model = inst.groupBy("bucket").agg(
         F.sum("cnt").alias("c_r"),
@@ -219,7 +217,7 @@ def dsir_importance_weights(
     # _scored itself: dsir_gumbel_topk's two reads are both
     # narrow/pruned and the barrier measured a 3.17s -> 4.17s
     # REGRESSION there (9-rep A/B) — the fill cost exceeds its reuse.
-    scored = register_session_cache(_scored(spark, sf_dir).cache())
+    scored = _scored(spark, sf_dir).cache()
     stats = F.broadcast(
         scored.agg(
             (

@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache
 from ..catalog import load_table, spread_scan
 from ..functions.parity import DEC
 from ..functions.ta import emit, sql_emit
@@ -128,11 +127,11 @@ def char_trigram_quality(
         # pair), the largest cache entry in the repo — materially
         # bigger than the 8-rows/doc band caches whose lifetime
         # discipline it shares (one entry per sf_dir, MEMORY_AND_DISK
-        # LRU, freed via caches.free_session_caches). At 100 TB this
+        # LRU, freed by a session owner's caches.free_session_caches,
+        # which clears every cached frame). At 100 TB this
         # frame is a materialized intermediate TABLE written once and
         # joined twice, not an executor cache.
         .cache()
-        .transform(register_session_cache)
     )
     model = inst.groupBy("tg").agg(F.sum("cnt").alias("c_t"))
     tot = F.broadcast(model.agg(F.sum("c_t").alias("n")))

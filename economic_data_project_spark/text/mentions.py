@@ -30,7 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..registry import query
 
@@ -160,7 +159,7 @@ def term_co_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached so the self-join's two subtrees share ONE corpus scan
     # instead of re-extracting per side (2x wide IO at 100 TB; there
     # the mention set is a materialized extraction table)
-    exploded = register_session_cache(
+    exploded = (
         docs.select(
             "doc_id",
             F.explode(

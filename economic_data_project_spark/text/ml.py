@@ -60,7 +60,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..registry import query
 
@@ -197,17 +196,14 @@ def _memoized(spark: SparkSession, sf_dir: str, name: str, build):
 
 def _features(spark: SparkSession, sf_dir: str):
     """Memoized (feats, vocab) of the production TF-IDF pipeline; the
-    feats frame arrives already cache-registered."""
+    feats frame arrives already cached."""
 
     def build():
         tokens, cv_model = _cv_fit(spark, sf_dir)
-        # registered (r11): the cache outlives the builder — the
-        # returned frames read `feats` lazily (every other
-        # session-lifetime cache registers; this predates the registry).
+        # the cache outlives the builder — the returned frames read
+        # `feats` lazily.
         return (
-            register_session_cache(
-                _finish_tfidf(tokens, cv_model).cache()
-            ),
+            _finish_tfidf(tokens, cv_model).cache(),
             list(cv_model.vocabulary),
         )
 
@@ -250,7 +246,7 @@ def _kmeans_model(spark: SparkSession, sf_dir: str):
 def _kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats, vocab = _features(spark, sf_dir)
     model = _kmeans_model(spark, sf_dir)
-    out = register_session_cache(model.transform(feats).cache())
+    out = model.transform(feats).cache()
 
     # model-level metrics (sec_document_clusters.yml metrics:)
     inertia = float(model.summary.trainingCost)

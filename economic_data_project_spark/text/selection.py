@@ -43,7 +43,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions.ta import emit, series_window, sql_emit
 from ..registry import query
@@ -224,7 +223,7 @@ def _budget_select(
     is narrow (three numeric columns), tiny next to the text column it
     derives from; at 100 TB it is a materialized scoring table written
     once and read twice."""
-    scored = register_session_cache(scored.cache())
+    scored = scored.cache()
     # Bucket table: one row per distinct quantized score. Every caller
     # quantizes onto a fixed decimal grid over a bounded span (see
     # docstring), so the table is bounded by the grid — ~1e6 rows for
@@ -518,11 +517,9 @@ def corpus_training_manifest(
     # this table — doc_id, verdict, length — written once by the
     # screening job.)
     keep = (
-        register_session_cache(
-            keep_list_frame(spark, sf_dir, with_n_tokens=True)
-            .select("doc_id", "keep", "n_tokens")
-            .cache()
-        )
+        keep_list_frame(spark, sf_dir, with_n_tokens=True)
+        .select("doc_id", "keep", "n_tokens")
+        .cache()
         .where(F.col("keep"))
         .select("doc_id", "n_tokens")
     )

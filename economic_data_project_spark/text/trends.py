@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..operators.advanced import _LEX_VALUES, LEXICON
 from ..registry import query
@@ -147,7 +146,7 @@ def sentiment_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate and the per-doc sentiment join both consume it, and
     # uncached each re-scanned the fact table (2 of this query's 3
     # cold passes). Dimension columns only — KBs per million docs.
-    dated = register_session_cache(
+    dated = (
         docs.select(
             "doc_id",
             "source",

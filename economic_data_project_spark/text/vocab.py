@@ -35,7 +35,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache
 from ..catalog import load_table
 from ..functions.ta import emit, sql_emit
 from ..registry import query
@@ -175,7 +174,7 @@ def bigram_pmi_collocations(
     # still potentially large — so NO repartition(1); at 100 TB this is
     # the materialized census table a phrase-detection pass writes once
     # and reads four times.
-    bigrams = register_session_cache(
+    bigrams = (
         pairs.groupBy("w1", "w2")
         .agg(F.count("*").cast("long").alias("c_xy"))
         .cache()
@@ -287,7 +286,7 @@ def source_js_divergence(
     # FOUR subtrees — the per-source totals and both sides of the
     # pair join — and uncached each re-ran the corpus explode+agg
     # (4 documents scans cold). One corpus scan materializes it.
-    cnts = register_session_cache(
+    cnts = (
         d.select("source", F.explode(F.expr(_TOKENS)).alias("term"))
         .groupBy("source", "term")
         .agg(F.count("*").cast("long").alias("cnt"))

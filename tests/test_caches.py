@@ -1,8 +1,8 @@
-"""The session-lifetime cache registry (economic_data_project_spark.
-caches): builders register every cache that outlives them; one call
-frees them all; consumers rebuild lazily and correctly afterwards —
-including when the free races a concurrent reader (the oracle sweep
-shares the session across threads)."""
+"""Session caches (economic_data_project_spark.caches): builders call
+``.cache()`` and Spark's CacheManager tracks the entries; one call frees
+them all; consumers rebuild lazily and correctly afterwards — including
+when the free races a concurrent reader (the oracle sweep shares the
+session across threads)."""
 
 from __future__ import annotations
 
@@ -16,50 +16,68 @@ from economic_data_project_spark.registry import all_queries
 from .conftest import SF_DIR
 
 
-def _live_handles():
-    return [
-        df
-        for df in caches._SESSION_CACHES.values()
-        if df.storageLevel.useMemory or df.storageLevel.useDisk
-    ]
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def test_free_session_caches_unpersists_and_rebuilds(spark):
     qs = all_queries()
     before = qs["dedup_minhash_lsh"](spark, SF_DIR).collect()
-    # the builder registered its shingle/band/verified frames
-    live = _live_handles()
-    assert live, "dedup builders registered no live caches"
-    freed = caches.free_session_caches()
-    assert freed >= len(live)
-    assert not caches._SESSION_CACHES
-    for df in live:
-        assert not (
-            df.storageLevel.useMemory or df.storageLevel.useDisk
-        )
+    # the builder cached its shingle/band/verified frames
+    assert not _cache_empty(spark), "dedup builders cached nothing"
+    caches.free_session_caches()
+    assert _cache_empty(spark)
     # consumers re-materialize lazily with identical results, and the
-    # rebuild re-registers its caches
+    # rebuild caches its frames again
     after = qs["dedup_minhash_lsh"](spark, SF_DIR).collect()
     assert after == before
-    assert caches._SESSION_CACHES
+    assert not _cache_empty(spark)
 
 
-def test_repeat_builder_calls_do_not_grow_registry(spark):
-    """ADVICE r9: handles dedup by semanticHash — re-running the same
-    builder on the same sf_dir replaces its handles in place instead of
-    accumulating duplicates unboundedly."""
+def test_repeat_builder_calls_do_not_grow_cache(spark):
+    """CacheManager dedups by analyzed plan: re-running the same builder
+    on the same sf_dir reuses its cache entries instead of filling new
+    ones."""
     caches.free_session_caches()
     qs = all_queries()
-    qs["dedup_minhash_lsh"](spark, SF_DIR)
-    n_once = len(caches._SESSION_CACHES)
+    qs["dedup_minhash_lsh"](spark, SF_DIR).collect()
+    n_once = _persistent_rdds(spark)
     assert n_once > 0
     for _ in range(3):
-        qs["dedup_minhash_lsh"](spark, SF_DIR)
-    assert len(caches._SESSION_CACHES) == n_once
+        qs["dedup_minhash_lsh"](spark, SF_DIR).collect()
+    assert _persistent_rdds(spark) == n_once
+    caches.free_session_caches()
+
+
+def test_free_from_thread_without_active_session(spark):
+    """A thread that never touched the session has no active session of
+    its own (``getActiveSession()`` is None there); the free must still
+    find the session and clear its cache."""
+    caches.free_session_caches()
+    spark.range(50).cache().count()
+    assert not _cache_empty(spark)
+    errors: list[BaseException] = []
+
+    def freer():
+        try:
+            caches.free_session_caches()
+        except Exception as e:  # noqa: BLE001
+            errors.append(e)
+
+    t = threading.Thread(target=freer)
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive()
+    assert not errors, errors
+    assert _cache_empty(spark)
 
 
 def test_unfilled_cache_fills_once_under_concurrent_readers(spark):
-    """Builders return lazy plans whose registered caches fill during
+    """Builders return lazy plans whose caches fill during
     the first action that reads them, so that first action may read
     one UNFILLED entry from many subtrees at once (a fan-out union, a
     self-join). Spark must compute the entry once, not once per
@@ -80,7 +98,7 @@ def test_unfilled_cache_fills_once_under_concurrent_readers(spark):
             evals.add(1)
             return x * 2
 
-        base = caches.register_session_cache(
+        base = (
             spark.range(0, n_rows, 1, 8)
             .select("id", counted("id").alias("v"))
             .cache()
@@ -113,7 +131,7 @@ def test_free_mid_sweep_race_recomputes_correctly(spark):
     """VERDICT r9 #5: the thread-parallel oracle sweep shares the
     session — a free_session_caches() racing another thread's
     cached-frame query must leave both correct (the loser recomputes
-    lazily). Hammer the race: one thread re-runs a cache-registering
+    lazily). Hammer the race: one thread re-runs a caching
     query in a loop while another frees repeatedly."""
     qs = all_queries()
     expected = qs["dedup_minhash_lsh"](spark, SF_DIR).collect()
@@ -178,25 +196,3 @@ def test_checkpoint_registry_frees_final_generation(spark):
     # boundary (bench lane, corpus switch) when no consumer reads it
     # again. `ck` is deliberately not read after the free.
     del ck
-
-
-def test_checkpoints_false_frees_caches_only(spark):
-    """free_session_caches(checkpoints=False): a mid-sweep caller that
-    may race a live checkpoint consumer frees the RECOMPUTABLE caches
-    but leaves destructive checkpoint entries registered for the next
-    session-owner-boundary sweep (ADVICE r10: releasing a
-    localCheckpoint destroys its only copy)."""
-    caches.free_session_caches()
-    ck = caches.register_session_checkpoint(
-        spark.range(100).localCheckpoint(eager=True)
-    )
-    cached = caches.register_session_cache(spark.range(50).cache())
-    cached.count()
-    freed = caches.free_session_caches(checkpoints=False)
-    assert freed == 1  # the cache, not the checkpoint
-    assert len(caches._SESSION_CHECKPOINTS) == 1
-    # the checkpoint is still alive and readable after the partial sweep
-    assert ck.count() == 100
-    # the owner-boundary sweep then releases it
-    assert caches.free_session_caches() >= 1
-    assert not caches._SESSION_CHECKPOINTS

@@ -661,6 +661,88 @@ def test_semdedup_two_level_invalid_embedding_is_null(
         assert got[i].cos_centroid is not None
 
 
+def test_semdedup_two_level_zero_seed_matches_one_level(
+    spark, tmp_path, monkeypatch
+):
+    """A zero vector among one cell's sub-cluster seeds. Each cell of
+    the two-level tier must split exactly as the one-level relational
+    k-means (ann.kmeans_once) splits the same vectors: a cosine with a
+    zero-norm side ranks below every real cosine (ann._CENT_CMP), so
+    the zero seed attracts no row, and the zero vector itself takes
+    the smallest cluster with a NULL centroid cosine. A NaN cosine
+    would rank FIRST under argmax and pull the whole cell to the zero
+    seed. The cells must hold >= 2 * 1024 vectors for the sub-cluster
+    kernel (which runs in a Python worker, at the module's
+    _TARGET_CLUSTER) to pick more than one seed."""
+    from pyspark.sql import functions as F
+
+    from economic_data_project_spark.similarity import semdedup as sd
+    from economic_data_project_spark.similarity.ann import (
+        ivf_corpus,
+        kmeans_once,
+    )
+
+    rng = np.random.RandomState(37)
+    vecs = list(rng.normal(size=(7000, 8)))
+    zero_id = 2  # past the K1=2 coarse seeds: a sub-cluster seed only
+    vecs[zero_id] = np.zeros(8)
+    sf = _write_vecs(tmp_path, vecs)
+    monkeypatch.setattr(sd, "_SCALE_MIN", 1)
+    monkeypatch.setattr(sd, "_TWO_LEVEL_MIN", 1)  # K=6, K1=2
+    two = {
+        r.vec_id: r
+        for r in all_queries()["dedup_semantic_semdedup"](
+            spark, sf
+        ).collect()
+    }
+    assert len(two) == len(vecs)
+    cells: dict[int, list[int]] = {}
+    for r in two.values():
+        cells.setdefault(r.cluster >> 20, []).append(r.vec_id)
+    corpus = ivf_corpus(spark, sf)
+
+    def groups(ids, label):
+        out: dict[int, set] = {}
+        for i in ids:
+            out.setdefault(label[i], set()).add(i)
+        return {frozenset(g) for g in out.values()}
+
+    zero_seeded = False
+    for ids in cells.values():
+        ids.sort()
+        k2 = max(1, len(ids) // sd._TARGET_CLUSTER)
+        zero_seeded |= k2 > 2 and zero_id in ids[1 : k2 - 1]
+        _c, assign = kmeans_once(
+            corpus.where(F.col("vec_id").isin(ids)), k2
+        )
+        one = {r.vec_id: r for r in assign.collect()}
+        assert groups(ids, {i: two[i].cluster for i in ids}) == groups(
+            ids, {i: one[i].cluster for i in ids}
+        )
+        for i in ids:
+            if i == zero_id:
+                assert two[i].cos_centroid is None and one[i].c is None
+                assert not two[i].is_dup
+            else:
+                assert two[i].cos_centroid == pytest.approx(
+                    one[i].c, abs=1e-4
+                )
+    # the zero vector is a middle seed, so real seeds sit on both sides
+    assert zero_seeded, "fixture no longer seeds a cell with the zero row"
+    # the pair GEMM: the zero row is near nothing, with no 0/0
+    v = vecs[7]
+    pdf = pd.DataFrame(
+        {
+            "vec_id": [0, 1, 2],
+            "embedding": [np.zeros(8), v, v],
+            "vnorm": [0.0, np.linalg.norm(v), np.linalg.norm(v)],
+            "cc": [np.nan, 0.9, 0.9],
+        }
+    )
+    with np.errstate(all="raise"):
+        assert list(sd._dominated_ids(pdf, pdf)) == [2]
+
+
 def test_semdedup_k_cap_regime(spark, tmp_path, monkeypatch):
     """Behavior AT the K cap (module-header contract): past
     n = cap * target the sizing pins K at the cap and clusters re-grow

@@ -914,11 +914,11 @@ def test_emb_cosine_zero_vector_joins_no_pair(spark, tmp_path, name):
         if cos[i, j] >= _COSINE_THRESHOLD
     }
     if name == "dedup_embedding_cosine":
-        from economic_data_project_spark.text.dedup import _unit_rows
+        from economic_data_project_spark.functions.vectors import unit_rows
 
         assert set(got) == brute
         with np.errstate(all="raise"):
-            unit = _unit_rows(np.stack(vecs))
+            unit = unit_rows(np.stack(vecs))
         assert not unit[zero_id].any()
         con = duckdb_connect(str(tmp_path))
         try:

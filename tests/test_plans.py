@@ -732,8 +732,8 @@ def test_char_trigram_cache_feeds_model_and_scoring(spark):
     universe. Session caches are freed first: a MATERIALIZED
     InMemoryRelation renders its cached child twice (logical +
     physical), so the scan-count arithmetic below is only stable on
-    the cold rendering — and the free exercises the rebuild path of
-    the r9 cache registry along the way."""
+    the cold rendering — and the free exercises the rebuild path
+    along the way."""
     from economic_data_project_spark.caches import free_session_caches
 
     free_session_caches()
@@ -1128,7 +1128,6 @@ def test_warm_repeat_compiles_nothing(spark):
 
     def one_round():
         free_session_caches()
-        spark.catalog.clearCache()
         for name in _WARM_READS:
             queries[name](spark, SF_DIR).limit(1000).collect()
         nl_to_sql(

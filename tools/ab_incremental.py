@@ -115,7 +115,6 @@ def run_once(spark, fn) -> float:
 
 def lane(spark, label, fn, out):
     free_session_caches()
-    spark.catalog.clearCache()
     reps = [run_once(spark, fn) for _ in range(3)]
     out.setdefault(label, []).append(reps)
 

@@ -95,7 +95,7 @@ def run_stars(spark, n_nodes: int) -> None:
         flush=True,
     )
     assert bad == 0 and n_comp == n_groups and n_rows == n_nodes
-    free_session_caches(spark)
+    free_session_caches()
 
 
 def run_chain(spark, length: int) -> None:
@@ -133,7 +133,7 @@ def run_chain(spark, length: int) -> None:
         flush=True,
     )
     assert n_comp == 1 and top == 0
-    free_session_caches(spark)
+    free_session_caches()
 
 
 def main() -> None:

@@ -108,7 +108,6 @@ def main() -> None:
         try:
             for op in OPS:
                 free_session_caches()
-                spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 qs[op](spark, sf).write.format("noop").mode(
                     "overwrite"
@@ -125,7 +124,6 @@ def main() -> None:
                 )
         finally:
             free_session_caches()
-            spark.catalog.clearCache()
             shutil.rmtree(sf, ignore_errors=True)
     spark.stop()
     print("PROBE OK", flush=True)

@@ -118,7 +118,6 @@ def full_pipeline(spark, n) -> dict:
     + planted-pair recall."""
     emb = gen_embeddings(spark, n)
     free_session_caches()
-    spark.catalog.clearCache()
     t0 = time.perf_counter()
     pairs = D._emb_lsh_pairs(emb, DIM, n)
     found = {

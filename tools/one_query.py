@@ -1,49 +1,59 @@
-import importlib.util, math, sys, decimal
-import duckdb
-from pyspark.sql import SparkSession
+"""Check named queries against their DuckDB oracles with the driver
+simulation's comparison (tests.conftest.compare_with_oracle: column
+names, row count, order-insensitive normalized values).
 
-NAMES = sys.argv[1:]
-spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
-mod = importlib.util.module_from_spec(spec)
-spec.loader.exec_module(mod)
+    python tools/one_query.py <name> [<name> ...]
 
-spark = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false")
-         .appName("one-query").getOrCreate())
+Queries load from __spark_entry__.py by file path, as the driver does.
+Tables come from tests.conftest.SF_DIR_ORACLE ($SPARK_GRAFT_ORACLE_SF_DIR,
+default sf0.01). Exits 1 if any named query fails.
+"""
 
-SF = "/root/testdata/sf0.01"
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
+from __future__ import annotations
 
-def norm(v):
-    if v is None: return "NULL"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, decimal.Decimal): return repr(float(v))
-    return str(v)
+import importlib.util
+import os
+import sys
 
-qs, os_ = mod.queries(), mod.oracle_sql()
-for name in NAMES:
-    sdf = qs[name](spark, SF)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    if name not in os_:
-        print(f"{name}: rows-only ({len(srows)} rows)"); continue
-    res = con.execute(os_[name])
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-    order_s = sorted(range(len(scols)), key=lambda i: scols[i])
-    order_d = sorted(range(len(dcols)), key=lambda i: dcols[i])
-    cols_ok = sorted(scols) == sorted(dcols)
-    sset = sorted("|".join(norm(r[i]) for i in order_s) for r in srows)
-    dset = sorted("|".join(norm(r[i]) for i in order_d) for r in drows)
-    ok = len(srows)==len(drows) and cols_ok and sset==dset
-    print(f"{name}: rows {len(srows)}/{len(drows)} cols_ok={cols_ok} MATCH={ok}")
-    if not ok:
-        if not cols_ok:
-            print("  spark cols:", sorted(scols)); print("  duck cols:", sorted(dcols))
-        for a,b in zip(sset, dset):
-            if a!=b:
-                print("  S:", a[:300]); print("  D:", b[:300]); break
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+
+from economic_data_project_spark.session import get_spark  # noqa: E402
+from tests.conftest import (  # noqa: E402
+    SF_DIR_ORACLE,
+    compare_with_oracle,
+    duckdb_connect,
+)
+
+
+def main(names: list[str]) -> int:
+    spec = importlib.util.spec_from_file_location(
+        "__spark_entry__", os.path.join(_REPO, "__spark_entry__.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    queries, oracles = mod.queries(), mod.oracle_sql()
+
+    spark = get_spark(app_name="one-query")
+    con = duckdb_connect(SF_DIR_ORACLE)
+    failed = 0
+    for name in names:
+        try:
+            if name in oracles:
+                ok, msg = compare_with_oracle(
+                    spark, queries[name], oracles[name], SF_DIR_ORACLE,
+                    con=con,
+                )
+                tag = "MATCH" if ok else "FAIL"
+            else:
+                n = queries[name](spark, SF_DIR_ORACLE).count()
+                ok, msg, tag = True, f"rows-only ({n} rows)", "ROWS"
+        except Exception as e:  # noqa: BLE001
+            ok, msg, tag = False, f"EXC {type(e).__name__}: {e}", "FAIL"
+        failed += not ok
+        print(f"{tag:5} {name}: {msg}", flush=True)
+    return 1 if failed else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))

@@ -37,7 +37,6 @@ def _timed_rep(spark, build, label: str, sink=None) -> float:
     its generated-code compiles — an A/B whose arms differ only in
     compile reuse shows it here. Returns the seconds."""
     free_session_caches()
-    spark.catalog.clearCache()
     spark.sparkContext.setJobDescription(label)
     c0 = codegen_compiles(spark)
     t0 = time.perf_counter()
@@ -121,7 +120,6 @@ def main() -> None:
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
             free_session_caches()
-            spark.catalog.clearCache()
             df = qs[name](spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"

@@ -99,7 +99,6 @@ def main() -> None:
         try:
             for op in OPS:
                 free_session_caches()
-                spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 qs[op](spark, sf).write.format("noop").mode(
                     "overwrite"
@@ -116,7 +115,6 @@ def main() -> None:
                 )
         finally:
             free_session_caches()
-            spark.catalog.clearCache()
             shutil.rmtree(sf, ignore_errors=True)
     spark.stop()
 
