@@ -515,6 +515,19 @@ _IVF_SCALE_MIN = 200_000
 _IVF_K_CAP = 65_536
 
 
+def ivf_sizing(n: int) -> tuple[int, int]:
+    """(K, nprobe) of the coarse quantizer for an ``n``-vector corpus:
+    the fixed driver-scale pair up to the cutover, then K ~ sqrt(n)
+    (capped) with nprobe ~ K/32. Shared by both IVF builders
+    (ann_ivf_topk and quant.ann_ivf_topk_int8)."""
+    if n <= _IVF_SCALE_MIN:
+        return _IVF_K, _IVF_NPROBE
+    import math
+
+    k = max(_IVF_K, min(_IVF_K_CAP, math.isqrt(n)))
+    return k, max(_IVF_NPROBE, k // 32)
+
+
 def kmeans_cte_duck(k: int = _IVF_K) -> str:
     """CTE prefix for the deterministic one-Lloyd-step k-means over the
     ``embeddings`` view: defines ``corpus`` (vec_id, embedding, label,
@@ -847,14 +860,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # read, so it costs no extra pass overall. Sparse-id safety needs
     # no id bound here — it comes entirely from the orderBy/limit
     # seeding below.
-    n_corpus = int(corpus.count())
-    if n_corpus <= _IVF_SCALE_MIN:
-        ivf_k, ivf_nprobe = _IVF_K, _IVF_NPROBE
-    else:
-        import math
-
-        ivf_k = max(_IVF_K, min(_IVF_K_CAP, math.isqrt(n_corpus)))
-        ivf_nprobe = max(_IVF_NPROBE, ivf_k // 32)
+    ivf_k, ivf_nprobe = ivf_sizing(int(corpus.count()))
     centroids, final_assign = kmeans_once(corpus, ivf_k)
 
     queries = corpus.where(F.col("vec_id") < _N_QUERIES)

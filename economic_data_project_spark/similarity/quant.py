@@ -35,7 +35,13 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
-from .ann import argmin_assign, topn_probes
+from .ann import (
+    _IVF_K,
+    _IVF_NPROBE,
+    argmin_assign,
+    ivf_sizing,
+    topn_probes,
+)
 
 _Q_MAX = 127  # symmetric int8 range [-127, 127]; -128 never emitted
 
@@ -334,16 +340,11 @@ def ann_cosine_topk_int8(
 # - assignment, probe ranking and candidate scoring all use the
 #   bigint-dot cosine (scales cancel, see header above), so there is
 #   no float fold anywhere and DuckDB reproduces every value exactly;
-# - K/nprobe sizing: same driver-side 1-row probe + sqrt policy as
-#   ann_ivf_topk (documented-exempt from the zero-jobs gate); the
-#   declared oracle implements the fixed-K regime, exact at every
-#   driver/test scale.
+# - K/nprobe sizing: same driver-side 1-row probe and the same
+#   ann.ivf_sizing as ann_ivf_topk (documented-exempt from the
+#   zero-jobs gate); the declared oracle implements the fixed-K
+#   regime, exact at every driver/test scale.
 # --------------------------------------------------------------------------
-
-_IVF8_K = 16
-_IVF8_NPROBE = 4
-_IVF8_SCALE_MIN = 200_000
-_IVF8_K_CAP = 65_536
 
 
 def _ivf8_oracle() -> str:
@@ -362,7 +363,7 @@ init AS (
   -- than K centroids whenever a zero vector (qnorm = 0, filtered
   -- above) occupies an id below K (review finding r12)
   SELECT vec_id AS cluster, qv, qnorm FROM nn
-  ORDER BY vec_id LIMIT {_IVF8_K}
+  ORDER BY vec_id LIMIT {_IVF_K}
 ),
 assign AS (
   SELECT vec_id, cluster FROM (
@@ -379,7 +380,7 @@ probes AS (
         ({dot_qc} / (q.qnorm * i.qnorm)) DESC, i.cluster) AS pr
     FROM nn q CROSS JOIN init i
     WHERE q.vec_id < {_N_QUERIES}
-  ) WHERE pr <= {_IVF8_NPROBE}
+  ) WHERE pr <= {_IVF_NPROBE}
 ),
 scored AS (
   SELECT p.query_id, x.vec_id AS neighbor_id,
@@ -411,14 +412,7 @@ def ann_ivf_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cold build — review finding r12; same one-action discipline as
     # ann_ivf_topk's probe)
     codes = _quantized_codes(spark, sf_dir).cache()
-    n_corpus = int(codes.count())
-    if n_corpus <= _IVF8_SCALE_MIN:
-        ivf_k, ivf_nprobe = _IVF8_K, _IVF8_NPROBE
-    else:
-        import math
-
-        ivf_k = max(_IVF8_K, min(_IVF8_K_CAP, math.isqrt(n_corpus)))
-        ivf_nprobe = max(_IVF8_NPROBE, ivf_k // 32)
+    ivf_k, ivf_nprobe = ivf_sizing(int(codes.count()))
     # smallest-K seeding (sparse-id-safe, same as ann_ivf_topk); on the
     # dense driver ids this equals the oracle's `vec_id < K`
     cents = (

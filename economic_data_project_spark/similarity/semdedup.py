@@ -145,6 +145,15 @@ _SCALE_MIN = _K * _TARGET_CLUSTER  # 16384
 _TWO_LEVEL_MIN = 512 * _TARGET_CLUSTER  # 524288
 
 
+def semdedup_k(n: int) -> int:
+    """Cluster count for an ``n``-vector corpus: the fixed driver-scale
+    K up to _SCALE_MIN, then n / _TARGET_CLUSTER capped at the IVF
+    tier's K cap (module docstring)."""
+    if n <= _SCALE_MIN:
+        return _K
+    return min(_IVF_K_CAP, n // _TARGET_CLUSTER)
+
+
 def _semdedup_oracle() -> str:
     cos_ab = COS_DUCK.format(
         a="a.embedding", b="b.embedding", na="a.vnorm", nb="b.vnorm"
@@ -543,10 +552,7 @@ def dedup_semantic_semdedup(
     # — the ann_ivf_topk precedent; the probe's scan fills the shared
     # session cache every downstream consumer reads).
     n_corpus = int(corpus.count())
-    if n_corpus <= _SCALE_MIN:
-        k = _K
-    else:
-        k = min(_IVF_K_CAP, n_corpus // _TARGET_CLUSTER)
+    k = semdedup_k(n_corpus)
     if n_corpus <= _TWO_LEVEL_MIN:
         # r16: the centroid cosine IS the winning cosine the argmin
         # fold already computes (ann.argmin_assign returns it as `c`),

@@ -31,7 +31,7 @@ Scale design (the 100 TB story):
   `dedup_simhash64` (see its section below for the collision math and
   the 1.2M-doc candidate-volume measurement). (The embedding near-dup
   tier handles the corpus-scale regime with size-aware hyperplane
-  bands — `_emb_lsh_params`.)
+  bands — `_plane_policy`.)
 - Embedding near-dup is brute-force here (oracle-checkable); the ANN
   module (similarity/ann.py) carries the bucketed scale path.
 
@@ -801,49 +801,36 @@ _BLOCK = 1024
 # path never runs with more than a few-hundred-fold blowup. NOTE the
 # declared all-pairs oracle is exact only BELOW this cutover (every
 # driver/test scale); above it `dedup_embedding_cosine` silently returns
-# the LSH-recall-limited pair set — the forced-LSH surface is registered
-# separately as `dedup_embedding_cosine_lsh` (rows-only) so the scale
-# path has its own first-class correctness entry.
+# the LSH-recall-limited pair set — the same band scheme is registered,
+# forced at any n, as `dedup_embedding_cosine_lsh_planes` (rows-only) so
+# the scale path has its own first-class correctness entry.
 _EMB_LSH_MIN = 200_000
-_EMB_BANDS = 16
-_EMB_BAND_BITS = 6
 
 
-def _emb_lsh_params(n: int | None) -> tuple[str, int, int]:
-    """(scheme, bands, bits_per_band) scaled to corpus size.
+def _plane_policy(n: int) -> tuple[int, int]:
+    """(bands, bits_per_band) of the hyperplane scheme for a corpus of
+    ``n`` vectors.
 
     Band SPECIFICITY must grow like log2(n): random-pair band collision
     probability is ~2^-bits, so expected junk candidates are
-    ~n^2/2 * bands / 2^bits — with the legacy 6-bit coordinate windows
-    that is ~7.8e9 pairs right AT the 200k routing threshold (the scale
-    path would drown in its own candidates the moment it activates;
-    measured r11, tools/bench_snapshots/r11_emb_lsh_scaling.log). At or
-    below the threshold (every driver/test scale) the legacy
-    (windows, 16, 6) config stays — maximal recall down to the 0.4
-    cosine floor, candidates bounded by the small n. Above it, bits
-    come from seeded random hyperplanes (coordinate signs top out at
-    `dim` independent bits — dim 64 cannot feed 32 bands x 18 bits) with
+    ~n^2/2 * bands / 2^bits (a fixed 6-bit coordinate-window scheme fed
+    112.5M candidates at 30k vectors against 135k for this one —
+    tools/bench_snapshots/r11_emb_lsh_scaling.log). Bits come from
+    seeded random hyperplanes (coordinate signs top out at `dim`
+    independent bits — dim 64 cannot feed 32 bands x 18 bits) with
     bits ~ log2(n) and 32 bands: at n=250k (bits=18) a random pair
     collides somewhere with p ~ 32/2^18 -> ~4e6 junk candidates total,
     while a cosine-0.95 pair still collides with p ~ 0.98 and 0.9 with
     ~0.87 (p_bit = 1 - theta/pi). The weak-similarity tail below ~0.8
-    is candidates-limited — inherent to sign-LSH, documented at
-    `_emb_lsh_pairs`."""
-    if n is None or n <= _EMB_LSH_MIN:
-        return ("windows", _EMB_BANDS, _EMB_BAND_BITS)
-    return _plane_policy(n)
-
-
-def _plane_policy(n: int) -> tuple[str, int, int]:
-    """The hyperplane-scheme sizing for a corpus of ``n`` vectors:
-    32 bands, ~log2(n) bits. Shared by the auto route (above the
-    cutover) and the forced `dedup_embedding_cosine_lsh_planes`
-    surface, so what the driver exercises at small n is parameter-
-    for-parameter the policy the scale tier runs at large n."""
+    is candidates-limited — inherent to sign-LSH. Shared by the auto
+    route (above the cutover) and the forced
+    `dedup_embedding_cosine_lsh_planes` surface, so what the driver
+    exercises at small n is parameter-for-parameter the policy the
+    scale tier runs at large n."""
     import math
 
     bits = min(24, max(10, math.ceil(math.log2(max(n, 2)))))
-    return ("planes", 32, bits)
+    return (32, bits)
 
 
 def _emb_hyperplanes(bands: int, bits: int, dim: int):
@@ -904,11 +891,10 @@ def _emb_plane_signatures(n: DataFrame, bands: int, bits: int, dim: int):
 
     # null / ragged guard (ADVICE r11 #1): np.stack raises on a null or
     # shorter-than-dim embedding (dim is the probed MAX size), killing
-    # the whole stage — where the legacy windows scheme just emitted a
-    # null band_val that dropped out of the equi-join. Such rows cannot
-    # be near-dups anyway (cosine against a full-dim vector is
-    # undefined/null and fails the threshold), so excluding them from
-    # signature generation changes no output pair. CONTRACT: the
+    # the whole stage. Such rows cannot be near-dups anyway (cosine
+    # against a full-dim vector is undefined/null and fails the
+    # threshold), so excluding them from signature generation changes
+    # no output pair. CONTRACT: the
     # embedding column is single-model, uniform-dim; rows of any other
     # length are corrupt and excluded entirely (a mixed-dim corpus
     # would need per-dim sub-corpora — pairs WITHIN a shorter-dim
@@ -925,49 +911,25 @@ def _emb_plane_signatures(n: DataFrame, bands: int, bits: int, dim: int):
     return sig
 
 
-def _emb_band_starts(dim: int) -> list[int]:
-    """0-based start offsets of the L coordinate windows, spread evenly
-    across the dimension (windows may overlap when L*r > dim)."""
-    r, nb = _EMB_BAND_BITS, _EMB_BANDS
-    if dim <= r:
-        return [0]
-    if nb == 1:
-        return [0]
-    return [b * (dim - r) // (nb - 1) for b in range(nb)]
-
-
 def _emb_lsh_pairs(
     e: DataFrame,
     dim: int,
-    n_vectors: int | None = None,
-    params: tuple[str, int, int] | None = None,
+    n_vectors: int,
+    params: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Near-dup pairs via sign-LSH candidate generation: pairs
-    colliding on ANY band (equi-join on (band, band_val)) are verified
-    with the exact rounded cosine — identical values to the brute path,
-    so the routing changes candidate RECALL only.
+    colliding on ANY hyperplane band (equi-join on (band, band_val))
+    are verified with the exact rounded cosine — identical values to
+    the brute path, so the routing changes candidate RECALL only.
 
-    Band scheme is corpus-size-aware (``_emb_lsh_params``): at driver/
-    test scale, band b packs the signs of a 6-coordinate window into an
-    int (16 bands — any-band collision ~0.999 at cosine 0.9, ~0.99 at
-    0.8, ~0.88 at 0.6 and ~0.65 at the 0.4 output floor; sign-agreement
-    per coordinate p = 1 - theta/pi, independence approximation).
-    Above the routing threshold the bits come from seeded random
-    hyperplanes with width ~log2(n) so junk-candidate volume stays
-    ~n * bands instead of n^2/2^6 — there the weak tail below ~0.8 is
+    Bands and bits come from ``_plane_policy(n_vectors)`` unless
+    ``params`` forces them (tests pin small lattices that way). Junk-
+    candidate volume stays ~n * bands; the weak tail below ~0.8 is
     candidates-limited by design and the near-dup regime (>=0.9) keeps
     ~0.87-0.99 recall. More recall = more bands, the standard LSH
     budget knob. The declared all-pairs oracle remains exact at driver
     scale, where the brute path runs."""
-    scheme, n_bands, r = (
-        params if params is not None else _emb_lsh_params(n_vectors)
-    )
-    band_val = (
-        "aggregate(zip_with(slice(embedding, {off}, %d), sequence(0, %d),"
-        " (x, i) -> CASE WHEN cast(x as double) >= 0"
-        " THEN shiftleft(1, i) ELSE 0 END),"
-        " 0, (acc, b) -> acc + b)" % (r, r - 1)
-    )
+    n_bands, r = params if params is not None else _plane_policy(n_vectors)
     # normed-vector store, computed ONCE and cached: the signature
     # explode (self-joined = 2 subtrees) and both verification sides
     # read it, so the cold plan makes one pass over `embeddings`
@@ -982,42 +944,24 @@ def _emb_lsh_pairs(
             F.expr(_NORM_SPARK.format(v="embedding")).alias("norm"),
         ).cache()
     )
-    if scheme == "planes":
-        # SIZE-GATED cache (r16, VERDICT r15 #1): the band self-join
-        # reads `sig` as TWO subtrees, so uncached the signature kernel
-        # (an ArrowEvalPython GEMM over every embedding) executes once
-        # per side. Above the LSH cutover (the only place the auto
-        # route runs this scheme) the frame — (vec_id, band, band_val),
-        # n*bands narrow rows, the materialized signature table a
-        # 100 TB deployment would write anyway — is cached so the GEMM
-        # runs ONCE. BELOW the cutover (every driver/bench scale, ~2000
-        # vectors) the r15 unconditional cache + eager count was the
-        # round's one driver-measured regression (2.79s -> 5.22s): the
-        # count job + cache materialization + extra stage boundary
-        # cost ~2.4s to save a microsecond-scale duplicated GEMM.
-        # asNondeterministic() (in _emb_plane_signatures) already kills
-        # the 4x optimizer duplication for free, so small corpora just
-        # evaluate the kernel once per join side.
-        sig = _emb_plane_signatures(n, n_bands, r, dim)
-        if n_vectors is not None and n_vectors > _EMB_LSH_MIN:
-            sig = sig.cache()
-    else:
-        sig = n.select(
-            "vec_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.expr(band_val.format(off=start + 1)).alias(
-                                "band_val"
-                            ),
-                        )
-                        for b, start in enumerate(_emb_band_starts(dim))
-                    ]
-                )
-            ).alias("bv"),
-        ).select("vec_id", "bv.band", "bv.band_val")
+    # SIZE-GATED cache (r16, VERDICT r15 #1): the band self-join
+    # reads `sig` as TWO subtrees, so uncached the signature kernel
+    # (an ArrowEvalPython GEMM over every embedding) executes once
+    # per side. Above the LSH cutover (the only place the auto
+    # route runs this scheme) the frame — (vec_id, band, band_val),
+    # n*bands narrow rows, the materialized signature table a
+    # 100 TB deployment would write anyway — is cached so the GEMM
+    # runs ONCE. BELOW the cutover (every driver/bench scale, ~2000
+    # vectors) the r15 unconditional cache + eager count was the
+    # round's one driver-measured regression (2.79s -> 5.22s): the
+    # count job + cache materialization + extra stage boundary
+    # cost ~2.4s to save a microsecond-scale duplicated GEMM.
+    # asNondeterministic() (in _emb_plane_signatures) already kills
+    # the 4x optimizer duplication for free, so small corpora just
+    # evaluate the kernel once per join side.
+    sig = _emb_plane_signatures(n, n_bands, r, dim)
+    if n_vectors > _EMB_LSH_MIN:
+        sig = sig.cache()
     cand = (
         sig.alias("a")
         .join(
@@ -1066,10 +1010,10 @@ def _emb_lsh_pairs(
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs cosine near-dup below ``_EMB_LSH_MIN`` vectors
     (the regime the declared oracle covers — every driver/test scale);
-    above it, routes to sign-LSH candidates + exact verification, whose
-    recall near the 0.4 floor is candidates-limited (see
-    ``_emb_lsh_pairs``) — that path's own registry surface is
-    ``dedup_embedding_cosine_lsh``."""
+    above it, routes to hyperplane sign-LSH candidates + exact
+    verification, whose recall near the 0.4 floor is candidates-limited
+    (see ``_emb_lsh_pairs``) — that path's own registry surface is
+    ``dedup_embedding_cosine_lsh_planes``."""
     import numpy as np
     import pandas as pd
 
@@ -1083,12 +1027,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.size("embedding")).alias("dim"),
         F.max("vec_id").alias("max_id"),
     ).head()
-    if probe["n"] > _EMB_LSH_MIN and (probe["dim"] or 0) >= _EMB_BAND_BITS:
+    if probe["n"] > _EMB_LSH_MIN and (probe["dim"] or 0) >= 1:
         # scale path: the all-pairs block layout would replicate each
         # vector ~n/_BLOCK times; route candidates through sign-LSH
-        # bucket collisions and verify only those. Degenerate dims
-        # (< one band width) would give every vector the same empty
-        # band — those stay on the exact path.
+        # bucket collisions and verify only those. An all-empty corpus
+        # has nothing to hash and stays on the exact path.
         return _emb_lsh_pairs(emb, probe["dim"], int(probe["n"]))
     e = emb.select(
         "vec_id",
@@ -1165,33 +1108,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("dedup_embedding_cosine_lsh")  # rows-only: LSH recall is
-# candidates-limited near the cosine floor, so no exact SQL oracle —
-# equality with the brute path on every COLLIDING pair is pinned by
-# tests/test_kernel_golden.py (sign-LSH equality test).
-def dedup_embedding_cosine_lsh(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The 100TB-scale near-dup path, forced: sign-LSH band collisions
-    generate candidates, exact rounded cosine verifies them. This is the
-    plan `dedup_embedding_cosine` routes to above ``_EMB_LSH_MIN``
-    vectors, registered separately so the scale path is driver-visible
-    instead of hiding behind a size branch with an oracle that no longer
-    applies."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe = emb.agg(
-        F.max(F.size("embedding")).alias("dim"),
-        F.count("*").alias("n"),
-    ).head()
-    dim = probe["dim"] or 0
-    if dim < _EMB_BAND_BITS:
-        raise ValueError(
-            f"embedding dim {dim} is below one band width"
-            f" ({_EMB_BAND_BITS}); use dedup_embedding_cosine"
-        )
-    return _emb_lsh_pairs(emb, dim, int(probe["n"]))
-
-
 @query("dedup_embedding_cosine_lsh_planes")  # rows-only: hyperplane
 # bands are recall-limited below ~0.8 cosine by design, so no exact SQL
 # oracle — equality with the brute path on every colliding pair is
@@ -1202,10 +1118,9 @@ def dedup_embedding_cosine_lsh_planes(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The hyperplane band scheme, FORCED at driver scale (VERDICT r11
-    'Next round' #4): `dedup_embedding_cosine_lsh` forces the legacy
-    coordinate-windows scheme below the cutover, so until r12 no
-    registered query ever executed the planes GEMM kernel + band join
-    under the driver's eye — its only coverage was a golden test.
+    'Next round' #4): the auto route runs it only above the cutover,
+    so without this surface no registered query would execute the
+    planes GEMM kernel + band join under the driver's eye.
     Parameters come from `_plane_policy(n)`, the same sizing the auto
     route applies above `_EMB_LSH_MIN`, so every rotation re-verifies
     the exact code path (Arrow kernel, null/ragged guard, band
@@ -1218,17 +1133,10 @@ def dedup_embedding_cosine_lsh_planes(
     dim = probe["dim"] or 0
     if dim < 1:
         raise ValueError("empty embeddings; nothing to hash")
-    return _emb_lsh_pairs(
-        emb,
-        dim,
-        # n_vectors feeds ONLY the signature-cache size gate here (the
-        # band scheme is forced via params): the forced surface runs
-        # the exact kernel+join the scale tier runs, sized like the
-        # scale tier would be at this n — i.e. uncached below the
-        # cutover.
-        n_vectors=int(probe["n"]),
-        params=_plane_policy(int(probe["n"])),
-    )
+    # the forced surface runs the exact kernel+join the scale tier
+    # runs, sized like the scale tier would be at this n — i.e. the
+    # signature frame stays uncached below the cutover
+    return _emb_lsh_pairs(emb, dim, int(probe["n"]))
 
 
 # --------------------------------------------------------------------------
@@ -1321,17 +1229,13 @@ def _driver_union_find(edge_rows: list) -> list[tuple[int, int]]:
     return sorted((x, find(x)) for x in parent)
 
 
-def connected_components(
-    pairs: DataFrame,
-    a: str,
-    b: str,
-    driver_max_edges: int = _CC_DRIVER_MAX_EDGES,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, a: str, b: str) -> DataFrame:
     """Min-label components over an undirected edge list -> (id,
     component_id); representative = min doc_id in the component.
 
-    Small graphs (<= ``driver_max_edges`` edges) route to driver-side
-    union-find; larger graphs run distributed min-label propagation.
+    Small graphs (<= ``_CC_DRIVER_MAX_EDGES`` edges, read at call time
+    so tests can force the loop) route to driver-side union-find;
+    larger graphs run distributed min-label propagation.
 
     Loop-path lineage discipline: every label generation is
     ``localCheckpoint``-ed, which BOTH caches the round's data AND
@@ -1357,8 +1261,8 @@ def connected_components(
     ).persist()
     # limit(cap + 1) bounds the probe: never counts the full edge list
     # just to decide the route
-    n_probe = edges.limit(driver_max_edges + 1).count()
-    if n_probe <= driver_max_edges:
+    n_probe = edges.limit(_CC_DRIVER_MAX_EDGES + 1).count()
+    if n_probe <= _CC_DRIVER_MAX_EDGES:
         rows = [(r.u, r.v) for r in edges.collect()]
         edges.unpersist()
         labels = _driver_union_find(rows)
@@ -1703,8 +1607,7 @@ def dedup_incremental_minhash(
     # (tests/test_plans.py::test_registry_fact_scans_outside_caches).
     #
     # Adjudicated r11 (VERDICT r10 'weak' row): a quiet same-session
-    # A/B (tools/ab_incremental.py, load_start 0.05, both orderings,
-    # 3 reps/lane) measured THIS shape cold 4.5s / warm 3.1-3.7s vs the
+    # A/B (load_start 0.05, both orderings, 3 reps/lane) measured THIS shape cold 4.5s / warm 3.1-3.7s vs the
     # r9 narrow-doc-scan shape cold 7.3-8.4s / warm 5.3-7.1s at sf0.1.
     # The cached-agg broadcast is not just scan-count-correct, it is
     # faster: the broadcast stage runs before the band stages and

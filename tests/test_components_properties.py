@@ -83,9 +83,10 @@ def test_union_find_representative_is_component_min(edges):
     assert all(again[r] == r for r in set(labels.values()))
 
 
-def test_loop_agrees_with_union_find_on_random_graph(spark):
+def test_loop_agrees_with_union_find_on_random_graph(spark, monkeypatch):
     import random
 
+    from economic_data_project_spark.text import dedup
     from economic_data_project_spark.text.dedup import (
         connected_components,
     )
@@ -100,10 +101,9 @@ def test_loop_agrees_with_union_find_on_random_graph(spark):
         (r.doc_id, r.component_id)
         for r in connected_components(pairs, "doc_a", "doc_b").collect()
     }
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
     loop = {
         (r.doc_id, r.component_id)
-        for r in connected_components(
-            pairs, "doc_a", "doc_b", driver_max_edges=0
-        ).collect()
+        for r in connected_components(pairs, "doc_a", "doc_b").collect()
     }
     assert fast == loop and len(fast) > 0

@@ -462,7 +462,7 @@ def test_semdedup_gemm_tier_equals_hof_path(
     }
     # different K -> different clustering; equality vs the HOF output
     # needs the SAME K, so re-run numpy at the forced K for the flags
-    k_forced = min(sd._IVF_K_CAP, len(vecs) // 3)
+    k_forced = sd.semdedup_k(len(vecs))
     _a2, cc2, dup2, m0, m1 = _semdedup_reference(vecs, k=k_forced)
     assert m0 > 1e-4 and m1 > 1e-3
     for i in range(len(vecs)):
@@ -741,6 +741,23 @@ def test_semdedup_two_level_zero_seed_matches_one_level(
     )
     with np.errstate(all="raise"):
         assert list(sd._dominated_ids(pdf, pdf)) == [2]
+
+
+def test_index_sizing_rules():
+    """The above-cutover sizing rules, which no driver-scale corpus
+    reaches: IVF (K, nprobe) shared by both IVF builders, and the
+    SemDeDup cluster count."""
+    from economic_data_project_spark.similarity import semdedup as sd
+    from economic_data_project_spark.similarity.ann import ivf_sizing
+
+    assert ivf_sizing(2_000) == (16, 4)
+    assert ivf_sizing(200_000) == (16, 4)
+    assert ivf_sizing(250_000) == (500, 15)
+    assert ivf_sizing(10**10) == (65_536, 2_048)
+    assert sd.semdedup_k(2_000) == K
+    assert sd.semdedup_k(16_384) == K
+    assert sd.semdedup_k(60_000) == 58
+    assert sd.semdedup_k(10**10) == 65_536
 
 
 def test_semdedup_k_cap_regime(spark, tmp_path, monkeypatch):

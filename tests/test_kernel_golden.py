@@ -431,62 +431,6 @@ def test_minhash_lsh_full_recall_on_planted_neardups(spark, tmp_path):
     assert got == want  # full recall AND no false positives
 
 
-# ------------------------------------------- embedding-LSH scale path
-
-
-def test_emb_lsh_path_equals_brute_on_colliding_pairs(spark):
-    """The sign-LSH routing used above _EMB_LSH_MIN must return EXACTLY
-    the brute-force pairs whose vectors collide in >= 1 sign band —
-    computed here independently in NumPy from the raw embeddings."""
-    from economic_data_project_spark.catalog import load_table
-    from economic_data_project_spark.text.dedup import (
-        _EMB_BAND_BITS,
-        _emb_band_starts,
-        _emb_lsh_pairs,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    raw = {
-        r.vec_id: np.asarray(r.embedding, dtype=np.float64)
-        for r in emb.collect()
-    }
-    bits = {v: (x >= 0) for v, x in raw.items()}
-    dim = len(next(iter(raw.values())))
-    starts = _emb_band_starts(dim)
-
-    def bands(v):
-        r = _EMB_BAND_BITS
-        return tuple(
-            int(sum(int(bits[v][s + i]) << i for i in range(r)))
-            for s in starts
-        )
-
-    sig = {v: bands(v) for v in raw}
-    brute = all_queries()["dedup_embedding_cosine"](spark, SF_DIR).collect()
-    expected = sorted(
-        (r.vec_a, r.vec_b, r.cosine)
-        for r in brute
-        if any(a == b for a, b in zip(sig[r.vec_a], sig[r.vec_b]))
-    )
-    got = sorted(
-        (r.vec_a, r.vec_b, r.cosine)
-        for r in _emb_lsh_pairs(emb, dim).collect()
-    )
-    assert got == expected
-    assert len(expected) > 0  # the fixture corpus has near-dups
-    # the near-dup regime must be essentially fully recalled: every
-    # brute pair at cosine >= 0.8 collides in some band
-    strong = [r for r in brute if r.cosine >= 0.8]
-    recalled = {(r.vec_a, r.vec_b) for r in strong} & {
-        (a, b) for a, b, _ in got
-    }
-    assert len(recalled) >= int(0.95 * len(strong))
-    # and the candidate join is a bucketed equi-join, never a cross join
-    plan = _emb_lsh_pairs(emb, dim)._jdf.queryExecution().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 # ----------------------------------- minhash-LSH recall at the boundary
 
 
@@ -822,8 +766,7 @@ def test_planes_registered_surface_equals_brute_on_driver_corpus(spark):
     pdf = pd.read_parquet(table_path(SF_DIR, "embeddings"))
     V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
     ids = pdf["vec_id"].to_numpy()
-    scheme, bands, bits = _plane_policy(len(pdf))
-    assert scheme == "planes"
+    bands, bits = _plane_policy(len(pdf))
     H = _emb_hyperplanes(bands, bits, V.shape[1]).T
     bitmat = (V @ H) >= 0
     packed = bitmat.reshape(len(V), bands, bits) @ (
@@ -844,12 +787,10 @@ def test_planes_registered_surface_equals_brute_on_driver_corpus(spark):
 
 def _zero_vector_corpus(path) -> tuple[int, list]:
     """A small embeddings corpus with planted near-dup pairs plus one
-    zero vector and a partner it shares a band with under BOTH sign-LSH
-    schemes. Every sign bit of a zero vector is 1 (0 >= 0), so an
-    all-positive partner matches every coordinate window, and the
-    partner is drawn until one hyperplane band of the policy the
-    planes surface applies at this n is all-ones too. Returns the zero
-    vector's id and the vectors."""
+    zero vector and a partner it shares a hyperplane band with. Every
+    sign bit of a zero vector is 1 (0 >= 0), so the partner is drawn
+    until one band of the policy the planes surface applies at this n
+    is all-ones too. Returns the zero vector's id and the vectors."""
     from economic_data_project_spark.text.dedup import (
         _emb_hyperplanes,
         _plane_policy,
@@ -859,10 +800,10 @@ def _zero_vector_corpus(path) -> tuple[int, list]:
     dim = 8
     base = rng.normal(size=(10, dim))
     vecs = [v for b in base for v in (b, b + 0.05 * rng.normal(size=dim))]
-    _, bands, bits = _plane_policy(len(vecs) + 2)
+    bands, bits = _plane_policy(len(vecs) + 2)
     H = _emb_hyperplanes(bands, bits, dim).T
     while True:
-        partner = np.abs(rng.normal(size=dim))
+        partner = rng.normal(size=dim)
         if ((partner @ H) >= 0).reshape(bands, bits).all(axis=1).any():
             break
     zero_id = len(vecs)
@@ -880,7 +821,6 @@ def _zero_vector_corpus(path) -> tuple[int, list]:
     "name",
     [
         "dedup_embedding_cosine",
-        "dedup_embedding_cosine_lsh",
         "dedup_embedding_cosine_lsh_planes",
     ],
 )
@@ -1082,7 +1022,7 @@ def test_emb_plane_signatures_skip_null_and_ragged_rows(spark, tmp_path):
     got = sorted(
         (r.vec_a, r.vec_b)
         for r in _emb_lsh_pairs(
-            emb, dim, params=("planes", 8, 6)
+            emb, dim, len(emb_col), params=(8, 6)
         ).collect()
     )
     assert (0, n) in got  # the planted near-identical pair survives
@@ -1113,15 +1053,13 @@ def test_emb_lsh_plane_scheme_equals_brute_on_colliding_pairs(
         _COSINE_THRESHOLD,
         _emb_hyperplanes,
         _emb_lsh_pairs,
-        _emb_lsh_params,
+        _plane_policy,
     )
 
-    # param policy sanity: at/below the routing bound -> legacy windows;
-    # above -> hyperplanes with log2-scaled bits
-    assert _emb_lsh_params(None)[0] == "windows"
-    assert _emb_lsh_params(200_000)[0] == "windows"
-    scheme, bands_big, bits_big = _emb_lsh_params(250_000)
-    assert scheme == "planes" and bits_big == 18 and bands_big == 32
+    # policy sanity: 32 bands, bits = ceil(log2(n)) clamped to [10, 24]
+    assert _plane_policy(2) == (32, 10)
+    assert _plane_policy(250_000) == (32, 18)
+    assert _plane_policy(10**9) == (32, 24)
 
     rng = np.random.RandomState(11)
     n, dim, bands, bits = 300, 16, 8, 10
@@ -1143,7 +1081,7 @@ def test_emb_lsh_plane_scheme_equals_brute_on_colliding_pairs(
     got = sorted(
         (r.vec_a, r.vec_b, r.cosine)
         for r in _emb_lsh_pairs(
-            emb, dim, params=("planes", bands, bits)
+            emb, dim, n, params=(bands, bits)
         ).collect()
     )
 
