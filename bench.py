@@ -67,7 +67,7 @@ HEADLINE = [
     "signal_families_spine",    # 6-family full-outer composite spine
     # round 2 additions (new rows — no prior-round baseline to regress)
     "sector_indicator_sensitivity",  # 9-corr pair battery chain layer
-    "thread_structure",         # pointer-doubling hierarchy resolution
+    "thread_structure",         # one-window-pass hierarchy resolution
     "ann_ivf_topk",             # IVF inverted-list ANN (Lloyd step)
     "dq_schema_tests",          # one-scan-per-table declarative tests
     # round 4 additions (doc_topics_lda deliberately NOT here: a 20s

@@ -36,8 +36,8 @@ cached partition once under the block manager's write lock and every
 other reader waits for it, so the entry is still computed exactly once
 (pinned by tests/test_caches.py::
 test_unfilled_cache_fills_once_under_concurrent_readers). Only the
-iterative builders (pointer-doubling hierarchy, connected components),
-the bounded routing/sizing probes and the ML fits run jobs at build
+one iterative builder (connected components), the bounded
+routing/sizing probes and the ML fits run jobs at build
 (tests/test_plans.py::_BUILD_JOB_EXEMPT).
 
 Free contract. ``free_session_caches()`` drops EVERY cached frame in the
@@ -65,9 +65,10 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 
 _LOCK = threading.Lock()
-# localCheckpoint frames that escape into returned plans (hierarchy /
-# connected-components final generations): CacheManager cannot see
-# LogicalRDD storage, so these are freed via free_local_checkpoint.
+# localCheckpoint frames that escape into returned plans (connected
+# components' final generation, the registry's only user): CacheManager
+# cannot see LogicalRDD storage, so these are freed via
+# free_local_checkpoint.
 _SESSION_CHECKPOINTS: list[DataFrame] = []
 
 
@@ -118,8 +119,7 @@ def free_local_checkpoint(df: DataFrame) -> bool:
     through py4j internals and assumes the analyzed plan's shape — a
     Spark upgrade changing either must degrade to "generation stays
     cached until session end" (return False), never fail an iterative
-    loop mid-round. Shared by the connected-components and
-    pointer-doubling loops."""
+    loop mid-round. Connected components' loop is its only caller."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
         return True

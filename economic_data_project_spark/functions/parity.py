@@ -13,10 +13,12 @@ The fix used throughout this engine (and by every oracle-checked query):
   cluster this also makes partial aggregation reproducible run-to-run.
 - AVG: exact decimal sum (as double) divided by COUNT — a single IEEE
   division, deterministic.
-- STDDEV/VAR/CORR: computed from exact sums via the textbook identities
-  ((Σx² − (Σx)²/n)/(n−1), etc.) with an identical double expression tree on
-  both engines. Equivalent SQL generators are provided for the DuckDB
-  oracle side so the expression shape matches operation-for-operation.
+- STDDEV/CORR: two-pass. Compute the group mean (davg), join it back,
+  then sum the centered deviations' squares and products exactly
+  (``centered_stddev_samp``, ``centered_corr``; why not the single-pass
+  sum-of-squares identity is under "centered moments" below). Their
+  ``sql_centered_*`` twins render the same double expression tree for
+  the DuckDB oracle side, operation for operation.
 
 Reference parity note: the reference rounds all published metrics to 2-6 dp
 (≈440 ROUND calls, SURVEY.md §2.8) precisely because BigQuery float
@@ -93,13 +95,6 @@ def sql_dsum2(expr: str) -> str:
     return f"CAST(SUM(CAST(({expr}) AS DECIMAL(28,2))) AS DOUBLE)"
 
 
-def centered_var_samp(dev: Column | str) -> Column:
-    """Sample variance from a pre-centered column ``dev = x - mean``."""
-    d = _c(dev) * F.lit(_SHRINK)
-    n = F.count(d).cast("double")
-    return F.when(n > 1, dsum2(d * d) / (n - F.lit(1.0)) * F.lit(1.0e6))
-
-
 def centered_stddev_samp(dev: Column | str) -> Column:
     """Sample stddev from a pre-centered column ``dev = x - mean``."""
     d = _c(dev) * F.lit(_SHRINK)
@@ -149,35 +144,3 @@ def sql_dsum(expr: str) -> str:
 
 def sql_davg(expr: str) -> str:
     return f"{sql_dsum(expr)} / COUNT({expr})"
-
-
-def sql_dvar_samp(expr: str) -> str:
-    e = f"(({expr}) * 1.0e-6)"
-    n = f"CAST(COUNT({e}) AS DOUBLE)"
-    sx = sql_ssum(e)
-    sxx = sql_ssum(f"{e} * {e}")
-    var = f"GREATEST(({sxx} - {sx} * {sx} / {n}) / ({n} - 1.0), 0.0)"
-    return f"CASE WHEN {n} > 1 THEN {var} * 1.0e12 END"
-
-
-def sql_dstddev_samp(expr: str) -> str:
-    e = f"(({expr}) * 1.0e-6)"
-    n = f"CAST(COUNT({e}) AS DOUBLE)"
-    sx = sql_ssum(e)
-    sxx = sql_ssum(f"{e} * {e}")
-    var = f"GREATEST(({sxx} - {sx} * {sx} / {n}) / ({n} - 1.0), 0.0)"
-    return f"CASE WHEN {n} > 1 THEN SQRT({var}) * 1.0e6 END"
-
-
-def sql_dcorr(x: str, y: str) -> str:
-    ex, ey = f"(({x}) * 1.0e-6)", f"(({y}) * 1.0e-6)"
-    n = "CAST(COUNT(1) AS DOUBLE)"
-    sx, sy = sql_ssum(ex), sql_ssum(ey)
-    sxx, syy = sql_ssum(f"{ex} * {ex}"), sql_ssum(f"{ey} * {ey}")
-    sxy = sql_ssum(f"{ex} * {ey}")
-    num = f"({sxy} - {sx} * {sy} / {n})"
-    den = (
-        f"SQRT(GREATEST(({sxx} - {sx} * {sx} / {n})"
-        f" * ({syy} - {sy} * {sy} / {n}), 0.0))"
-    )
-    return f"CASE WHEN {n} > 1 THEN {num} / NULLIF({den}, 0) END"

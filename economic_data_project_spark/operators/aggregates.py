@@ -14,7 +14,8 @@ Reference shapes mirrored here:
   never hash-equal; at 100 TB swap in percentile_approx where a sketch is
   acceptable).
 - Pivot via MAX(CASE WHEN) (economic_regime_classification.sql:11-35) ->
-  native groupBy().pivot() (map-side partial agg; one shuffle).
+  native groupBy().pivot() (map-side partial agg; one shuffle), defined
+  once with the regime rule in ``operators/panels.py``.
 - Unpivot wide->long (inverse of the treasury spread layout,
   agent_treasury_yield_curve_spreads.sql:10-32) -> df.unpivot.
 
@@ -33,12 +34,14 @@ from ..catalog import load_table
 from ..functions.parity import davg, dsum, sql_davg, sql_dsum
 from ..functions import ta
 from ..registry import query
+from .panels import monthly_flag_revenue, monthly_regimes
 
 _REV = "l_extendedprice * (1 - l_discount)"
 
 
-def _rev_col():
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
+def _rev_wide() -> list:
+    """The flag pivot's A/N/R columns under the reference's names."""
+    return [F.col(f).alias(f"rev_{f.lower()}") for f in "ANR"]
 
 
 # --------------------------------------------------------------------------
@@ -178,15 +181,8 @@ ORDER BY month
 def pivot_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return (
-        li.groupBy(F.trunc(F.to_date("l_shipdate"), "month").alias("month"))
-        .pivot("l_returnflag", ["A", "N", "R"])
-        .agg(dsum(_rev_col()))
-        .select(
-            "month",
-            F.col("A").alias("rev_a"),
-            F.col("N").alias("rev_n"),
-            F.col("R").alias("rev_r"),
-        )
+        monthly_flag_revenue(li)
+        .select("month", *_rev_wide())
         .orderBy("month")
     )
 
@@ -329,35 +325,12 @@ ORDER BY month
 @query("economic_regime_classification", oracle=_REGIME_ORACLE)
 def economic_regime_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    wide = (
-        li.groupBy(F.trunc(F.to_date("l_shipdate"), "month").alias("month"))
-        .pivot("l_returnflag", ["A", "N", "R"])
-        .agg(dsum(_rev_col()))
-        .withColumnRenamed("A", "rev_a")
-        .withColumnRenamed("N", "rev_n")
-        .withColumnRenamed("R", "rev_r")
-    )
-    regime = (
-        F.when(
-            F.col("rev_n")
-            > F.coalesce(F.col("rev_a"), F.lit(0))
-            + F.coalesce(F.col("rev_r"), F.lit(0)),
-            "expansion",
-        )
-        .when(
-            F.coalesce(F.col("rev_r"), F.lit(0))
-            > F.coalesce(F.col("rev_n"), F.lit(0)),
-            "contraction",
-        )
-        .otherwise("neutral")
-    )
-    classified = wide.withColumn("regime", regime)
     w = ta.series_window("month")
     wrun = ta.series_window("month").rowsBetween(
         Window.unboundedPreceding, 0
     )
-    transitions = classified.select(
-        "month", "rev_a", "rev_n", "rev_r", "regime",
+    transitions = monthly_regimes(li).select(
+        "month", *_rev_wide(), "regime",
         F.lag("regime").over(w).alias("prev_regime"),
         F.when(F.col("regime") != F.lag("regime").over(w), 1)
         .otherwise(0)

@@ -27,8 +27,9 @@ post-sqrt (irrational) outputs where ties cannot occur. Final order is
 nondeterministic under ties.
 
 Scale: the pair panel is (n_sectors x n_series x months) built by a
-broadcast month join; group stats are distributed hash-aggs; rolling
-windows partition by (symbol, series_code).
+broadcast month join of the ``operators/panels.py`` sector returns,
+indicator counts and regimes; group stats are distributed hash-aggs;
+rolling windows partition by (symbol, series_code).
 """
 
 from __future__ import annotations
@@ -47,6 +48,7 @@ from ..functions.parity import (
     sql_dsum,
 )
 from ..registry import query
+from .panels import indicator_counts, monthly_regimes, sector_returns
 
 _REV = "l_extendedprice * (1 - l_discount)"
 MIN_OVERALL = 24
@@ -254,71 +256,20 @@ def _panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     re = load_table(spark, sf_dir, "region")
 
     ws = Window.partitionBy("series_code").orderBy("month")
-    ind = (
-        orders.groupBy(
-            F.col("o_orderpriority").alias("series_code"),
-            F.trunc(F.to_date("o_orderdate"), "month").alias("month"),
-        )
-        .agg(F.count("*").alias("value"))
-        .select(
-            "series_code",
-            "month",
-            F.round(
-                (F.col("value") - F.lag("value").over(ws))
-                / F.abs(F.lag("value").over(ws))
-                * 100,
-                4,
-            ).alias("indicator_mom_pct"),
-        )
-    )
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,6)"
-    )
-    sector_monthly = (
-        li.join(F.broadcast(su), li.l_suppkey == su.s_suppkey)
-        .join(F.broadcast(na), su.s_nationkey == na.n_nationkey)
-        .join(F.broadcast(re), na.n_regionkey == re.r_regionkey)
-        .groupBy(
-            F.col("r_name").alias("symbol"),
-            F.trunc(F.to_date("l_shipdate"), "month").alias("month"),
-        )
-        .agg((F.sum(rev).cast("double") / F.lit(1e6)).alias("rev"))
-    )
-    wsym = Window.partitionBy("symbol").orderBy("month")
-    sector_returns = sector_monthly.select(
-        "symbol",
+    ind = indicator_counts(orders).select(
+        "series_code",
         "month",
         F.round(
-            (F.col("rev") / F.nullif(F.lag("rev").over(wsym), F.lit(0)) - 1)
+            (F.col("value") - F.lag("value").over(ws))
+            / F.abs(F.lag("value").over(ws))
             * 100,
             4,
-        ).alias("monthly_return"),
+        ).alias("indicator_mom_pct"),
     )
-    regimes = (
-        li.groupBy(
-            F.trunc(F.to_date("l_shipdate"), "month").alias("month")
-        )
-        .pivot("l_returnflag", ["A", "N", "R"])
-        .agg(F.sum(rev).cast("double"))
-        .select(
-            "month",
-            F.when(
-                F.col("N")
-                > F.coalesce(F.col("A"), F.lit(0))
-                + F.coalesce(F.col("R"), F.lit(0)),
-                "expansion",
-            )
-            .when(
-                F.coalesce(F.col("R"), F.lit(0))
-                > F.coalesce(F.col("N"), F.lit(0)),
-                "contraction",
-            )
-            .otherwise("neutral")
-            .alias("regime"),
-        )
-    )
+    returns = sector_returns(li, su, na, re, {"monthly_return": 1})
+    regimes = monthly_regimes(li).select("month", "regime")
     return (
-        sector_returns.join(F.broadcast(ind), on="month")
+        returns.join(F.broadcast(ind), on="month")
         .join(F.broadcast(regimes), on="month", how="left")
         .withColumn("regime", F.coalesce("regime", F.lit("Unknown")))
         .where(

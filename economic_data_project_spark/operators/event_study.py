@@ -13,7 +13,8 @@ surprise->return correlation, and the response-strength score + flags
 
 Mapping: indicators = monthly order counts per order priority (5 series,
 integer-valued so MoM changes are exact); sectors = the five regions'
-monthly revenue returns. Correlation uses the repo's two-pass centered
+monthly revenue returns; both are staging panels from
+``operators/panels.py``. Correlation uses the repo's two-pass centered
 decimal-exact kernel (functions/parity.py). The reference's ROUND(...,2/4)
 display rounding is dropped: conditional means are quotients of clean
 4dp decimals and land on exact rounding ties where the engines'
@@ -42,6 +43,7 @@ from ..functions.parity import (
     sql_dsum,
 )
 from ..registry import query
+from .panels import indicator_counts, sector_returns
 
 _REV = "l_extendedprice * (1 - l_discount)"
 MIN_EVENTS = 24
@@ -204,10 +206,7 @@ def indicator_market_response(spark: SparkSession, sf_dir: str) -> DataFrame:
     na = load_table(spark, sf_dir, "nation")
     re = load_table(spark, sf_dir, "region")
 
-    ind_monthly = orders.groupBy(
-        F.col("o_orderpriority").alias("series_code"),
-        F.trunc(F.to_date("o_orderdate"), "month").alias("month"),
-    ).agg(F.count("*").alias("value"))
+    ind_monthly = indicator_counts(orders)
     ws = Window.partitionBy("series_code").orderBy("month")
     zw = ws.rowsBetween(-12, -1)
     ind = ind_monthly.select(
@@ -246,32 +245,9 @@ def indicator_market_response(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("indicator_direction"),
     )
 
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,6)"
-    )
-    sector_monthly = (
-        li.join(F.broadcast(su), li.l_suppkey == su.s_suppkey)
-        .join(F.broadcast(na), su.s_nationkey == na.n_nationkey)
-        .join(F.broadcast(re), na.n_regionkey == re.r_regionkey)
-        .groupBy(
-            F.col("r_name").alias("symbol"),
-            F.trunc(F.to_date("l_shipdate"), "month").alias("month"),
-        )
-        .agg((F.sum(rev).cast("double") / F.lit(1e6)).alias("rev"))
-    )
-    wsym = Window.partitionBy("symbol").orderBy("month")
-    sector_returns = sector_monthly.select(
-        "symbol",
-        "month",
-        F.round(
-            (F.col("rev") / F.nullif(F.lag("rev").over(wsym), F.lit(0)) - 1)
-            * 100,
-            4,
-        ).alias("monthly_return"),
-    )
-
+    returns = sector_returns(li, su, na, re, {"monthly_return": 1})
     events = (
-        sector_returns.join(F.broadcast(surprises), on="month")
+        returns.join(F.broadcast(surprises), on="month")
         .where(F.col("monthly_return").isNotNull())
     )
     grp = ["symbol", "series_code"]

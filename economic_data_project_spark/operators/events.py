@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..registry import query
+from .panels import daily_revenue
 
 DEC = "decimal(28,6)"
 
@@ -121,12 +122,7 @@ ORDER BY flag, d
 
 @query("signal_event_machine", oracle=_EVENTS_ORACLE)
 def signal_event_machine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    daily = li.groupBy(
-        F.col("l_returnflag").alias("flag"),
-        F.to_date("l_shipdate").alias("d"),
-    ).agg((F.sum(rev.cast(DEC)).cast("double") / F.lit(1e6)).alias("rev"))
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     w20 = Window.partitionBy("flag").orderBy("d").rowsBetween(-19, 0)
     wlag = Window.partitionBy("flag").orderBy("d")
     wrun = (
@@ -210,12 +206,7 @@ ORDER BY flag, trigger_date
 
 @query("backtest_trigger_returns", oracle=_BACKTEST_ORACLE)
 def backtest_trigger_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    daily = li.groupBy(
-        F.col("l_returnflag").alias("flag"),
-        F.to_date("l_shipdate").alias("d"),
-    ).agg((F.sum(rev.cast(DEC)).cast("double") / F.lit(1e6)).alias("rev"))
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     w20 = Window.partitionBy("flag").orderBy("d").rowsBetween(-19, 0)
     wlag = Window.partitionBy("flag").orderBy("d")
     wfwd = Window.partitionBy("flag").orderBy("d").rowsBetween(1, 21)

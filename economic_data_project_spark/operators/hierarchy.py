@@ -10,30 +10,18 @@ deep-thread and quality flags, reddit_thread_structure.sql:25-80).
 The event log has no explicit parent_id, so edges are derived
 deterministically: an event's parent is the same user's previous event
 when the gap is <= 6 hours (session threading); otherwise it starts a
-new thread. Chains are resolved with **pointer doubling** (path
-halving): each of O(log max_depth) rounds joins the pointer table to
-itself, jumping every node's ancestor pointer twice as far. That is the
-scale-correct distributed formulation — depth-by-depth peeling (the
-recursive-CTE shape DuckDB runs in the oracle) needs O(depth) passes
-and leaves most of the cluster idle per round, while pointer doubling
-is O(log d) full-parallel shuffles. Each round is localCheckpoint'ed so
-both the lineage AND the logical plan stay constant-size per round (a
-persisted-only round doubles the plan each iteration).
-
-The single driver-side scalar (max events per user, an upper bound on
-chain length) sizes the iteration count — a metadata aggregate, same
-pattern as MLlib's iterative jobs, not a data collect.
+new thread. Every thread is therefore a contiguous run of the user's
+(ts, event_id)-ordered events, so root and depth come from one window
+pass (see ``thread_structure``) where the oracle runs the recursive
+CTE depth by depth.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caches import free_local_checkpoint, register_session_checkpoint
 from ..catalog import load_table
 from ..functions.parity import davg, dsum, sql_davg, sql_dsum
 from ..registry import query
@@ -85,112 +73,6 @@ ORDER BY thread_id
 """
 
 
-def resolve_hierarchy(linked: DataFrame) -> DataFrame:
-    """Pointer-doubling root/depth resolution over (event_id, parent_id).
-
-    Returns (event_id, root_id, depth). ``parent_id`` NULL marks roots.
-    """
-    root_flag = F.when(F.col("parent_id").isNull(), 1).otherwise(0)
-    depth_seed = F.when(F.col("parent_id").isNull(), 0).otherwise(1)
-    # Bound on chain length -> iteration count (metadata scalar). When
-    # the frame carries the session order (ts), the exact longest run
-    # via gaps-and-islands over the root flag — each extra doubling
-    # round is a full self-join, so a tight bound matters. For generic
-    # forests (no ts) fall back to the loose max-events-per-user bound.
-    #
-    # r15 (guide §2.4 "two operations keyed the same way share one
-    # exchange"): the gaps-and-islands `grp` rides the SAME
-    # (user_id, ts) window pass that the initial pointer checkpoint
-    # already materializes, so the bound job becomes a cheap aggregate
-    # over the CHECKPOINTED rows instead of a second full scan + sort
-    # of the edge frame (the previous shape computed the session
-    # window twice per invocation — measured ~2s of thread_structure's
-    # bench cost, and at 100 TB a whole extra pass over the edges).
-    if "ts" in linked.columns:
-        wq = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        wcum = wq.rowsBetween(Window.unboundedPreceding, 0)
-        base = linked.select(
-            F.col("event_id").alias("id"),
-            F.coalesce("parent_id", "event_id").alias("anc"),
-            depth_seed.alias("d"),
-            "user_id",
-            F.sum(root_flag).over(wcum).alias("grp"),
-        ).localCheckpoint(eager=True)
-        max_chain = (
-            base.groupBy("user_id", "grp")
-            .agg(F.count("*").alias("n"))
-            .agg(F.max("n"))
-            .first()[0]
-            or 1
-        )
-        ptr = base.select("id", "anc", "d")
-    else:
-        ptr = linked.select(
-            F.col("event_id").alias("id"),
-            F.coalesce("parent_id", "event_id").alias("anc"),
-            depth_seed.alias("d"),
-        ).localCheckpoint(eager=True)
-        base = ptr
-        max_chain = (
-            linked.groupBy("user_id")
-            .agg(F.count("*").alias("n"))
-            .agg(F.max("n"))
-            .first()[0]
-            or 1
-        )
-    # NOTE on the hop join strategy: an r15 experiment size-routed the
-    # hop side through F.broadcast() below (the checkpointed frame has
-    # no stats, so Catalyst plans SortMergeJoin) — measured NO faster
-    # at bench scale (2.9s vs 2.5s for 4 rounds: the per-round driver
-    # collect + broadcast build offsets the saved shuffle on a 100k-row
-    # table), so the plain shuffle join stays.
-    for _ in range(max(1, math.ceil(math.log2(max(2, max_chain))))):
-        hop = ptr.select(
-            F.col("id").alias("h_id"),
-            F.col("anc").alias("h_anc"),
-            F.col("d").alias("h_d"),
-        )
-        nxt = (
-            ptr.join(hop, ptr.anc == hop.h_id)
-            .select(
-                "id",
-                F.col("h_anc").alias("anc"),
-                (F.col("d") + F.col("h_d")).alias("d"),
-            )
-            # localCheckpoint, not persist (r9): each round SELF-joins
-            # the prior round (two reads of one frame), so persist made
-            # execution linear — but it left the LOGICAL plan intact,
-            # and a plan that references its predecessor twice DOUBLES
-            # per round: 2^rounds rendered subtrees, exponential
-            # plan-string/analysis cost on the driver at depth (the
-            # identical hazard text/dedup.connected_components fixed).
-            # eager=True truncates every round to a bare LogicalRDD —
-            # constant plan size at any depth; superseded rounds are
-            # freed through the shared guarded helper. On a real
-            # cluster prefer checkpoint() with a checkpoint dir for
-            # executor-loss tolerance.
-            .localCheckpoint(eager=True)
-        )
-        # round 1 consumes the INITIAL checkpoint through the `ptr`
-        # projection — free the underlying `base` frame (on the ts path
-        # ptr is a projection, not the storage owner); later rounds own
-        # their checkpoint directly
-        free_local_checkpoint(base if base is not None else ptr)
-        base = None
-        ptr = nxt
-    # the FINAL generation escapes into the returned plan, so it cannot
-    # be freed here (consumers read it lazily) and DataFrame.unpersist
-    # cannot see LogicalRDD storage — register it so
-    # caches.free_session_caches() releases it (ADVICE r9: one leaked
-    # event-scale checkpoint per invocation otherwise)
-    register_session_checkpoint(ptr)
-    return ptr.select(
-        F.col("id").alias("event_id"),
-        F.col("anc").alias("root_id"),
-        F.col("d").alias("depth"),
-    )
-
-
 @query("thread_structure", oracle=_ORACLE)
 def thread_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 (guide §8 — use what the optimizer cannot know): THIS query's
@@ -202,11 +84,11 @@ def thread_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     # root-flagged event_id at-or-before the row, depth = row_number
     # minus the root's row_number (both running aggregates over the
     # SAME partition/ordering the root flag itself needs, sharing one
-    # exchange+sort, guide §2.4). The generic pointer-doubling
-    # resolver (resolve_hierarchy above, kept for arbitrary forests)
-    # needed O(log depth) blocking self-join + localCheckpoint rounds
-    # — ~9 sequential jobs at bench scale and 7 extra shuffles of the
-    # edge table at any scale — to compute exactly the same columns.
+    # exchange+sort, guide §2.4). The pointer-doubling resolver this
+    # replaced needed O(log depth) blocking self-join + localCheckpoint
+    # rounds — ~9 sequential jobs at bench scale and 7 extra shuffles
+    # of the edge table at any scale — to compute exactly the same
+    # columns.
     # Result equality vs the recursive-CTE oracle is pinned by the
     # DuckDB hash oracle; per-island equivalence: parent_id IS NULL
     # starts an island, every non-root's parent is the previous row,

@@ -2,8 +2,9 @@
 (technical_indicator_daily.sql:5-26,183-251: ~40 indicator columns per
 entity/date) rebuilt from the ta primitive library.
 
-Entity = l_returnflag; OHLCV stand-ins from the daily lineitem aggregate:
-close = revenue, high/low = max/min extended price (scaled), volume = qty.
+Entity = l_returnflag; OHLCV stand-ins from the daily lineitem aggregate
+(``panels.daily_ohlcv``, shared with the signal chain): close = revenue,
+high/low = max/min extended price (scaled), volume = qty.
 
 Staged CTE shape preserved deliberately: both BigQuery and Spark reject
 nested analytic functions (SURVEY.md §4), so stage 1 computes lags +
@@ -25,6 +26,7 @@ from pyspark.sql.window import Window
 from ..catalog import load_table
 from ..functions import ta
 from ..registry import query
+from .panels import daily_ohlcv
 
 DEC = "decimal(28,6)"
 
@@ -32,29 +34,6 @@ _RSI_N = 14
 _RSI_ALPHA = 1.0 / _RSI_N
 _EMA12_A = 2.0 / 13.0
 _EMA26_A = 2.0 / 27.0
-
-
-def _daily_ohlcv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOTE (r16): a spread_scan here (the pricing_summary fix for the
-    # decimal-cast floor) measured 0.86x in a 7-rep alternating A/B
-    # with (l_orderkey, l_linenumber) keys, and a DEAD WASH (2.595 vs
-    # 2.604 median, 9 reps) re-measured with non-widening
-    # (l_extendedprice, l_shipdate) keys — this agg has only TWO
-    # decimal casts per row, so the spread exchange is never paid
-    # back. Left unspread; pricing_summary (5 casts, terminal agg)
-    # and nation_revenue (cast + 4 broadcast probes) keep theirs.
-    li = load_table(spark, sf_dir, "lineitem")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return li.groupBy(
-        F.col("l_returnflag").alias("flag"),
-        F.to_date("l_shipdate").alias("d"),
-    ).agg(
-        (F.sum(rev.cast(DEC)).cast("double") / F.lit(1e6)).alias("close"),
-        (F.max("l_extendedprice") / F.lit(1e4)).alias("high"),
-        (F.min("l_extendedprice") / F.lit(1e4)).alias("low"),
-        (F.sum(F.col("l_quantity").cast(DEC)).cast("double") / F.lit(1e3))
-        .alias("volume"),
-    )
 
 
 _OHLCV_CTE = """
@@ -158,9 +137,8 @@ _INDICATORS_ORACLE = (
 
 @query("technical_indicator_daily", oracle=_INDICATORS_ORACLE)
 def technical_indicator_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return indicators_from_daily(_daily_ohlcv(spark, sf_dir)).orderBy(
-        "flag", "d"
-    )
+    li = load_table(spark, sf_dir, "lineitem")
+    return indicators_from_daily(daily_ohlcv(li)).orderBy("flag", "d")
 
 
 def indicators_from_daily(daily: DataFrame) -> DataFrame:

@@ -19,8 +19,9 @@ cover exactly the same pairs. ``quarterly_return_pct`` deliberately
 duplicates the 3-month column — the reference aliases the same input
 twice (:18-19) and we keep that shape.
 
-Scale: one monthly panel (broadcast month join), one hash-agg per
-table, NTILE windows partitioned per (symbol, series).
+Scale: one monthly panel (broadcast month join of the
+``operators/panels.py`` sector returns and indicator counts), one
+hash-agg per table, NTILE windows partitioned per (symbol, series).
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ from ..functions.parity import (
     sql_dsum,
 )
 from ..registry import query
+from .panels import indicator_counts, sector_returns
 
 _REV = "l_extendedprice * (1 - l_discount)"
 MIN_OBS = 10
@@ -177,11 +179,8 @@ def leading_econ_return_indicator(
     ws = Window.partitionBy("series_name").orderBy("month")
     lagv = F.lag("value").over(ws)
     ind = (
-        orders.groupBy(
-            F.col("o_orderpriority").alias("series_name"),
-            F.trunc(F.to_date("o_orderdate"), "month").alias("month"),
-        )
-        .agg(F.count("*").alias("value"))
+        indicator_counts(orders)
+        .withColumnRenamed("series_code", "series_name")
         .select(
             "series_name",
             "month",
@@ -193,43 +192,14 @@ def leading_econ_return_indicator(
             ).alias("econ"),
         )
     )
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,6)"
-    )
-    sector_monthly = (
-        li.join(F.broadcast(su), li.l_suppkey == su.s_suppkey)
-        .join(F.broadcast(na), su.s_nationkey == na.n_nationkey)
-        .join(F.broadcast(re), na.n_regionkey == re.r_regionkey)
-        .groupBy(
-            F.col("r_name").alias("symbol"),
-            F.trunc(F.to_date("l_shipdate"), "month").alias("month"),
-        )
-        .agg((F.sum(rev).cast("double") / F.lit(1e6)).alias("rev"))
-    )
-    wsym = Window.partitionBy("symbol").orderBy("month")
-    sector_returns = sector_monthly.select(
-        "symbol",
-        "month",
-        *[
-            F.round(
-                (
-                    F.col("rev")
-                    / F.nullif(F.lag("rev", m).over(wsym), F.lit(0))
-                    - 1
-                )
-                * 100,
-                4,
-            ).alias(h)
-            for h, m in HORIZONS.items()
-        ],
-    )
+    returns = sector_returns(li, su, na, re, HORIZONS)
     # cached (r9): the panel (region-symbol x priority-series x month,
     # dimension-sized) feeds THREE consumers — the group means, the
     # corr table, and the quintile pass — and uncached each re-ran the
     # full lineitem join-agg AND the orders indicator agg (3 scans of
     # each fact cold). repartition(1): see data_points.py.
     panel = (
-        sector_returns.join(F.broadcast(ind), on="month")
+        returns.join(F.broadcast(ind), on="month")
         .where(F.col("econ").isNotNull())
         .withColumn("quarterly_return_pct", F.col("q1"))
         .repartition(1)

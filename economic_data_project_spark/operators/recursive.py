@@ -29,8 +29,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..registry import query
-
-DEC = "decimal(28,6)"
+from .panels import daily_revenue
 
 _DAILY_CTE = """
 daily AS (
@@ -42,15 +41,6 @@ daily AS (
   GROUP BY l_returnflag, CAST(l_shipdate AS DATE)
 )
 """
-
-
-def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return li.groupBy(
-        F.col("l_returnflag").alias("flag"),
-        F.to_date("l_shipdate").alias("d"),
-    ).agg((F.sum(rev.cast(DEC)).cast("double") / F.lit(1e6)).alias("rev"))
 
 
 # --------------------------------------------------------------------------
@@ -89,7 +79,7 @@ ORDER BY flag, d
 
 @query("ema_exact_recursive", oracle=_EMA_ORACLE)
 def ema_exact_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     a_ema = 2.0 / (_EMA_SPAN + 1)
     a_rma = 1.0 / _RMA_N
 
@@ -153,7 +143,7 @@ ORDER BY flag, d
 
 @query("date_spine_gapfill", oracle=_GAPFILL_ORACLE)
 def date_spine_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     bounds = daily.groupBy("flag").agg(
         F.min("d").alias("d0"), F.max("d").alias("d1")
     )

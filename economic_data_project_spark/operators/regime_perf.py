@@ -10,9 +10,10 @@ relative performance, and a within-regime leaderboard rank (:122-151).
 Mapping onto the synthetic warehouse: sectors = the five regions (the
 reference's 11 sector ETFs), with the sector-name/type literal seed
 (:44-60) as an inline broadcast mapping; the regime series is this
-repo's ``economic_regime_classification`` month classifier re-used as a
-shared CTE — the same composed-model spine as the reference's
-``ref('economic_regime_classification')``.
+repo's ``economic_regime_classification`` month classifier, and both it
+and the sector returns come from the shared staging panels
+(``operators/panels.py``) — the same composed-model spine as the
+reference's ``ref('economic_regime_classification')``.
 
 Determinism deviations (documented): the reference's ROUND(...,2)
 display rounding is dropped — group means/stddevs over the 4dp-rounded
@@ -37,6 +38,7 @@ from pyspark.sql.window import Window
 from ..catalog import load_table
 from ..functions.parity import sql_davg, sql_dsum
 from ..registry import query
+from .panels import monthly_regimes, sector_returns
 
 SECTOR_SEED = [
     ("AFRICA", "Materials", "Cyclical"),
@@ -151,58 +153,8 @@ def sector_regime_performance(spark: SparkSession, sf_dir: str) -> DataFrame:
     su = load_table(spark, sf_dir, "supplier")
     na = load_table(spark, sf_dir, "nation")
     re = load_table(spark, sf_dir, "region")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,6)"
-    )
-
-    sector_monthly = (
-        li.join(F.broadcast(su), li.l_suppkey == su.s_suppkey)
-        .join(F.broadcast(na), su.s_nationkey == na.n_nationkey)
-        .join(F.broadcast(re), na.n_regionkey == re.r_regionkey)
-        .groupBy(
-            F.col("r_name").alias("symbol"),
-            F.trunc(F.to_date("l_shipdate"), "month").alias("month"),
-        )
-        .agg((F.sum(rev).cast("double") / F.lit(1e6)).alias("rev"))
-    )
-    wsym = Window.partitionBy("symbol").orderBy("month")
-    sector_returns = sector_monthly.select(
-        "symbol",
-        "month",
-        F.round(
-            (
-                F.col("rev")
-                / F.nullif(F.lag("rev").over(wsym), F.lit(0))
-                - 1
-            )
-            * 100,
-            4,
-        ).alias("monthly_return"),
-    )
-
-    regimes = (
-        li.groupBy(
-            F.trunc(F.to_date("l_shipdate"), "month").alias("month")
-        )
-        .pivot("l_returnflag", ["A", "N", "R"])
-        .agg(F.sum(rev).cast("double"))
-        .select(
-            "month",
-            F.when(
-                F.col("N")
-                > F.coalesce(F.col("A"), F.lit(0))
-                + F.coalesce(F.col("R"), F.lit(0)),
-                "expansion",
-            )
-            .when(
-                F.coalesce(F.col("R"), F.lit(0))
-                > F.coalesce(F.col("N"), F.lit(0)),
-                "contraction",
-            )
-            .otherwise("neutral")
-            .alias("regime"),
-        )
-    )
+    returns = sector_returns(li, su, na, re, {"monthly_return": 1})
+    regimes = monthly_regimes(li).select("month", "regime")
     seed = spark.createDataFrame(
         SECTOR_SEED, ["symbol", "sector_name", "sector_type"]
     )
@@ -212,7 +164,7 @@ def sector_regime_performance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regime pivot (6 fact scans cold). repartition(1): see
     # data_points.py for the rationale.
     panel = (
-        sector_returns.join(F.broadcast(regimes), on="month")
+        returns.join(F.broadcast(regimes), on="month")
         .join(F.broadcast(seed), on="symbol", how="left")
         .where(F.col("monthly_return").isNotNull())
         .repartition(1)
@@ -369,32 +321,7 @@ ORDER BY rh.month
 @query("factor_tilts", oracle=_TILTS_ORACLE)
 def factor_tilts(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,6)"
-    )
-    regimes = (
-        li.groupBy(
-            F.trunc(F.to_date("l_shipdate"), "month").alias("month")
-        )
-        .pivot("l_returnflag", ["A", "N", "R"])
-        .agg(F.sum(rev).cast("double"))
-        .select(
-            "month",
-            F.when(
-                F.col("N")
-                > F.coalesce(F.col("A"), F.lit(0))
-                + F.coalesce(F.col("R"), F.lit(0)),
-                "expansion",
-            )
-            .when(
-                F.coalesce(F.col("R"), F.lit(0))
-                > F.coalesce(F.col("N"), F.lit(0)),
-                "contraction",
-            )
-            .otherwise("neutral")
-            .alias("regime"),
-        )
-    )
+    regimes = monthly_regimes(li).select("month", "regime")
     seed = spark.createDataFrame(
         TILT_SEED, ["regime", *_TILT_COLS]
     )

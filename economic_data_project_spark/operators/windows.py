@@ -19,12 +19,14 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..registry import query
+from .panels import daily_revenue
 
 DEC = "decimal(28,6)"
 _REV = "l_extendedprice * (1 - l_discount)"
 
 # Shared daily series: revenue per (returnflag, ship day) — the "price
-# panel at an entity grain" shape (technical_price_universe.sql:7-9).
+# panel at an entity grain" shape (technical_price_universe.sql:7-9);
+# the Spark side is panels.daily_revenue.
 _DAILY_CTE = f"""
 daily AS (
   SELECT l_returnflag AS flag,
@@ -35,17 +37,6 @@ daily AS (
   GROUP BY l_returnflag, CAST(l_shipdate AS DATE)
 )
 """
-
-
-def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return li.groupBy(
-        F.col("l_returnflag").alias("flag"),
-        F.to_date("l_shipdate").alias("d"),
-    ).agg(
-        (F.sum(rev.cast(DEC)).cast("double") / F.lit(1000000.0)).alias("rev")
-    )
 
 
 def _wsum(c: Column, w) -> Column:
@@ -73,7 +64,7 @@ ORDER BY flag, d
 
 @query("window_lag_lead", oracle=_LAG_LEAD_ORACLE)
 def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     w = Window.partitionBy("flag").orderBy("d")
     lag1 = F.lag("rev").over(w)
     return daily.select(
@@ -125,7 +116,7 @@ ORDER BY flag, d
 
 @query("rolling_stats", oracle=_ROLLING_ORACLE)
 def rolling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     w20 = (
         Window.partitionBy("flag").orderBy("d").rowsBetween(-19, 0)
     )
@@ -182,7 +173,7 @@ ORDER BY flag, d
 
 @query("range_frame_calendar", oracle=_RANGE_FRAME_ORACLE)
 def range_frame_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily(spark, sf_dir).withColumn(
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem")).withColumn(
         "day_num", F.datediff("d", F.lit("1970-01-01"))
     )
     w30 = (
@@ -231,7 +222,7 @@ ORDER BY flag, d
 
 @query("cumulative_obv", oracle=_CUMULATIVE_ORACLE)
 def cumulative_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     wo = Window.partitionBy("flag").orderBy("d")
     wcum = wo.rowsBetween(Window.unboundedPreceding, 0)
     prev = F.lag("rev").over(wo)
@@ -282,7 +273,7 @@ ORDER BY flag, d
 
 @query("running_trigger_state", oracle=_RUNNING_STATE_ORACLE)
 def running_trigger_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     wo = Window.partitionBy("flag").orderBy("d")
     wcum = wo.rowsBetween(Window.unboundedPreceding, 0)
     keyed = daily.withColumn(
@@ -325,7 +316,7 @@ ORDER BY flag, d
 
 @query("first_last_month", oracle=_FIRST_LAST_ORACLE)
 def first_last_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     wm = (
         Window.partitionBy("flag", F.trunc("d", "month"))
         .orderBy("d")
@@ -363,7 +354,7 @@ ORDER BY flag, d
 
 @query("forward_excursion", oracle=_FORWARD_ORACLE)
 def forward_excursion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     wf = Window.partitionBy("flag").orderBy("d").rowsBetween(1, 21)
     rev = F.col("rev")
     return daily.select(
@@ -523,7 +514,7 @@ ORDER BY flag, d
 
 @query("ewm_window_array", oracle=_EWM_ORACLE)
 def ewm_window_array(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     w = (
         Window.partitionBy("flag").orderBy("d").rowsBetween(-(_EWM_SPAN - 1), 0)
     )
@@ -567,7 +558,7 @@ ORDER BY flag, d
 
 @query("expanding_percentile_rank", oracle=_EXPANDING_PCT_ORACLE)
 def expanding_percentile_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     a = daily.alias("a")
     b = daily.alias("b")
     return (
@@ -729,7 +720,7 @@ ORDER BY flag, month
 
 @query("month_end_picks", oracle=_MONTH_END_ORACLE)
 def month_end_picks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     month = F.trunc(F.to_date("d"), "month")
     wm = Window.partitionBy("flag", month).orderBy("d")
     monthly = daily.select(
@@ -792,7 +783,7 @@ ORDER BY flag, d
 
 @query("split_adjustment_product", oracle=_SPLIT_ADJ_ORACLE)
 def split_adjustment_product(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     wlag = Window.partitionBy("flag").orderBy("d")
     ratio = daily.withColumn(
         "split_ratio",

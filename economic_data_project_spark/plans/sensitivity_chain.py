@@ -6,10 +6,12 @@ The reference's macro-sensitivity spine, run through the DAG executor:
     -> ``sector_sensitivity_summary``   (analysis/sector_sensitivity_summary.sql)
     -> ``portfolio_macro_factors``      (analysis/portfolio_macro_factors.sql)
 
-Layer 1 builds the (sector x indicator) monthly panel with 1/2/3/6-month
-indicator lags and computes nine correlations per pair — four
-contemporaneous horizons, four lagged (predictive), one 3mo-vs-3mo —
-plus the best-lag pick and the 0.3/0.2/0.5 sensitivity score
+Layer 0 joins the shared staging panels (``operators/panels.py``
+sector returns and indicator counts) into the (sector x indicator)
+monthly panel with 1/2/3/6-month indicator lags. Layer 1 computes nine
+correlations per pair — four contemporaneous horizons, four lagged
+(predictive), one 3mo-vs-3mo — plus the best-lag pick and the
+0.3/0.2/0.5 sensitivity score
 (sector_indicator_sensitivity.sql:143-248). Layer 2 ranks indicators
 within sectors (ROW_NUMBER + PERCENT_RANK), attaches sector- and
 category-level context, and flags top-N / predictive power
@@ -45,6 +47,7 @@ from ..functions.parity import (
     sql_davg,
     sql_dsum,
 )
+from ..operators.panels import indicator_counts, sector_returns
 from ..registry import query
 from .dag import ModelGraph
 
@@ -98,37 +101,6 @@ def sens_panel(spark: SparkSession) -> DataFrame:
     na = spark.table("__src_nation")
     re = spark.table("__src_region")
 
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,6)"
-    )
-    sector_monthly = (
-        li.join(F.broadcast(su), li.l_suppkey == su.s_suppkey)
-        .join(F.broadcast(na), su.s_nationkey == na.n_nationkey)
-        .join(F.broadcast(re), na.n_regionkey == re.r_regionkey)
-        .groupBy(
-            F.col("r_name").alias("symbol"),
-            F.trunc(F.to_date("l_shipdate"), "month").alias("month"),
-        )
-        .agg((F.sum(rev).cast("double") / F.lit(1e6)).alias("rev"))
-    )
-    wsym = Window.partitionBy("symbol").orderBy("month")
-    sector_returns = sector_monthly.select(
-        "symbol",
-        "month",
-        *[
-            F.round(
-                (
-                    F.col("rev")
-                    / F.nullif(F.lag("rev", m).over(wsym), F.lit(0))
-                    - 1
-                )
-                * 100,
-                4,
-            ).alias(h)
-            for h, m in RET_HORIZONS.items()
-        ],
-    )
-
     ws = Window.partitionBy("series_code").orderBy("month")
 
     def pct(lag_n: int) -> Column:
@@ -138,20 +110,14 @@ def sens_panel(spark: SparkSession) -> DataFrame:
             F.round((F.col("value") - prev) / F.abs(prev) * 100, 4),
         )
 
-    ind = (
-        orders.groupBy(
-            F.col("o_orderpriority").alias("series_code"),
-            F.trunc(F.to_date("o_orderdate"), "month").alias("month"),
-        )
-        .agg(F.count("*").alias("value"))
-        .select(
-            "series_code",
-            "month",
-            pct(1).alias("indicator_mom_pct"),
-            pct(3).alias("indicator_3mo_pct"),
-        )
+    ind = indicator_counts(orders).select(
+        "series_code",
+        "month",
+        pct(1).alias("indicator_mom_pct"),
+        pct(3).alias("indicator_3mo_pct"),
     )
-    joined = sector_returns.join(F.broadcast(ind), on="month")
+    returns = sector_returns(li, su, na, re, RET_HORIZONS)
+    joined = returns.join(F.broadcast(ind), on="month")
     wpair = Window.partitionBy("symbol", "series_code").orderBy("month")
     return joined.select(
         "*",

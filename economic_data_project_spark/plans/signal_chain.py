@@ -41,6 +41,7 @@ from ..operators.indicators import (
     _IND_FINAL,
     indicators_from_daily,
 )
+from ..operators.panels import daily_ohlcv
 from ..registry import query
 from .dag import ModelGraph
 
@@ -173,26 +174,7 @@ GRAPH = ModelGraph()
 
 @GRAPH.model("tech_daily_ohlcv", materialization="cached_view")
 def tech_daily_ohlcv(spark: SparkSession) -> DataFrame:
-    # NOTE (r16): spread_scan here measured 0.89-0.98x across the four
-    # chain consumers in a 7-rep alternating A/B (two casts per row,
-    # downstream re-exchanges by flag anyway) — see
-    # indicators._daily_ohlcv. Left unspread.
-    li = spark.table("__src_lineitem")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return li.groupBy(
-        F.col("l_returnflag").alias("flag"),
-        F.to_date("l_shipdate").alias("d"),
-    ).agg(
-        (F.sum(rev.cast("decimal(28,6)")).cast("double") / F.lit(1e6)).alias(
-            "close"
-        ),
-        (F.max("l_extendedprice") / F.lit(1e4)).alias("high"),
-        (F.min("l_extendedprice") / F.lit(1e4)).alias("low"),
-        (
-            F.sum(F.col("l_quantity").cast("decimal(28,6)")).cast("double")
-            / F.lit(1e3)
-        ).alias("volume"),
-    )
+    return daily_ohlcv(spark.table("__src_lineitem"))
 
 
 @GRAPH.model("tech_indicators", deps=("tech_daily_ohlcv",))

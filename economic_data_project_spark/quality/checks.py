@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..operators.panels import daily_revenue
 from ..registry import query
 
 DEC = "decimal(28,6)"
@@ -98,15 +99,6 @@ daily AS (
 """
 
 
-def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return li.groupBy(
-        F.col("l_returnflag").alias("flag"),
-        F.to_date("l_shipdate").alias("d"),
-    ).agg((F.sum(rev.cast(DEC)).cast("double") / F.lit(1e6)).alias("rev"))
-
-
 _Z_THRESHOLD = 2.5
 
 _ZSCORE_ORACLE = f"""
@@ -137,7 +129,7 @@ ORDER BY flag, d
 
 @query("dq_zscore_anomalies", oracle=_ZSCORE_ORACLE)
 def dq_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     wp = Window.partitionBy("flag").orderBy("d").rowsBetween(-21, -1)
     rev = F.col("rev")
     n = F.count(rev).over(wp)
@@ -197,7 +189,7 @@ ORDER BY flag, d
 
 @query("dq_value_spikes", oracle=_SPIKES_ORACLE)
 def dq_value_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     w = Window.partitionBy("flag").orderBy("d")
     chg = daily.withColumn("prev_rev", F.lag("rev").over(w))
     jump = (F.col("rev") - F.col("prev_rev")) / F.col("prev_rev")

@@ -36,6 +36,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..functions import ta
+from ..operators.panels import daily_revenue
 from ..registry import query
 
 DEC = "decimal(28,6)"
@@ -43,18 +44,6 @@ DEC = "decimal(28,6)"
 # --------------------------------------------------------------------------
 # Shared panels.
 # --------------------------------------------------------------------------
-
-
-def _daily_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily revenue per l_returnflag (3 series) — the signal input grain."""
-    li = load_table(spark, sf_dir, "lineitem")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return li.groupBy(
-        F.col("l_returnflag").alias("flag"),
-        F.to_date("l_shipdate").alias("d"),
-    ).agg(
-        (F.sum(rev.cast(DEC)).cast("double") / F.lit(1e6)).alias("rev")
-    )
 
 
 _DAILY_FLAG_CTE = """
@@ -154,7 +143,7 @@ ORDER BY flag, d
 
 @query("signal_permutation_entropy", oracle=_PERM_ENTROPY_ORACLE)
 def signal_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily_by_flag(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     w = Window.partitionBy("flag").orderBy("d")
     pat = daily.select(
         "flag",
@@ -348,7 +337,7 @@ ORDER BY flag, d
 
 @query("signal_fci_weighted", oracle=_FCI_ORACLE)
 def signal_fci_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily_by_flag(spark, sf_dir)
+    daily = daily_revenue(load_table(spark, sf_dir, "lineitem"))
     w12 = Window.partitionBy("flag").orderBy("d").rowsBetween(-11, 0)
     arr = daily.select(
         "flag",

@@ -530,19 +530,23 @@ def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("dedup_simhash", oracle=_SIMHASH_ORACLE)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sim = _simhash_df(spark, sf_dir)
     # LSH bands: 4 x 8 bits; hamming <= 3 over 4 bands guarantees one
     # band is identical (pigeonhole), so the band join loses nothing.
+    return _simhash_band_pairs(
+        _simhash_df(spark, sf_dir),
+        "transform(sequence(0, 3), i ->"
+        " struct(i as band_id,"
+        " shiftright(simhash, i * 8) & 255 as band_val))",
+    )
+
+
+def _simhash_band_pairs(sim: DataFrame, bands: str) -> DataFrame:
+    """(doc_a, doc_b, hamming) for every doc pair within _HAMMING_MAX
+    bits: self-join ``sim`` (doc_id, simhash) on the (band_id,
+    band_val) structs the SQL array expression ``bands`` explodes, then
+    verify each distinct candidate's exact hamming distance."""
     banded = sim.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, 3), i ->"
-                " struct(i as band_id,"
-                " shiftright(simhash, i * 8) & 255 as band_val))"
-            )
-        ).alias("band"),
+        "doc_id", "simhash", F.explode(F.expr(bands)).alias("band")
     ).select(
         "doc_id", "simhash", "band.band_id", "band.band_val"
     ).cache()  # tiny (4 rows/doc); self-joined below — fold hashes once
@@ -713,40 +717,8 @@ def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^-16 band specificity bounds junk candidates past the 32-bit
     tier's ~1M-doc saturation (module header; golden-pinned against a
     pure-Python reference in tests/test_kernel_golden.py)."""
-    sim = _simhash64_df(spark, sf_dir)
-    banded = sim.select(
-        "doc_id",
-        "simhash",
-        F.explode(F.expr(SIMHASH64_BANDS)).alias("band"),
-    ).select(
-        "doc_id", "simhash", "band.band_id", "band.band_val"
-    ).cache()  # tiny (4 rows/doc); self-joined below — fold hashes once
-    cand = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn(
-            "hamming",
-            F.bit_count(
-                F.col("sim_a").bitwiseXOR(F.col("sim_b"))
-            ).cast("long"),
-        )
-        .where(F.col("hamming") <= _HAMMING_MAX)
-        .select("doc_a", "doc_b", "hamming")
-        .orderBy("doc_a", "doc_b")
+    return _simhash_band_pairs(
+        _simhash64_df(spark, sf_dir), SIMHASH64_BANDS
     )
 
 

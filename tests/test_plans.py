@@ -457,39 +457,6 @@ def test_connected_components_paths_agree(spark, monkeypatch):
     assert (2, 1) in fast and (41, 39) in fast and (27, 20) in fast
 
 
-def test_hierarchy_rounds_release_superseded_caches(spark):
-    """Pointer doubling persists each round (the round SELF-joins its
-    frame); superseded rounds must be freed as soon as the successor is
-    materialized — at most ONE new persistent RDD (the final pointer
-    table) may remain, same discipline as connected_components."""
-    from economic_data_project_spark.operators.hierarchy import (
-        resolve_hierarchy,
-    )
-
-    linked = spark.createDataFrame(
-        [(1, None, "u"), (2, 1, "u"), (3, 2, "u"), (4, 3, "u"),
-         (5, 4, "u"), (10, None, "v")],
-        "event_id long, parent_id long, user_id string",
-    )
-    before = set(
-        spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    )
-    rows = {
-        r.event_id: (r.root_id, r.depth)
-        for r in resolve_hierarchy(linked).collect()
-    }
-    assert rows == {
-        1: (1, 0), 2: (1, 1), 3: (1, 2), 4: (1, 3), 5: (1, 4),
-        10: (10, 0),
-    }
-    after = set(
-        spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    )
-    assert len(after - before) <= 1, (
-        "pointer-doubling left superseded rounds cached"
-    )
-
-
 def test_schema_tests_single_scan_rowlevel(spark):
     """All row-level column tests for one table compile into ONE
     aggregate pass: the orders scan appears once for the row-level
@@ -887,9 +854,7 @@ def test_thread_structure_plan_is_truncated(spark):
     rounds, no localCheckpoint, no self-join. The gate pins the new
     (strictly stronger) shape: exactly one parquet scan, no
     checkpointed LogicalRDD leaf, and at most three exchanges (window
-    partition, group-by, output sort). The generic pointer-doubling
-    resolver keeps its own coverage (tests/test_hierarchy.py and
-    test_hierarchy_rounds_release_superseded_caches above)."""
+    partition, group-by, output sort)."""
     df = all_queries()["thread_structure"](spark, SF_DIR)
     phys = _plan(df).split("== Physical Plan ==", 1)[1]
     assert phys.count("Scan parquet") == 1, phys.count("Scan parquet")

@@ -19,9 +19,6 @@ import importlib.util
 import os
 import re
 import sys
-import threading
-import time
-from concurrent.futures import ThreadPoolExecutor
 
 # stderr-noise allowlist: incidents whose headline-or-body matches one
 # of these are the DOCUMENTED benign teardown signatures. Scoping
@@ -320,53 +317,16 @@ def _inner() -> int:
             return 1
 
     from economic_data_project_spark.session import get_spark  # noqa: E402
-    from tests.conftest import compare_with_oracle, duckdb_connect  # noqa: E402
+    from tools.oracle_sweep import sweep  # noqa: E402
 
     spark = get_spark(app_name="driver-sim")
 
-    t0 = time.time()
     edf = mod.entry(spark)
     rows = edf.collect()
     print(f"entry(): {len(rows)} rows, schema={edf.schema.simpleString()[:120]}", flush=True)
 
-    queries = mod.queries()
-    oracles = mod.oracle_sql()
-    con = duckdb_connect(SF)
-    lock = threading.Lock()
-    results = {}
-
-
-    def run(name):
-        cur = con.cursor()
-        try:
-            if name in oracles:
-                ok, msg = compare_with_oracle(
-                    spark, queries[name], oracles[name], SF, con=cur
-                )
-            else:
-                n = queries[name](spark, SF).count()
-                ok, msg = n >= 0, f"rows-only ({n} rows)"
-        except Exception as e:  # noqa: BLE001
-            ok, msg = False, f"EXC {type(e).__name__}: {e}"
-        with lock:
-            results[name] = (ok, msg)
-            tag = "MATCH" if (ok and name in oracles) else (
-                "ROWS" if ok else "FAIL"
-            )
-            print(f"[{len(results):3}/{len(queries)}] {tag:5} {name}: {msg}"[:200], flush=True)
-
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        list(ex.map(run, sorted(queries)))
-
-    n_fail = sum(1 for ok, _ in results.values() if not ok)
-    n_match = sum(1 for n, (ok, _) in results.items() if ok and n in oracles)
-    n_rows = sum(1 for n, (ok, _) in results.items() if ok and n not in oracles)
-    print(
-        f"\nTOTAL {len(results)} queries: {n_match} MATCH, {n_rows} rows-only,"
-        f" {n_fail} FAIL in {time.time()-t0:.0f}s"
-    )
-    return 1 if n_fail else 0
+    tags = sweep(spark, mod.queries(), mod.oracle_sql(), SF)
+    return 1 if "FAIL" in tags.values() else 0
 
 
 if __name__ == "__main__":

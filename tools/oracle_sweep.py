@@ -27,6 +27,7 @@ import os
 import sys
 import threading
 import time
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -66,110 +67,99 @@ def _subsample(n_docs: int, src: str) -> str:
     return out
 
 
-def main_quadratic() -> None:
-    n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 1500
-    src = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
-    sf = _subsample(n_docs, src)
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(_ROOT, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+def sweep(spark, queries: dict, oracles: dict, sf: str) -> dict[str, str]:
+    """Run ``queries`` at ``sf`` on two threads and return {name: tag}.
 
-    from economic_data_project_spark.session import get_spark
+    An oracle-backed query is compared with its DuckDB oracle (MATCH or
+    FAIL); any other is checked by a row count (ROWS). An exception
+    tags the query FAIL and the sweep goes on. Prints one tag line per
+    query as it finishes, then a TOTAL line."""
     from tests.conftest import compare_with_oracle, duckdb_connect
 
-    spark = get_spark(app_name="oracle-sweep-quadratic")
-    queries, oracles = mod.queries(), mod.oracle_sql()
-    con = duckdb_connect(sf)
-    fails = 0
-    t00 = time.time()
-    for name in sorted(QUADRATIC_ORACLES):
-        t0 = time.time()
-        try:
-            ok, msg = compare_with_oracle(
-                spark, queries[name], oracles[name], sf, con=con.cursor()
-            )
-        except Exception as e:  # noqa: BLE001 — sweep must finish
-            ok, msg = False, f"EXC {type(e).__name__}: {e}"
-        fails += not ok
-        print(
-            f"{'MATCH' if ok else 'FAIL':5} {name}: {msg}"
-            f" ({time.time() - t0:.0f}s)",
-            flush=True,
-        )
-    print(
-        f"TOTAL quadratic-oracle family at {n_docs} docs:"
-        f" {len(QUADRATIC_ORACLES) - fails}/{len(QUADRATIC_ORACLES)}"
-        f" MATCH in {time.time() - t00:.0f}s"
-    )
-    sys.exit(1 if fails else 0)
-
-
-def main() -> None:
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(_ROOT, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    from economic_data_project_spark.session import get_spark
-    from tests.conftest import compare_with_oracle, duckdb_connect
-
-    spark = get_spark(app_name="oracle-sweep")
     t0 = time.time()
-    queries = {
-        k: v for k, v in mod.queries().items()
-        if k not in QUADRATIC_ORACLES
-    }
-    oracles = {
-        k: v for k, v in mod.oracle_sql().items()
-        if k not in QUADRATIC_ORACLES
-    }
     con = duckdb_connect(sf)
     lock = threading.Lock()
-    results: dict[str, tuple[bool, str]] = {}
+    tags: dict[str, str] = {}
 
     def run(name: str) -> None:
-        cur = con.cursor()
         try:
             if name in oracles:
                 ok, msg = compare_with_oracle(
-                    spark, queries[name], oracles[name], sf, con=cur
+                    spark, queries[name], oracles[name], sf,
+                    con=con.cursor(),
                 )
             else:
                 n = queries[name](spark, sf).count()
                 ok, msg = n >= 0, f"rows-only ({n} rows)"
         except Exception as e:  # noqa: BLE001 — sweep must finish
             ok, msg = False, f"EXC {type(e).__name__}: {e}"
+        tag = ("MATCH" if name in oracles else "ROWS") if ok else "FAIL"
         with lock:
-            results[name] = (ok, msg)
-            tag = "MATCH" if (ok and name in oracles) else (
-                "ROWS" if ok else "FAIL"
-            )
+            tags[name] = tag
             print(
-                f"[{len(results):3}/{len(queries)}] {tag:5} {name}:"
+                f"[{len(tags):3}/{len(queries)}] {tag:5} {name}:"
                 f" {msg}"[:200],
                 flush=True,
             )
 
     with ThreadPoolExecutor(max_workers=2) as ex:
         list(ex.map(run, sorted(queries)))
-
-    n_fail = sum(1 for ok, _ in results.values() if not ok)
-    n_match = sum(
-        1 for n, (ok, _) in results.items() if ok and n in oracles
-    )
-    n_rows = sum(
-        1 for n, (ok, _) in results.items() if ok and n not in oracles
-    )
+    n = Counter(tags.values())
     print(
-        f"\nTOTAL {len(results)} queries: {n_match} MATCH,"
-        f" {n_rows} rows-only, {n_fail} FAIL in {time.time()-t0:.0f}s"
-        f" (skipped {len(QUADRATIC_ORACLES)} quadratic oracles)"
+        f"\nTOTAL {len(tags)} queries: {n['MATCH']} MATCH,"
+        f" {n['ROWS']} rows-only, {n['FAIL']} FAIL in"
+        f" {time.time() - t0:.0f}s",
+        flush=True,
     )
-    sys.exit(1 if n_fail else 0)
+    return tags
+
+
+def _load_entry():
+    spec = importlib.util.spec_from_file_location(
+        "__spark_entry__", os.path.join(_ROOT, "__spark_entry__.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def main_quadratic() -> None:
+    n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 1500
+    src = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
+    sf = _subsample(n_docs, src)
+    mod = _load_entry()
+
+    from economic_data_project_spark.session import get_spark
+
+    spark = get_spark(app_name="oracle-sweep-quadratic")
+    print(f"quadratic-oracle family at {n_docs} docs ({sf})", flush=True)
+    tags = sweep(
+        spark,
+        {k: v for k, v in mod.queries().items() if k in QUADRATIC_ORACLES},
+        mod.oracle_sql(),
+        sf,
+    )
+    sys.exit(1 if "FAIL" in tags.values() else 0)
+
+
+def main() -> None:
+    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    mod = _load_entry()
+
+    from economic_data_project_spark.session import get_spark
+
+    spark = get_spark(app_name="oracle-sweep")
+    tags = sweep(
+        spark,
+        {
+            k: v for k, v in mod.queries().items()
+            if k not in QUADRATIC_ORACLES
+        },
+        mod.oracle_sql(),
+        sf,
+    )
+    print(f"(skipped {len(QUADRATIC_ORACLES)} quadratic oracles)")
+    sys.exit(1 if "FAIL" in tags.values() else 0)
 
 
 if __name__ == "__main__":

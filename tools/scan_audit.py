@@ -16,8 +16,8 @@ re-rendered 24x in the manifest plan — and executed-AQE cached children
 reset indentation, breaking line-based IMR scoping), formatted-explain
 node ids for the wide-column count, and a per-builder job group for
 construction jobs. Builders run exactly as in production: they return
-lazy plans, so only the documented probes, fits and iterative builders
-(hierarchy, connected components — their localCheckpoint truncation is
+lazy plans, so only the documented probes, fits and the one iterative
+builder (connected components — its localCheckpoint truncation is
 load-bearing) run jobs at construction.
 """
 
