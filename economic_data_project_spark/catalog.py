@@ -39,32 +39,112 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Inferred-schema cache, keyed by (resolved table path, dir mtime).
-# Without it every ``spark.read.parquet`` call runs a footer-read
-# schema-inference job — one tiny Spark job per table reference per
-# builder, hundreds across a registry sweep, and noise that would drown
-# the "builders run no jobs at construction" gate (tests/test_plans.py).
-# The mtime component is the invalidation: load_table also serves
-# GENERATED corpora (the bench longdoc lane, test fixtures writing
-# documents.parquet to scratch dirs), and a path rewritten in-process
-# with a different schema must re-infer — reading with a stale explicit
-# schema silently drops new columns and nulls renamed ones instead of
-# erroring. A parquet dir's mtime changes whenever files are added or
-# replaced, so a rewrite gets a fresh key; the stat is driver-side and
-# far cheaper than the inference job it replaces.
-# FLAT-LAYOUT ASSUMPTION (ADVICE r11 #3): the mtime watches the table
-# path itself, so a rewrite that only replaces files inside PARTITION
-# SUBDIRECTORIES (leaving the parent dir untouched) would serve a stale
-# schema. Every current writer — Spark overwrite (recreates the dir),
-# single-file pandas/duckdb to_parquet — bumps the watched path; a
-# partitioned-layout writer must touch the table dir (or clear this
-# cache) on schema change. One schema per path is live at a time: the
-# insert evicts the previous (mtime, schema) entry for the same path,
-# so repeated scratch-dir rewrites cannot grow the cache unboundedly.
+# The one parquet reader: every catalog and warehouse table read goes
+# through ``read_parquet``. A plain ``spark.read.parquet`` of a path
+# runs a one-task schema-inference job (Spark reads a footer on an
+# executor and converts it) before any query runs: one tiny job per
+# table reference per builder, hundreds across a registry sweep, about
+# 0.1 s each even warm, and noise that would drown the "builders run no
+# jobs at construction" gate (tests/test_plans.py). The reader reads
+# with ``spark.read.schema(s)`` instead, where ``s`` is always a schema
+# Spark itself inferred earlier in this process, at two levels:
+#
+# 1. Path memo, keyed by (resolved path, mtime): a re-read of an
+#    unchanged path. The mtime component is the invalidation: load_table
+#    also serves GENERATED corpora (the bench longdoc lane, test
+#    fixtures writing documents.parquet to scratch dirs) and the
+#    warehouse rewrites its tables, and a path rewritten in-process with
+#    a different schema must re-infer — reading with a stale explicit
+#    schema silently drops new columns and nulls renamed ones instead of
+#    erroring. A parquet dir's mtime changes whenever files are added or
+#    replaced (any Spark write creates and removes ``_temporary`` in
+#    it). One schema per path is live at a time: the insert evicts the
+#    previous entry for the same path, so repeated scratch-dir rewrites
+#    cannot grow the memo unboundedly.
+#    FLAT-LAYOUT ASSUMPTION (ADVICE r11 #3): the mtime watches the table
+#    path itself, so a non-Spark rewrite that only replaces files inside
+#    PARTITION SUBDIRECTORIES (leaving the parent dir untouched) would
+#    serve a stale schema from this memo; such a writer must touch the
+#    table dir on schema change.
+# 2. Footer key: a path the memo misses (new, or rewritten) whose data
+#    files carry a footer the process has already resolved. The key is
+#    computed on the driver with pyarrow from exactly the inputs of
+#    Spark 4.1's inference (ParquetFileFormat.mergeSchemasInParallel):
+#    the parquet message type and the Spark row-metadata value of the
+#    data files (names not starting with ``_`` or ``.``, all of which
+#    must agree), plus every session conf the conversion reads
+#    (``_INFERENCE_CONFS``). Equal keys mean Spark's inference would
+#    return the same schema, so the cached one is served and no job
+#    runs. The key is None, and Spark infers as a plain read does, when
+#    the table has subdirectories (partitioned, or a streaming sink's
+#    ``_spark_metadata``), carries ``_metadata``/``_common_metadata``
+#    summary files, has more files than Spark's own driver-listing
+#    cutoff (``parallelPartitionDiscovery.threshold``), has a footer
+#    pyarrow cannot read or a type annotation it does not know, or
+#    when its part files disagree. Entries hold one StructType per
+#    distinct (footer, conf) seen, so the dict stays as small as the
+#    set of schemas the process reads.
 _SCHEMA_CACHE: dict[str, tuple[int, object]] = {}
+_FOOTER_SCHEMAS: dict[tuple, object] = {}
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+# The session confs Spark 4.1.2's parquet schema inference reads: the
+# five converter flags mergeSchemasInParallel passes, plus the two that
+# decide which footers it reads and how their fields are matched.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+)
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
-def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
+def _footer_key(spark: SparkSession, real: str) -> tuple | None:
+    """What Spark's schema inference of ``real`` depends on, or None
+    when it depends on more than this key can see (see above)."""
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(real):
+        entries = list(os.scandir(real))
+        if any(
+            e.is_dir() or e.name in ("_metadata", "_common_metadata")
+            for e in entries
+        ):
+            return None
+        files = [
+            e.path for e in entries if not e.name.startswith(("_", "."))
+        ]
+    else:
+        files = [real]
+    if not files or len(files) > int(spark.conf.get(_LISTING_THRESHOLD)):
+        return None
+    footers = set()
+    for f in files:
+        try:
+            md = pq.read_metadata(f)
+        except Exception:  # noqa: BLE001 — let Spark raise or infer
+            return None
+        # str() opens with the Python object's address: drop that line
+        message = str(md.schema).split("\n", 1)[1]
+        if "(Undefined)" in message:
+            return None
+        footers.add((message, (md.metadata or {}).get(_SPARK_ROW_METADATA)))
+    if len(footers) != 1:
+        return None
+    return (
+        footers.pop(),
+        tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
+    )
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job
+    whenever this process already knows the schema Spark would infer
+    (the path memo, then the footer key; see above)."""
     real = os.path.realpath(path)
     try:
         mtime = os.stat(real).st_mtime_ns
@@ -72,11 +152,19 @@ def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
         # missing path: let spark.read raise its own (clearer) error
         return spark.read.parquet(path)
     hit = _SCHEMA_CACHE.get(real)
-    if hit is None or hit[0] != mtime:
+    if hit is not None and hit[0] == mtime:
+        return spark.read.schema(hit[1]).parquet(path)
+    key = _footer_key(spark, real)
+    schema = _FOOTER_SCHEMAS.get(key)  # None is never a stored key
+    if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[real] = (mtime, df.schema)
-        return df
-    return spark.read.schema(hit[1]).parquet(path)
+        schema = df.schema
+        if key is not None:
+            _FOOTER_SCHEMAS[key] = schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
+    _SCHEMA_CACHE[real] = (mtime, schema)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -84,7 +172,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
         return _load_events(spark, sf_dir)
-    return _read_parquet_cached(spark, table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
@@ -174,7 +262,7 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     readers honor it at scan time."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return normalize_ts(
-        _read_parquet_cached(spark, table_path(sf_dir, "events"))
+        read_parquet(spark, table_path(sf_dir, "events"))
     )
 
 

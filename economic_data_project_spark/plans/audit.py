@@ -144,11 +144,11 @@ def registry_audit(
     # so a repeated audit in one session must not count the previous
     # sweep's jobs as this sweep's build_jobs
     salt = next(_AUDIT_SEQ)
-    # prime the catalog schema cache OUTSIDE any job group: the first
-    # read of each table runs one footer-read schema-inference job,
-    # which must not be attributed to whichever builder touches the
-    # table first (build_jobs measures builder ACTIONS, not catalog
-    # warm-up).
+    # prime the catalog reader OUTSIDE any job group: the first read of
+    # a table whose footer the process has not resolved yet runs one
+    # schema-inference job (catalog.read_parquet), which must not be
+    # attributed to whichever builder touches the table first
+    # (build_jobs measures builder ACTIONS, not catalog warm-up).
     load_tables(spark, sf_dir)
     out: dict[str, dict] = {}
     for name in sorted(qs):

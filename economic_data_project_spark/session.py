@@ -19,14 +19,11 @@ is the engine, so session-level tuning is where warehouse defaults live:
   one pass of perfbench's analyst mix, 996 for the 42 bench headline
   rows, about 3,300 for one pass over all 173 registry queries. At 100
   entries a warm session cycling over even the analyst mix missed ~90
-  times per pass; at 4096 it compiles ~4 classes per pass.
+  times per pass; at 4096 a warm pass compiles none.
   The setting is static: ``CodeGenerator`` builds its cache once per JVM
   from the conf active at the first codegen, so ``tune_session`` cannot
   apply it and an externally created session (the correctness driver's)
   keeps 100.
-  Known residual: ``Warehouse.incremental_upsert`` bakes each new
-  watermark into the generated code as a literal, so every upsert
-  compiles about 4 fresh classes by design.
 """
 
 from __future__ import annotations

@@ -35,6 +35,8 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import read_parquet
+
 
 class QueryValidationError(ValueError):
     pass
@@ -239,7 +241,7 @@ class Warehouse:
         return os.path.exists(self._recover(name))
 
     def table(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._recover(name))
+        return read_parquet(self.spark, self._recover(name))
 
     def register_views(self, *names: str) -> None:
         for n in names:
@@ -286,11 +288,21 @@ class Warehouse:
         """
         if not key_columns:
             raise QueryValidationError("upsert requires key columns")
-        path = self._recover(name)
-        if not os.path.exists(path):
+        if not self.exists(name):
             self.write_table(df, name, partition_by)
             return
-        target = self.table(name)
+        self._merge(df, self.table(name), name, key_columns, partition_by)
+
+    def _merge(
+        self,
+        df: DataFrame,
+        target: DataFrame,
+        name: str,
+        key_columns: list[str],
+        partition_by: list[str] | None = None,
+    ) -> None:
+        """The MERGE of ``df`` into the existing table ``name``, whose
+        current contents the caller has read as ``target``."""
         missing = [c for c in df.columns if c not in target.columns]
         if missing:
             raise QueryValidationError(
@@ -306,6 +318,7 @@ class Warehouse:
         # does under the hood with its log).
         import shutil
 
+        path = self.table_path(name)
         tmp = path + "__staging"
         w = merged.write.mode("overwrite")
         if partition_by:
@@ -394,14 +407,6 @@ class Warehouse:
 
     # ----------------------------------------------- incremental pattern
 
-    def high_watermark(self, name: str, column: str):
-        """MAX(column) of the target, or None if the table is absent —
-        the is_incremental() scan-window guard (SURVEY.md §2.1)."""
-        if not self.exists(name):
-            return None
-        row = self.table(name).agg(F.max(column).alias("hw")).collect()[0]
-        return row.hw
-
     def incremental_upsert(
         self,
         source: DataFrame,
@@ -411,47 +416,78 @@ class Warehouse:
         grace=None,
     ) -> None:
         """Filter source to rows newer than MAX(watermark) - grace, then
-        MERGE (agent_treasury_yield_curve_spreads.sql:26-31 shape).
+        MERGE (agent_treasury_yield_curve_spreads.sql:26-31 shape). The
+        MAX(watermark) guard is the is_incremental() scan window
+        (SURVEY.md §2.1); a target whose watermark is all NULL keeps
+        every source row, and an absent target is a plain write.
+
+        The watermark is never collected: the target's one-row MAX is
+        broadcast and cross-joined into the source, so the filter runs
+        inside the merge plan. A collected value would reach generated
+        code as a literal, and every upsert (each with a newer
+        watermark) would compile fresh classes.
 
         ``grace=None`` means strictly-newer rows only. For date/timestamp
         watermarks, ``grace`` may be a ``timedelta``, an int day count
-        (both applied driver-side to the collected watermark scalar, so
-        no engine-specific interval arithmetic is involved), or a Column
-        interval expression (e.g. ``F.expr("INTERVAL 2 DAYS")``); for
-        numeric watermarks it must be a number.
+        (both become an interval literal), or a Column interval
+        expression (e.g. ``F.expr("INTERVAL 2 DAYS")``); for numeric
+        watermarks it must be a number or a Column.
         """
-        hw = self.high_watermark(name, watermark_column)
-        if hw is not None:
-            source = source.where(
-                F.col(watermark_column) > F.lit(hw)
-                if grace is None
-                else F.col(watermark_column) >= self._grace_cutoff(hw, grace)
+        if not key_columns:
+            raise QueryValidationError("upsert requires key columns")
+        if not self.exists(name):
+            self.write_table(source, name)
+            return
+        target = self.table(name)
+        wm, hw = F.col(watermark_column), F.col("__hw")
+        newer = (
+            wm > hw
+            if grace is None
+            else wm >= self._grace_cutoff(
+                hw, grace, target.schema[watermark_column].dataType
             )
-        self.upsert(source, name, key_columns)
+        )
+        high = target.agg(F.max(watermark_column).alias("__hw"))
+        source = (
+            source.crossJoin(F.broadcast(high))
+            .where(hw.isNull() | newer)
+            .drop("__hw")
+        )
+        self._merge(source, target, name, key_columns)
 
     @staticmethod
-    def _grace_cutoff(hw, grace):
+    def _grace_cutoff(hw, grace, dtype):
+        """``hw - grace`` for a watermark column of type ``dtype``."""
         from datetime import timedelta
 
         from pyspark.sql import Column
+        from pyspark.sql.types import (
+            DateType,
+            NumericType,
+            TimestampNTZType,
+            TimestampType,
+        )
 
         if isinstance(grace, Column):  # interval expression
-            return F.lit(hw) - grace
-        if isinstance(hw, (date, datetime)):
+            return hw - grace
+        number = isinstance(grace, (int, float)) and not isinstance(
+            grace, bool
+        )
+        if isinstance(dtype, (DateType, TimestampType, TimestampNTZType)):
+            if number and isinstance(grace, int):
+                grace = timedelta(days=grace)
             if isinstance(grace, timedelta):
-                return F.lit(hw - grace)
-            if isinstance(grace, int) and not isinstance(grace, bool):
-                return F.lit(hw - timedelta(days=grace))
+                return hw - F.lit(grace)
             raise QueryValidationError(
                 "grace for a date/timestamp watermark must be a"
                 f" timedelta, int days, or interval Column; got"
                 f" {type(grace)!r}"
             )
-        if isinstance(grace, (int, float)) and not isinstance(grace, bool):
-            return F.lit(hw - grace)
+        if number and isinstance(dtype, NumericType):
+            return hw - F.lit(grace)
         raise QueryValidationError(
-            f"unsupported grace {type(grace)!r} for watermark value"
-            f" {type(hw)!r}"
+            f"unsupported grace {type(grace)!r} for watermark type"
+            f" {dtype.simpleString()}"
         )
 
 
@@ -479,8 +515,9 @@ class DeltaWarehouse(Warehouse):
     """Warehouse over Delta tables: physical MERGE INTO + time travel.
 
     Requires delta-spark; constructing it without raises ImportError.
-    Only ``upsert`` and ``table`` differ from the parquet base — the
-    query gate, binder, sampling, and incremental logic are shared.
+    Only the merge step, writes and ``table`` differ from the parquet
+    base — the query gate, binder, sampling, and incremental logic are
+    shared.
     """
 
     def __init__(self, spark: SparkSession, base_dir: str):
@@ -499,25 +536,20 @@ class DeltaWarehouse(Warehouse):
             w = w.partitionBy(*partition_by)
         w.save(self.table_path(name))
 
-    def upsert(
+    def _merge(
         self,
         df: DataFrame,
+        target: DataFrame,
         name: str,
         key_columns: list[str],
         partition_by: list[str] | None = None,
     ) -> None:
-        if not key_columns:
-            raise QueryValidationError("upsert requires key columns")
-        path = self.table_path(name)
-        if not os.path.exists(path):
-            self.write_table(df, name, partition_by)
-            return
         from delta.tables import DeltaTable
 
-        target = DeltaTable.forPath(self.spark, path)
         cond = " AND ".join(f"t.{k} <=> s.{k}" for k in key_columns)
         (
-            target.alias("t")
+            DeltaTable.forPath(self.spark, self.table_path(name))
+            .alias("t")
             .merge(df.alias("s"), cond)
             .whenMatchedUpdateAll()
             .whenNotMatchedInsertAll()

@@ -28,14 +28,16 @@ from pyspark.sql import functions as F
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (schema pinned from a
-    batch read — streaming sources never infer; glob path because the
-    file source wants a directory/pattern). Timestamp normalization is
-    the SAME ``catalog.normalize_ts`` the batch catalog applies, so the
+    batch read through the catalog reader, which runs no inference job
+    once the process has seen the events footer — streaming sources
+    never infer; glob path because the file source wants a
+    directory/pattern). Timestamp normalization is the SAME
+    ``catalog.normalize_ts`` the batch catalog applies, so the
     batch≡stream equality tests compare identical wall clocks."""
-    from ..catalog import normalize_ts
+    from ..catalog import normalize_ts, read_parquet
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     stream = (
         spark.readStream.schema(raw_schema)
         .format("parquet")

@@ -15,7 +15,10 @@ from pyspark.sql import functions as F
 
 from economic_data_project_spark.catalog import load_table
 from economic_data_project_spark.registry import all_queries
-from economic_data_project_spark.sources.warehouse import add_safety_limit
+from economic_data_project_spark.sources.warehouse import (
+    Warehouse,
+    add_safety_limit,
+)
 
 from .conftest import SF_DIR
 
@@ -989,11 +992,11 @@ def test_registry_builders_run_no_jobs_at_construction(
     """Constructing a registered query, exactly as production does,
     must run ZERO Spark jobs unless the builder is in the documented
     exempt set above — builders return lazy plans whose caches fill on
-    first action, catalog schema inference is cached
-    (catalog._SCHEMA_CACHE) and primed by the sweep, so any job left
-    is an eager probe (`.count()`, `.head()`, an eager cache fill)
-    hiding in a builder. Membership, not counts: iteration and
-    fit job counts vary with data scale."""
+    first action, the catalog reader (catalog.read_parquet) runs no
+    inference job for a footer it has resolved and is primed by the
+    sweep, so any job left is an eager probe (`.count()`, `.head()`,
+    an eager cache fill) hiding in a builder. Membership, not counts:
+    iteration and fit job counts vary with data scale."""
     offenders = {
         name: a["build_jobs"]
         for name, a in registry_plan_audit.items()
@@ -1060,19 +1063,28 @@ _WARM_READS = [
 ]
 
 
-def test_warm_repeat_compiles_nothing(spark):
+def test_warm_repeat_compiles_nothing(spark, tmp_path):
     """A warm session that repeats requests it already served reuses
     every generated class. The analyst reads plus one NL->SQL question,
-    collected capped at 1000 rows, run twice: the second round compiles
+    collected capped at 1000 rows, and one incremental upsert of a fresh
+    batch into a warehouse table, run twice: the second round compiles
     nothing. With Spark's default 100-entry generated-code cache the
     first round's classes evict each other and the second round
     recompiles them (session.CODEGEN_CACHE_ENTRIES; about 55 of the
-    first round's 96 compiles recur at a cap of 100).
+    first round's 96 compiles recur at a cap of 100). Each upsert
+    carries a newer watermark than the last, so the merge plan must not
+    bake the target's watermark into generated code as a literal.
 
     Each round starts with the data caches freed, as bench.py does: a
     round reading caches the previous one filled plans differently
     (materialized cache sizes change join choices), which is new code,
     not a cache miss."""
+    import os
+    from datetime import datetime, timedelta
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from economic_data_project_spark.caches import free_session_caches
     from economic_data_project_spark.catalog import register_views
     from economic_data_project_spark.session import (
@@ -1089,8 +1101,22 @@ def test_warm_repeat_compiles_nothing(spark):
     )
     register_views(spark, SF_DIR)
     queries = all_queries()
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    stamp = datetime(2024, 1, 1)
 
-    def one_round():
+    def batch(keys):
+        nonlocal stamp
+        stamp += timedelta(days=1)
+        return pa.table({
+            "c_custkey": pa.array(keys, pa.int64()),
+            "revenue": pa.array([float(k) for k in keys]),
+            "updated_at": pa.array([stamp] * len(keys), pa.timestamp("us")),
+        })
+
+    os.makedirs(wh.table_path("mart"))
+    pq.write_table(batch(range(20)), wh.table_path("mart") + "/part-0.parquet")
+
+    def one_round(r):
         free_session_caches()
         for name in _WARM_READS:
             queries[name](spark, SF_DIR).limit(1000).collect()
@@ -1101,8 +1127,15 @@ def test_warm_repeat_compiles_nothing(spark):
             template_generator,
             1000,
         ).collect()
+        path = str(tmp_path / f"batch{r}.parquet")
+        pq.write_table(batch([r, 2 * r, 100 + r]), path)
+        wh.incremental_upsert(
+            spark.read.parquet(path), "mart", ["c_custkey"], "updated_at"
+        )
+        wh.register_views("mart")
 
-    one_round()
+    one_round(1)
     before = codegen_compiles(spark)
-    one_round()
+    one_round(2)
     assert codegen_compiles(spark) - before == 0
+    assert spark.table("mart").count() == 22

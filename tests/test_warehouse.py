@@ -144,6 +144,125 @@ def test_incremental_upsert_watermark(spark, wh):
     assert rows == {1: 1.0, 2: 99.0, 3: 3.0}
 
 
+def _xs(wh, name="t"):
+    return {r.id: r.x for r in wh.table(name).collect()}
+
+
+def test_incremental_upsert_without_grace_is_strictly_newer(spark, wh):
+    """grace=None: a row AT the watermark is dropped; newer rows update
+    matched keys and insert new ones."""
+    wh.write_table(
+        spark.createDataFrame(
+            [(1, date(2020, 1, 1), 1.0), (2, date(2020, 1, 5), 2.0)],
+            ["id", "d", "x"],
+        ),
+        "t",
+    )
+    src = spark.createDataFrame(
+        [
+            (2, date(2020, 1, 5), 99.0),  # equal to the watermark
+            (1, date(2020, 1, 7), 11.0),  # newer, matched key
+            (3, date(2020, 1, 6), 3.0),  # newer, new key
+        ],
+        ["id", "d", "x"],
+    )
+    wh.incremental_upsert(src, "t", ["id"], "d")
+    assert _xs(wh) == {1: 11.0, 2: 2.0, 3: 3.0}
+
+
+def test_incremental_upsert_timedelta_grace_on_timestamp(spark, wh):
+    from datetime import datetime, timedelta
+
+    wh.write_table(
+        spark.createDataFrame(
+            [(1, datetime(2020, 1, 5, 12), 1.0)], ["id", "ts", "x"]
+        ),
+        "t",
+    )
+    src = spark.createDataFrame(
+        [
+            (1, datetime(2020, 1, 5, 7), 9.0),  # inside the 6 h grace
+            (2, datetime(2020, 1, 5, 5, 59), 2.0),  # before it
+            (3, datetime(2020, 1, 5, 6), 3.0),  # on the cutoff: kept
+        ],
+        ["id", "ts", "x"],
+    )
+    wh.incremental_upsert(src, "t", ["id"], "ts", timedelta(hours=6))
+    assert _xs(wh) == {1: 9.0, 3: 3.0}
+
+
+def test_incremental_upsert_int_day_grace_on_date(spark, wh):
+    wh.write_table(
+        spark.createDataFrame(
+            [(1, date(2020, 1, 10), 1.0)], ["id", "d", "x"]
+        ),
+        "t",
+    )
+    src = spark.createDataFrame(
+        [(2, date(2020, 1, 7), 2.0), (3, date(2020, 1, 6), 3.0)],
+        ["id", "d", "x"],
+    )
+    wh.incremental_upsert(src, "t", ["id"], "d", 3)
+    assert _xs(wh) == {1: 1.0, 2: 2.0}
+
+
+def test_incremental_upsert_numeric_grace(spark, wh):
+    wh.write_table(
+        spark.createDataFrame(
+            [(1, 100, 1.0), (2, 50, 2.0)], ["id", "w", "x"]
+        ),
+        "t",
+    )
+    src = spark.createDataFrame(
+        [(2, 98, 22.0), (3, 97, 3.0)], ["id", "w", "x"]
+    )
+    wh.incremental_upsert(src, "t", ["id"], "w", 2.5)  # cutoff 97.5
+    assert _xs(wh) == {1: 1.0, 2: 22.0}
+
+
+def test_incremental_upsert_rejects_bad_grace(spark, wh):
+    from datetime import timedelta
+
+    wh.write_table(
+        spark.createDataFrame(
+            [(1, date(2020, 1, 10), 7)], ["id", "d", "w"]
+        ),
+        "t",
+    )
+    src = spark.createDataFrame(
+        [(2, date(2020, 1, 11), 8)], ["id", "d", "w"]
+    )
+    with pytest.raises(QueryValidationError):
+        wh.incremental_upsert(src, "t", ["id"], "d", "2 days")
+    with pytest.raises(QueryValidationError):
+        wh.incremental_upsert(src, "t", ["id"], "w", timedelta(days=1))
+    assert [r.id for r in wh.table("t").collect()] == [1]
+
+
+def test_incremental_upsert_all_null_watermark_applies_all(spark, wh):
+    wh.write_table(
+        spark.createDataFrame(
+            [(1, None, 1.0)], "id long, d date, x double"
+        ),
+        "t",
+    )
+    src = spark.createDataFrame(
+        [(1, date(2019, 1, 1), 9.0), (2, date(2018, 1, 1), 2.0)],
+        ["id", "d", "x"],
+    )
+    wh.incremental_upsert(src, "t", ["id"], "d")
+    assert _xs(wh) == {1: 9.0, 2: 2.0}
+
+
+def test_incremental_upsert_absent_target_writes(spark, wh):
+    src = spark.createDataFrame(
+        [(1, date(2019, 1, 1), 1.0), (2, date(2018, 1, 1), 2.0)],
+        ["id", "d", "x"],
+    )
+    wh.incremental_upsert(src, "fresh", ["id"], "d", 3)
+    assert _xs(wh, "fresh") == {1: 1.0, 2: 2.0}
+
+
 def test_sampling(spark, wh):
     df = spark.range(100).select(
         F.col("id"), (F.col("id") * 2.0).alias("m")
