@@ -50,8 +50,10 @@ def table_path(sf_dir: str, name: str) -> str:
 # Spark itself inferred earlier in this process, at two levels:
 #
 # 1. Path memo, keyed by (resolved path, mtime): a re-read of an
-#    unchanged path. The mtime component is the invalidation: load_table
-#    also serves GENERATED corpora (the bench longdoc lane, test
+#    unchanged path, served only while the inference confs it was read
+#    under (``_INFERENCE_CONFS``) are unchanged. The mtime component is
+#    the invalidation for rewrites: load_table also serves GENERATED
+#    corpora (the bench longdoc lane, test
 #    fixtures writing documents.parquet to scratch dirs) and the
 #    warehouse rewrites its tables, and a path rewritten in-process with
 #    a different schema must re-infer — reading with a stale explicit
@@ -67,16 +69,21 @@ def table_path(sf_dir: str, name: str) -> str:
 #    serve a stale schema from this memo; such a writer must touch the
 #    table dir on schema change.
 # 2. Footer key: a path the memo misses (new, or rewritten) whose data
-#    files carry a footer the process has already resolved. The key is
+#    files carry a footer the process has already resolved. Most such
+#    reads are the re-read after a same-schema rewrite: an upsert's
+#    swap, a ModelGraph table model's next run, an overwrite. A daily
+#    three-model ModelGraph re-run over sf0.01 served 3 of its 7 reads
+#    here and ran 10 jobs instead of 13. The key is
 #    computed on the driver with pyarrow from exactly the inputs of
-#    Spark 4.1's inference (ParquetFileFormat.mergeSchemasInParallel):
+#    Spark 4.1.2's inference (ParquetFileFormat.mergeSchemasInParallel):
 #    the parquet message type and the Spark row-metadata value of the
 #    data files (names not starting with ``_`` or ``.``, all of which
 #    must agree), plus every session conf the conversion reads
 #    (``_INFERENCE_CONFS``). Equal keys mean Spark's inference would
 #    return the same schema, so the cached one is served and no job
 #    runs. The key is None, and Spark infers as a plain read does, when
-#    the table has subdirectories (partitioned, or a streaming sink's
+#    Spark is not the version those inputs were audited for, the
+#    table has subdirectories (partitioned, or a streaming sink's
 #    ``_spark_metadata``), carries ``_metadata``/``_common_metadata``
 #    summary files, has more files than Spark's own driver-listing
 #    cutoff (``parallelPartitionDiscovery.threshold``), has a footer
@@ -84,13 +91,16 @@ def table_path(sf_dir: str, name: str) -> str:
 #    when its part files disagree. Entries hold one StructType per
 #    distinct (footer, conf) seen, so the dict stays as small as the
 #    set of schemas the process reads.
-_SCHEMA_CACHE: dict[str, tuple[int, object]] = {}
+_SCHEMA_CACHE: dict[str, tuple[int, object, tuple]] = {}
 _FOOTER_SCHEMAS: dict[tuple, object] = {}
 
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
-# The session confs Spark 4.1.2's parquet schema inference reads: the
-# five converter flags mergeSchemasInParallel passes, plus the two that
-# decide which footers it reads and how their fields are matched.
+# The session confs Spark's parquet schema inference reads, as audited
+# for _AUDITED_SPARK: the five converter flags mergeSchemasInParallel
+# passes, plus the two that decide which footers it reads and how their
+# fields are matched. Another Spark version may read more, so under one
+# the footer key is None and Spark infers.
+_AUDITED_SPARK = "4.1.2"
 _INFERENCE_CONFS = (
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
@@ -103,11 +113,13 @@ _INFERENCE_CONFS = (
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
-def _footer_key(spark: SparkSession, real: str) -> tuple | None:
+def _footer_key(spark: SparkSession, real: str, confs: tuple) -> tuple | None:
     """What Spark's schema inference of ``real`` depends on, or None
     when it depends on more than this key can see (see above)."""
     import pyarrow.parquet as pq
 
+    if spark.version != _AUDITED_SPARK:
+        return None
     if os.path.isdir(real):
         entries = list(os.scandir(real))
         if any(
@@ -135,10 +147,7 @@ def _footer_key(spark: SparkSession, real: str) -> tuple | None:
         footers.add((message, (md.metadata or {}).get(_SPARK_ROW_METADATA)))
     if len(footers) != 1:
         return None
-    return (
-        footers.pop(),
-        tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
-    )
+    return footers.pop(), confs
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -151,10 +160,11 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     except OSError:
         # missing path: let spark.read raise its own (clearer) error
         return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
     hit = _SCHEMA_CACHE.get(real)
-    if hit is not None and hit[0] == mtime:
+    if hit is not None and (hit[0], hit[2]) == (mtime, confs):
         return spark.read.schema(hit[1]).parquet(path)
-    key = _footer_key(spark, real)
+    key = _footer_key(spark, real, confs)
     schema = _FOOTER_SCHEMAS.get(key)  # None is never a stored key
     if schema is None:
         df = spark.read.parquet(path)
@@ -163,7 +173,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
             _FOOTER_SCHEMAS[key] = schema
     else:
         df = spark.read.schema(schema).parquet(path)
-    _SCHEMA_CACHE[real] = (mtime, schema)
+    _SCHEMA_CACHE[real] = (mtime, schema, confs)
     return df
 
 

@@ -18,6 +18,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from economic_data_project_spark import catalog
 from economic_data_project_spark.catalog import read_parquet
 
 _GROUPS = itertools.count()
@@ -189,3 +190,38 @@ def test_binary_as_string_flip_reinfers(spark, tmp_path, conf):
     conf("spark.sql.parquet.binaryAsString", "true")
     df = _assert_infers(spark, _copy(a, tmp_path / "b.parquet"))
     assert df.schema["b"].dataType.simpleString() == "string"
+    # the same unchanged path after each flip: its path memo entry was
+    # read under the other value, so the footer key (resolved under
+    # both values by now) serves the schema Spark infers under this one
+    for value, want in (("true", "string"), ("false", "binary")):
+        conf("spark.sql.parquet.binaryAsString", value)
+        df = read_parquet(spark, a)
+        assert df.schema == spark.read.parquet(a).schema
+        assert df.schema["b"].dataType.simpleString() == want
+
+
+def test_other_spark_version_falls_back(spark, tmp_path, known, monkeypatch):
+    """The conf list was audited for one Spark version; under another,
+    a known footer still runs Spark's own inference."""
+    monkeypatch.setattr(catalog, "_AUDITED_SPARK", "0.0.0")
+    os.makedirs(tmp_path / "v")
+    shutil.copy(known, tmp_path / "v")
+    _assert_infers(spark, str(tmp_path / "v"))
+
+
+def test_reread_after_same_schema_rewrite_reads_free(spark, tmp_path):
+    """A rewrite changes the table dir's mtime, so the path memo misses;
+    the footer key serves the re-read of a table rewritten with the same
+    schema (an upsert's swap, a ModelGraph table model's next run)."""
+    from economic_data_project_spark.sources.warehouse import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.write_table(spark.range(3).withColumn("v", F.col("id") * 2), "t")
+    for lo in (2, 3):  # the first merge writes a new (nullable) footer
+        wh.upsert(
+            spark.range(lo, 5).withColumn("v", F.col("id") * lo), "t", ["id"]
+        )
+        df, jobs = _jobs(spark, lambda: wh.table("t"))
+    assert jobs == 0
+    assert df.schema == spark.read.parquet(wh.table_path("t")).schema
+    assert sorted(df.collect()) == [(0, 0), (1, 2), (2, 4), (3, 9), (4, 12)]
